@@ -298,8 +298,8 @@ class NhsPanelBuild:
 # warehouse_query_mix
 # ---------------------------------------------------------------------------
 
-WAREHOUSE_SF = 0.02       # 120k lineitem, 30k orders, 20k events
-CORPUS_DOCS = 600         # documents table for the llm queries
+WAREHOUSE_SF = 0.01       # 60k lineitem, 15k orders, 10k events
+CORPUS_DOCS = 300         # documents table for the llm queries
 CORPUS_EXACT_RATE, CORPUS_NEAR_RATE = 0.05, 0.10
 MIX = (
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
