@@ -62,26 +62,29 @@ def spark_conf(work: str) -> dict[str, str]:
     }
 
 
-def timed_phase(wl, spark, tracer, seconds: float) -> list:
-    """Run whole rounds until ``seconds`` of operation time (output checks
-    excluded) have passed; every round has at least three operations."""
+def timed_phase(wl, spark, tracer, clock, seconds: float):
+    """Run rounds until ``seconds`` of operation time (output checks
+    excluded) have passed. Returns the operations and the phase's CPU."""
     ops = []
+    before = clock.read()
     while sum(o.seconds for o in ops) < seconds:
-        ops.extend(wl.round(spark, tracer))
-    return ops
+        ops.extend(wl.round(spark, tracer, clock))
+    return ops, clock.read() - before
 
 
 def latency_stats(ops) -> dict[str, float]:
     secs = [o.seconds for o in ops]
     return {
         "p50": statistics.median(secs),
-        "p90": statistics.quantiles(secs, n=10, method="inclusive")[8],
+        "p90": (statistics.quantiles(secs, n=10, method="inclusive")[8]
+                if len(secs) > 1 else secs[0]),
         "per_s": len(secs) / sum(secs),
+        "cpu_s": statistics.median(o.cpu_s for o in ops),
         "n": len(secs),
     }
 
 
-def layer_metrics(wl, tracer, ops, cores, setup, codegen, untraced) -> dict:
+def layer_metrics(wl, tracer, ops, cores, setup, codegen, cpu, untraced) -> dict:
     """Per-layer numbers of the traced phase. Times and counts are means
     per operation (a build, or a query) unless the name says otherwise."""
     spans = tracer.spans
@@ -123,9 +126,6 @@ def layer_metrics(wl, tracer, ops, cores, setup, codegen, untraced) -> dict:
         "io.bytes_written": 0.0,
         "io.output_bytes_per_row": 0.0,
         "llm.exact_dedup.s": 0.0,
-        "llm.minhash_lsh_pairs.s": 0.0,
-        "llm.lsh.candidate_pairs": 0.0,
-        "llm.lsh.useful_ratio": 0.0,
         "spark.jobs": stage("jobs") / n_ops,
         "spark.tasks": stage("tasks") / n_ops,
         "spark.tasks_failed": stage("tasks_failed") / n_ops,
@@ -134,6 +134,8 @@ def layer_metrics(wl, tracer, ops, cores, setup, codegen, untraced) -> dict:
         "spark.spill_bytes": stage("spill_bytes") / n_ops,
         "spark.executor_cpu_s": cpu_s / n_ops,
         "spark.cpu_busy_ratio": cpu_s / (wall * cores),
+        "jvm.cpu_s": cpu.jvm_s / n_ops,
+        "host.steal_ratio": cpu.steal_s / (cpu.wall_s * os.cpu_count()),
         "trace.span_coverage": top / wall,
         "trace.overhead_op_s_p50": traced["p50"] - untraced["p50"],
     }
@@ -183,7 +185,7 @@ def main(argv=None) -> int:
 
 
 def run(args, workload_cls, get_spark) -> int:
-    from spans import JvmCounters, NullTracer, RssSampler, Tracer
+    from spans import CpuClock, JvmCounters, NullTracer, RssSampler, Tracer
 
     cores = configure_env(WORK)
     wl = workload_cls(WORK, args.seed)
@@ -196,19 +198,21 @@ def run(args, workload_cls, get_spark) -> int:
         wl.warmup(spark, NullTracer())
         setup = {"start_s": t1 - t0, "warmup_s": time.perf_counter() - t1}
         jvm = spark.sparkContext._jvm
-        rss = RssSampler(jvm.java.lang.ProcessHandle.current().pid())
+        jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
+        clock = CpuClock(jvm, jvm_pid)
+        rss = RssSampler(jvm_pid)
         rss.start()
-        ops = timed_phase(wl, spark, NullTracer(), args.seconds)
+        ops, phase_cpu = timed_phase(wl, spark, NullTracer(), clock, args.seconds)
         peak_rss = rss.stop()
         untraced = latency_stats(ops)
         if args.trace:
             counters = JvmCounters(jvm)
             c0 = counters.read()
             tracer = Tracer(spark.sparkContext)
-            t_ops = timed_phase(wl, spark, tracer, args.seconds)
+            t_ops, t_cpu = timed_phase(wl, spark, tracer, clock, args.seconds)
             c1 = counters.read()
             codegen = (c1[0] - c0[0], c1[1] - c0[1])
-            layers = layer_metrics(wl, tracer, t_ops, cores, setup, codegen, untraced)
+            layers = layer_metrics(wl, tracer, t_ops, cores, setup, codegen, t_cpu, untraced)
             os.makedirs(TRACE_DIR, exist_ok=True)
             tracer.write(os.path.join(TRACE_DIR, f"{wl.name}.jsonl"))
             ops = ops + t_ops
@@ -231,11 +235,13 @@ def run(args, workload_cls, get_spark) -> int:
         "inputs": wl.describe(),
         f"{wl.op_label}_s_p50": round(untraced["p50"], 4),
         f"{wl.op_label}_s_p90": round(untraced["p90"], 4),
-        f"{wl.op_label}s_per_s": round(untraced["per_s"], 4),
+        f"{wl.op_plural}_per_s": round(untraced["per_s"], 4),
         "samples": untraced["n"],
         "setup_s": round(setup_s, 4),
         "error_rate": n_failed / n_attempted,
         "jvm_peak_rss_mb": round(peak_rss, 1),
+        f"{wl.op_label}_cpu_s": round(untraced["cpu_s"], 4),
+        "host_steal_ratio": round(phase_cpu.steal_s / (phase_cpu.wall_s * os.cpu_count()), 3),
         **{k: round(v, 2) for k, v in wl.summary().items()},
     }
     print("perfbench summary: " + json.dumps(summary))
@@ -246,9 +252,7 @@ def run(args, workload_cls, get_spark) -> int:
     else:
         metrics = {
             "setup_s": {"value": setup_s, "unit": "s"},
-            "op_s_p50": {"value": untraced["p50"], "unit": "s"},
-            "op_s_p90": {"value": untraced["p90"], "unit": "s"},
-            "ops_per_s": {"value": untraced["per_s"], "unit": "1/s"},
+            "op_cpu_s": {"value": untraced["cpu_s"], "unit": "s"},
             "jvm_peak_rss_mb": {"value": peak_rss, "unit": "MB"},
         }
     print(json.dumps({

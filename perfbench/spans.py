@@ -9,18 +9,21 @@ records nothing: the untraced run uses it, so both runs execute the same
 benchmark code.
 
 ``RssSampler`` reads the Spark JVM's resident set size from ``/proc``
-on a background thread; ``JvmCounters`` reads the codegen compile count
-and compile time the JVM keeps in static counters.
+on a background thread; ``CpuClock`` reads the engine's CPU time, the
+JVM's and the host's stolen CPU time; ``JvmCounters`` reads the codegen
+compile count and compile time the JVM keeps in static counters.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import threading
 import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 STAGE_FIELDS = {
     "tasks": "numTasks",
@@ -153,6 +156,49 @@ class JvmCounters:
 
     def read(self) -> tuple[int, float]:
         return self._hist.getCount(), self._gen.compileTime() / 1e9
+
+
+class CpuReading(NamedTuple):
+    engine_s: float  # this Python process + the JVM's application threads
+    jvm_s: float     # the JVM process, every thread (JIT compiler and GC too)
+    steal_s: float   # CPU the hypervisor stole from this machine, all cores
+    wall_s: float
+
+    def __sub__(self, other: "CpuReading") -> "CpuReading":
+        return CpuReading(*(a - b for a, b in zip(self, other)))
+
+
+class CpuClock:
+    """Reads CPU seconds and wall seconds together.
+
+    ``engine_s`` is the CPU the engine spends on the work: the driver's
+    Python process plus every thread the JVM lists (driver, scheduler,
+    tasks). It leaves out the JIT compiler and GC threads, whose work in
+    a one-minute JVM follows the warm-up, and time the hypervisor stole,
+    which follows the host's load. ``jvm_s`` and ``steal_s`` (from
+    ``/proc``) show both."""
+
+    def __init__(self, jvm, pid: int):
+        self._threads = jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+        self._arrays = jvm.java.util.Arrays
+        self.path = f"/proc/{pid}/stat"
+        self.tick = os.sysconf("SC_CLK_TCK")
+
+    def read(self) -> CpuReading:
+        # one JVM call for every thread; a thread that has ended reads -1 ns
+        java_ns = self._arrays.stream(
+            self._threads.getThreadCpuTime(self._threads.getAllThreadIds())).sum()
+        py = os.times()
+        with open(self.path) as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        with open("/proc/stat") as f:
+            steal = int(f.readline().split()[8])  # cpu user nice system idle iowait irq softirq steal
+        return CpuReading(
+            java_ns / 1e9 + py.user + py.system,
+            (int(fields[11]) + int(fields[12])) / self.tick,
+            steal / self.tick,
+            time.perf_counter(),
+        )
 
 
 class RssSampler:

@@ -96,7 +96,7 @@ def tiny(monkeypatch):
     monkeypatch.setattr(workloads, "WAREHOUSE_SF", 0.002)
     monkeypatch.setattr(workloads, "CORPUS_DOCS", 120)
     monkeypatch.setattr(workloads, "MIX", (
-        "q1_pricing_summary", "orgchange_adjust_panel", "dedup_exact", "minhash_lsh_pairs"))
+        "q1_pricing_summary", "j5_asof_join", "dedup_exact"))
 
 
 @pytest.mark.parametrize("workload", sorted(workloads.WORKLOADS))
