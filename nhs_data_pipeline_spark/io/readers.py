@@ -34,6 +34,7 @@ from typing import Sequence
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nhs_data_pipeline_spark.functions import (
     NA_TOKENS,
@@ -48,10 +49,12 @@ def detect_header_row(pdf: pd.DataFrame, marker: str | None = None, scan_rows: i
     """Find the header row inside a raw frame.
 
     With ``marker``: first row containing the marker string in any cell
-    (case-insensitive) — scripts/build_datasets_main.py:105-113.
+    (case-insensitive) — scripts/build_datasets_main.py:105-113; raises
+    ``ValueError`` when no scanned row has it, so a preamble row never
+    silently becomes the header.
     Without: first row where every non-null cell is non-numeric text and
     at least half the columns are populated (janitor ``find_header``
-    heuristic, build_datasets_wait_times.R:126-128).
+    heuristic, build_datasets_wait_times.R:126-128), else row 0.
     """
     n = min(scan_rows, len(pdf))
     for i in range(n):
@@ -65,6 +68,8 @@ def detect_header_row(pdf: pd.DataFrame, marker: str | None = None, scan_rows: i
             re.fullmatch(r"-?\d+(\.\d+)?", c) for c in cells
         ):
             return i
+    if marker is not None:
+        raise ValueError(f"no header row contains the marker {marker!r} in the first {n} rows")
     return 0
 
 
@@ -81,6 +86,19 @@ def _promote_header(pdf: pd.DataFrame, header_row: int) -> pd.DataFrame:
     return out
 
 
+def _apply_header(
+    pdf: pd.DataFrame, header: str | int | None, marker: str | None, path: str
+) -> pd.DataFrame:
+    """Promote the detected (``header='detect'``) or given header row;
+    a missing ``marker`` raises naming the file."""
+    if header == "detect":
+        try:
+            header = detect_header_row(pdf, marker=marker)
+        except ValueError as err:
+            raise ValueError(f"{path}: {err}") from None
+    return _promote_header(pdf, header) if isinstance(header, int) else pdf
+
+
 def _finalize(
     spark: SparkSession,
     pdf: pd.DataFrame,
@@ -88,7 +106,8 @@ def _finalize(
     na_tokens: Sequence[str],
 ) -> DataFrame:
     """Sentinels -> NULL, attach ``_row_idx`` / ``_source_file``, ship to
-    Spark as all-string (downstream schema mapping casts)."""
+    Spark with every data column as string (downstream schema mapping
+    casts)."""
     pdf = pdf.reset_index(drop=True)
     pdf = pdf.astype("object")
     toks = {str(t).strip() for t in na_tokens}
@@ -99,22 +118,15 @@ def _finalize(
     )
     pdf.insert(0, "_row_idx", range(len(pdf)))
     pdf.insert(1, "_source_file", source)
-    # Explicit all-string schema: inference crashes on ZERO data rows
+    # Explicit schema: inference crashes on ZERO data rows
     # (CANNOT_INFER_EMPTY_SCHEMA — a just-published empty release is a
-    # real shape) and on all-NULL columns without Arrow. _row_idx is
-    # cast below, everything else is string by the module contract.
-    from pyspark.sql import types as T
-
+    # real shape) and on all-NULL columns without Arrow. _row_idx is a
+    # long, everything else is string by the module contract.
     schema = T.StructType(
-        [T.StructField(str(c), T.StringType()) for c in pdf.columns]
+        [T.StructField("_row_idx", T.LongType())]
+        + [T.StructField(str(c), T.StringType()) for c in pdf.columns[1:]]
     )
-    sdf = spark.createDataFrame(
-        pdf.astype({"_row_idx": "object"}).map(
-            lambda v: None if v is None else str(v)
-        ),
-        schema=schema,
-    )
-    return sdf.withColumn("_row_idx", F.col("_row_idx").cast("long"))
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def file_matches_skip_predicate(
@@ -150,12 +162,7 @@ def read_messy_csv(
     pdf = pdf.replace({"": None})
     if skip_markers and file_matches_skip_predicate(pdf, skip_markers):
         return None
-    if header == "detect":
-        hr = detect_header_row(pdf, marker=marker)
-        pdf = _promote_header(pdf, hr)
-    elif isinstance(header, int):
-        pdf = _promote_header(pdf, header)
-    return _finalize(spark, pdf, path, na_tokens)
+    return _finalize(spark, _apply_header(pdf, header, marker, path), path, na_tokens)
 
 
 # ---------------------------------------------------------------------------
@@ -331,11 +338,7 @@ def read_messy_excel(
             raise ValueError(f"no sheet matches {sheet_regex!r} in {path}")
         sheet = matches[0]
     pdf = _excel_raw_frame(path, sheet, skip)
-    if header == "detect":
-        pdf = _promote_header(pdf, detect_header_row(pdf, marker=marker))
-    elif isinstance(header, int):
-        pdf = _promote_header(pdf, header)
-    return _finalize(spark, pdf, path, na_tokens)
+    return _finalize(spark, _apply_header(pdf, header, marker, path), path, na_tokens)
 
 
 def read_messy_excel_multi(

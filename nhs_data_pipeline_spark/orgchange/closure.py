@@ -3,90 +3,79 @@
 The reference resolves NHS trust succession chains (old_code -> ... ->
 final_code, with splits fanning one-to-many) by an iterative in-memory
 loop (scripts/org-changes/build_trust_lookup.R:59-84,
-build_all_org_changes.R:55-106). Spark has no recursive CTE, so the
-engine runs a driver-side loop of self-joins: each iteration advances
-every unresolved frontier code by one hop. Splits are handled by join
-multiplicity (one row fans to N) — no explode needed.
-
-Scale notes: iterations = longest chain length (NHS data: <= ~4); each
-iteration is one broadcast-able join against the (small) edge list;
-``localCheckpoint`` truncates lineage so plans don't grow per iteration.
-With a *large* edge list this becomes pointer-doubling territory, but
-succession graphs are lookup-sized — broadcast join is the right plan.
+build_all_org_changes.R:55-106). Succession graphs are lookup-sized, so
+the engine does the same: it collects the edges once, walks them in
+plain Python on the driver and returns the resolved pairs as a small
+local DataFrame. A Spark loop of self-joins would spend its time
+scheduling jobs, not joining. A cycle has no terminal successor, so it
+raises ``ValueError`` naming the codes on the cycle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
-def successor_closure(
-    edges: DataFrame,
-    old: str = "old_code",
-    new: str = "new_code",
-    max_iter: int = 20,
-    checkpoint: bool = True,
-    probe_every: int = 2,
-) -> DataFrame:
+def _find_cycle(succ: dict) -> list | None:
+    """One cycle of the ``code -> successors`` map as ``[c0, ..., c0]``,
+    or None when the map is acyclic."""
+    live = dict(succ)  # peel codes until only cycles and their feeders remain
+    while dead := [c for c, s in live.items() if not any(n in live for n in s)]:
+        for c in dead:
+            del live[c]
+    if not live:
+        return None
+    path = [next(iter(live))]  # every live code has a live successor
+    while path.count(path[-1]) < 2:
+        path.append(next(n for n in live[path[-1]] if n in live))
+    return path[path.index(path[-1]):]
+
+
+def successor_closure(edges: DataFrame, old: str = "old_code", new: str = "new_code") -> DataFrame:
     """Resolve every ``old`` code to its terminal successor(s).
 
     ``edges`` is the one-hop succession list. Returns ``(old, final_code,
-    n_hops)`` — one row per (origin, terminal) pair; splits yield multiple
-    rows per origin. Cycles are cut by ``max_iter``.
+    n_hops)``: one row per distinct (origin, terminal, path length), so
+    splits yield several rows per origin and two paths of different
+    lengths to one terminal yield two rows. An edge with a NULL new code
+    makes its old code a terminal too; a path that goes on past such a
+    code reports every code it reaches after it, not only its terminal.
+    A cycle raises ``ValueError``.
 
     Parity: build_trust_lookup.R:59-84 (the ``while (length(repl) > 0)``
     loop); build_all_org_changes.R:55-106 (bounded per-hop variant).
     """
-    e = edges.select(F.col(old).alias("__o"), F.col(new).alias("__n")).distinct()
-    mapping = e.select(
-        F.col("__o").alias(old),
-        F.col("__n").alias("final_code"),
-        F.lit(1).alias("n_hops"),
-    )
-    hop = e.select(F.col("__o").alias("__ho"), F.col("__n").alias("__hn"))
+    pairs = edges.select(old, new)
+    succ: dict = {}
+    for o, n in pairs.collect():
+        succ.setdefault(o, set()).add(n)
+    stops = {o for o, s in succ.items() if None in s}  # paths end there too
+    for s in succ.values():
+        s.discard(None)
+    cycle = _find_cycle(succ)
+    if cycle:
+        raise ValueError("succession cycle: " + " -> ".join(map(str, cycle)))
 
-    def _advance(m: DataFrame) -> DataFrame:
-        return (
-            m.join(F.broadcast(hop), m["final_code"] == hop["__ho"], "left")
-            .select(
-                old,
-                F.coalesce("__hn", "final_code").alias("final_code"),
-                F.when(F.col("__hn").isNotNull(), F.col("n_hops") + 1)
-                .otherwise(F.col("n_hops"))
-                .alias("n_hops"),
-                F.col("__hn").isNotNull().alias("__moved"),
-            )
-            # dedup + flag-merge in one aggregate (a plain distinct would
-            # keep (row, moved) and (row, not-moved) as separate rows)
-            .groupBy(old, "final_code", "n_hops")
-            .agg(F.max("__moved").alias("__moved"))
-        )
-
-    # One Spark action per PROBE: ``probe_every`` step joins run
-    # between convergence checks (the last step's __moved flag answers
-    # convergence — if hop k+1 moved nothing, the fixpoint is reached
-    # regardless of hop k), a lazy localCheckpoint truncates lineage,
-    # and the single count() both materializes the checkpoint and
-    # answers convergence. Driver-loop job latency — not join work —
-    # dominates on lookup-sized graphs (the r04 official bench record
-    # inflated this query 7.6x under host load), so halving the action
-    # count halves the latency exposure; the extra post-fixpoint join
-    # per probe window is a no-op aggregate on a lookup-sized table.
-    it = 0
-    while it < max_iter:
-        advanced = _advance(mapping)
-        it += 1
-        while it % max(1, probe_every) != 0 and it < max_iter:
-            advanced = _advance(advanced.drop("__moved"))
-            it += 1
-        if checkpoint:
-            advanced = advanced.localCheckpoint(eager=False)
-        moved = advanced.filter("__moved").limit(1).count()
-        mapping = advanced.drop("__moved")
-        if moved == 0:
-            break
-    return mapping
+    rows = []
+    for origin, first in succ.items():
+        if origin in stops:
+            rows.append((origin, None, 1))
+        # (code, reached past a stop) per path length, deduplicated per level
+        frontier, hops = {(c, False) for c in first}, 1
+        while frontier:
+            rows += {(origin, c, hops) for c, held in frontier
+                     if held or c in stops or not succ.get(c)}
+            frontier = {(n, held or c in stops) for c, held in frontier for n in succ.get(c, ())}
+            hops += 1
+    o_field, n_field = pairs.schema.fields
+    schema = T.StructType([
+        o_field,
+        T.StructField("final_code", n_field.dataType, n_field.nullable),
+        T.StructField("n_hops", T.IntegerType(), False),
+    ])
+    return edges.sparkSession.createDataFrame(rows, schema)
 
 
 def classify_changes(edges: DataFrame, old: str = "old_code", new: str = "new_code") -> DataFrame:

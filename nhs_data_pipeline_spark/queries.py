@@ -364,9 +364,10 @@ def j1_natural_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j3_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 — iterative successor closure (driver loop of broadcast
-    self-joins; no recursive CTE in Spark). Synthetic chain edges
-    N5->N0, ..., N24->N19 resolve in up to 4 hops."""
+    """J3 — successor closure: the lookup-sized edge list is collected
+    once and resolved in plain Python on the driver (a cycle raises
+    ``ValueError``). Synthetic chain edges N5->N0, ..., N24->N19
+    resolve in up to 4 hops."""
     n = _t(spark, sf_dir, "nation").filter(F.col("n_nationkey") >= 5)
     edges = n.select(
         F.concat(F.lit("N"), F.col("n_nationkey").cast("string")).alias("old_code"),

@@ -55,6 +55,21 @@ def test_read_messy_csv_marker_mode(spark, tmp_path):
     assert df.count() == 3
 
 
+def test_missing_header_marker_raises_naming_the_file(spark, tmp_path):
+    import pandas as pd
+
+    with pytest.raises(ValueError, match="Occupied Beds"):
+        detect_header_row(pd.DataFrame([["preamble", None], ["a", "b"]]), marker="Occupied Beds")
+    path = _write_messy(tmp_path)
+    with pytest.raises(ValueError, match="Occupied Beds") as err:
+        read_messy_csv(spark, path, marker="Occupied Beds")
+    assert path in str(err.value)
+    xlsx = _write_xlsx(tmp_path / "beds.xlsx", [("S1", [["preamble"], ["Org Code", "Beds"]])])
+    with pytest.raises(ValueError, match="Occupied Beds") as err:
+        read_messy_excel(spark, xlsx, marker="Occupied Beds")
+    assert xlsx in str(err.value)
+
+
 def test_read_messy_csv_fixed_skip(spark, tmp_path):
     path = _write_messy(tmp_path)
     df = read_messy_csv(spark, path, skip=2, header=0)

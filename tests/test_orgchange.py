@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nhs_data_pipeline_spark.orgchange import (
     adjust_org_changes,
@@ -35,10 +36,54 @@ def test_closure_merge_then_split(spark):
     assert got == {("A", "X"), ("A", "Y"), ("B", "X"), ("B", "Y"), ("M", "X"), ("M", "Y")}
 
 
-@pytest.mark.slow
-def test_closure_cycle_terminates(spark):
-    out = successor_closure(_edges(spark, [("A", "B"), ("B", "A")]), max_iter=5)
-    assert out.count() > 0  # bounded, no hang
+def _closure_rows(out):
+    return sorted((tuple(r) for r in out.collect()), key=str)
+
+
+def test_closure_diamond_keeps_both_path_lengths(spark):
+    out = successor_closure(_edges(spark, [("A", "B"), ("A", "C"), ("B", "C")]))
+    assert _closure_rows(out) == [("A", "C", 1), ("A", "C", 2), ("B", "C", 1)]
+
+
+def test_closure_null_successor_stops_the_path(spark):
+    # an edge with a NULL new code makes its old code a terminal
+    ddl = "old_code string, new_code string"
+    e = spark.createDataFrame([("A", None), ("B", "A")], ddl)
+    assert _closure_rows(successor_closure(e)) == [("A", None, 1), ("B", "A", 1)]
+    # when that code also has successors, paths go on past it, and every
+    # code they reach after it is reported, not only the terminal D
+    e = spark.createDataFrame([("A", None), ("A", "C"), ("C", "D"), ("B", "A")], ddl)
+    assert _closure_rows(successor_closure(e)) == [
+        ("A", "D", 2), ("A", None, 1), ("B", "A", 1), ("B", "C", 2), ("B", "D", 3),
+        ("C", "D", 1),
+    ]
+
+
+def test_closure_empty_edges(spark):
+    e = spark.createDataFrame([], "old_code string, new_code string")
+    assert successor_closure(e).collect() == []
+
+
+def test_closure_cycle_raises(spark):
+    cases = [
+        ([("A", "B"), ("B", "A")], {"A", "B"}),
+        ([("A", "A")], {"A"}),
+        ([("X", "A"), ("A", "B"), ("B", "A"), ("B", "Y")], {"A", "B"}),  # reached from X
+    ]
+    for rows, cycle in cases:
+        with pytest.raises(ValueError, match="succession cycle") as err:
+            successor_closure(_edges(spark, rows))
+        named = str(err.value).split(": ", 1)[1].split(" -> ")
+        assert set(named) == cycle and named[0] == named[-1], (rows, named)
+
+
+def test_closure_output_schema(spark):
+    e = spark.createDataFrame([(1, 2), (2, 3)], "org long, succ long")
+    out = successor_closure(e, old="org", new="succ")
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        ("org", T.LongType()), ("final_code", T.LongType()), ("n_hops", T.IntegerType()),
+    ]
+    assert _closure_rows(out) == [(1, 3, 2), (2, 3, 1)]
 
 
 @pytest.mark.slow

@@ -84,35 +84,45 @@ def test_binned_median_brackets_exact_median(spark, counts):
 @settings(**SETTINGS)
 @pytest.mark.slow
 def test_closure_reaches_terminals(spark, edges):
-    """Every closure output's final_code has no outgoing edge (unless a
-    cycle forced the iteration cap)."""
+    """Acyclic inputs: the closure equals a brute-force enumeration of
+    every (origin, terminal, path length). Cyclic inputs: ValueError
+    naming codes that lie on a cycle."""
+    import re
+
     from nhs_data_pipeline_spark.orgchange import successor_closure
 
-    edges = [(f"N{a}", f"N{b}") for a, b in edges if a != b]
-    if not edges:
-        return
+    edges = [(f"N{a}", f"N{b}") for a, b in edges]
     e = spark.createDataFrame(edges, ["old_code", "new_code"])
-    out = successor_closure(e, max_iter=12).collect()
-    sources = {a for a, _ in edges}
+    succ = {}
+    for a, b in edges:
+        succ.setdefault(a, set()).add(b)
 
-    def in_cycle(start):
-        frontier, seen = {start}, set()
-        succ = {}
-        for a, b in edges:
-            succ.setdefault(a, set()).add(b)
-        for _ in range(12):
-            frontier = set().union(*[succ.get(n, set()) for n in frontier]) - set()
-            if start in frontier:
-                return True
-            if frontier <= seen:
-                return False
-            seen |= frontier
-        return False
+    def reachable(start):
+        seen, todo = set(), list(succ.get(start, ()))
+        while todo:
+            n = todo.pop()
+            if n not in seen:
+                seen.add(n)
+                todo.extend(succ.get(n, ()))
+        return seen
 
-    cyclic = {a for a, _ in edges if in_cycle(a)}
-    for r in out:
-        if r.final_code not in cyclic:
-            assert r.final_code not in sources or r.final_code in cyclic or r.n_hops >= 12, r
+    cyclic = {a for a in succ if a in reachable(a)}
+    if cyclic:
+        with pytest.raises(ValueError) as err:
+            successor_closure(e)
+        named = set(re.findall(r"N\d", str(err.value)))
+        assert named and named <= cyclic, (err.value, cyclic)
+        return
+
+    def walks(node, hops):
+        if node not in succ:
+            yield node, hops
+        for n in succ.get(node, ()):
+            yield from walks(n, hops + 1)
+
+    want = {(a, t, h) for a in succ for t, h in walks(a, 0)}
+    got = [tuple(r) for r in successor_closure(e).collect()]
+    assert len(got) == len(set(got)) and set(got) == want
 
 
 # -- Gopher / C4 quality panels vs exact python replicas ------------------
