@@ -6,17 +6,17 @@ tokens (SURVEY §1.3, §2.1). That edge is inherently driver-side — the
 files are KB-to-MB sized and positional (row order matters), which a
 distributed shuffle would destroy. The engine therefore:
 
-- reads each raw file on the driver with pandas (Arrow-backed transfer
-  into Spark), attaching a stable ``_row_idx`` (per-file row position)
-  and ``_source_file`` before anything else;
+- reads each raw file on the driver, attaching a stable ``_row_idx``
+  (per-file row position) and ``_source_file`` before anything else;
 - runs header detection / promotion *before* creating the DataFrame, so
   downstream Spark code sees a canonical, statically-typed schema;
-- converts sentinel tokens to real NULLs at this edge only.
+- converts sentinel tokens to real NULLs at this edge only;
+- ships every file of one call to Spark in a single Arrow-backed
+  ``createDataFrame``, the harmonised pandas frames concatenated by
+  column name (``read_messy_csv`` takes one path or a sequence).
 
 The 100 TB path never touches this code — canonical storage is parquet
-read natively by Spark with full predicate pushdown. For *large* CSVs,
-``read_messy_csv`` falls back to distributed ``spark.read.csv`` when the
-file has no preamble.
+read natively by Spark with full predicate pushdown.
 
 Parity citations (into /root/reference/):
 - header-in-data detection: scripts/build_datasets_main.py:105-113;
@@ -28,6 +28,8 @@ Parity citations (into /root/reference/):
 
 from __future__ import annotations
 
+import csv
+import itertools
 import re
 from typing import Sequence
 
@@ -99,15 +101,9 @@ def _apply_header(
     return _promote_header(pdf, header) if isinstance(header, int) else pdf
 
 
-def _finalize(
-    spark: SparkSession,
-    pdf: pd.DataFrame,
-    source: str,
-    na_tokens: Sequence[str],
-) -> DataFrame:
-    """Sentinels -> NULL, attach ``_row_idx`` / ``_source_file``, ship to
-    Spark with every data column as string (downstream schema mapping
-    casts)."""
+def _harmonize(pdf: pd.DataFrame, source: str, na_tokens: Sequence[str]) -> pd.DataFrame:
+    """Sentinels -> NULL, every data cell a string; attach the per-file
+    ``_row_idx`` and ``_source_file``."""
     pdf = pdf.reset_index(drop=True)
     pdf = pdf.astype("object")
     toks = {str(t).strip() for t in na_tokens}
@@ -118,13 +114,23 @@ def _finalize(
     )
     pdf.insert(0, "_row_idx", range(len(pdf)))
     pdf.insert(1, "_source_file", source)
+    return pdf
+
+
+def _to_spark(spark: SparkSession, pdfs: Sequence[pd.DataFrame]) -> DataFrame:
+    """Ship harmonised frames to Spark in one transfer, concatenated by
+    column name (a column missing from a file is NULL for its rows, and
+    columns keep their order of first appearance, as ``unionByName``)."""
+    pdf = pd.concat(pdfs, ignore_index=True, sort=False)
+    data = pdf.columns[1:]  # concat fills a file's absent columns with NaN
+    pdf[data] = pdf[data].astype("object").where(pdf[data].notna(), None)
     # Explicit schema: inference crashes on ZERO data rows
     # (CANNOT_INFER_EMPTY_SCHEMA — a just-published empty release is a
     # real shape) and on all-NULL columns without Arrow. _row_idx is a
     # long, everything else is string by the module contract.
     schema = T.StructType(
         [T.StructField("_row_idx", T.LongType())]
-        + [T.StructField(str(c), T.StringType()) for c in pdf.columns[1:]]
+        + [T.StructField(str(c), T.StringType()) for c in data]
     )
     return spark.createDataFrame(pdf, schema=schema)
 
@@ -143,26 +149,46 @@ def file_matches_skip_predicate(
     return any(m.lower() in blob for m in skip_markers)
 
 
+def _read_raw_csv(path: str, skip: int) -> pd.DataFrame:
+    """Raw all-string frame (header=None semantics) after ``skip``
+    records: blank lines dropped, empty cells NULL, and every row padded
+    to the widest row, so a narrow preamble row cannot fix the width."""
+    with open(path, newline="", encoding="utf-8-sig") as f:
+        rows = [r for r in itertools.islice(csv.reader(f), skip, None) if r]
+    width = max(map(len, rows), default=0)
+    return pd.DataFrame(
+        [[v or None for v in r] + [None] * (width - len(r)) for r in rows],
+        columns=range(width),
+        dtype=object,
+    )
+
+
 def read_messy_csv(
     spark: SparkSession,
-    path: str,
+    path: str | Sequence[str],
     skip: int = 0,
     header: str | int | None = "detect",
     marker: str | None = None,
     na_tokens: Sequence[str] = NA_TOKENS,
     skip_markers: Sequence[str] = (),
 ) -> DataFrame | None:
-    """Read a messy small CSV: optional fixed ``skip``, then header
+    """Read messy small CSVs: optional fixed ``skip``, then header
     detection/promotion (``header='detect'`` | row int | None for
     headerless), sentinel cleanup, ``_row_idx`` + ``_source_file``.
-    Returns None when a ``skip_markers`` file-level predicate matches
-    (P12: the whole release is excluded).
+
+    ``path`` is one file or a sequence of files. Each file is treated
+    on its own (its ``_row_idx`` restarts at 0); the results are
+    unioned by column name and shipped to Spark in one transfer. A file
+    matching a ``skip_markers`` file-level predicate is excluded (P12);
+    when every file is excluded the result is None.
     """
-    pdf = pd.read_csv(path, header=None, dtype=str, skiprows=skip, keep_default_na=False)
-    pdf = pdf.replace({"": None})
-    if skip_markers and file_matches_skip_predicate(pdf, skip_markers):
-        return None
-    return _finalize(spark, _apply_header(pdf, header, marker, path), path, na_tokens)
+    pdfs = []
+    for p in [path] if isinstance(path, str) else path:
+        pdf = _read_raw_csv(p, skip)
+        if skip_markers and file_matches_skip_predicate(pdf, skip_markers):
+            continue
+        pdfs.append(_harmonize(_apply_header(pdf, header, marker, p), p, na_tokens))
+    return _to_spark(spark, pdfs) if pdfs else None
 
 
 # ---------------------------------------------------------------------------
@@ -338,7 +364,8 @@ def read_messy_excel(
             raise ValueError(f"no sheet matches {sheet_regex!r} in {path}")
         sheet = matches[0]
     pdf = _excel_raw_frame(path, sheet, skip)
-    return _finalize(spark, _apply_header(pdf, header, marker, path), path, na_tokens)
+    pdf = _harmonize(_apply_header(pdf, header, marker, path), path, na_tokens)
+    return _to_spark(spark, [pdf])
 
 
 def read_messy_excel_multi(

@@ -5,7 +5,8 @@ critical care, RTT) with an imperative, partly *interactive* script —
 file pickers, rename prompts (scripts/build_datasets_general.py).
 Here every series is a ``SeriesConfig``: file globs + per-era schema
 treatment + rename/coalesce/filter rules + adjustment spec, executed by
-one generic runner as a single lazy DAG. SURVEY §7 step 6.
+one generic runner as one Spark plan over a single ingest transfer,
+materialised once. SURVEY §7 step 6.
 
 The minimum end-to-end slice (supporting-facilities shape) exercises:
 messy ingest (S5-S8), header detection (P10/R3), clean_names (R4),
@@ -24,11 +25,7 @@ from pyspark.sql import functions as F
 
 from nhs_data_pipeline_spark.functions import to_numeric
 from nhs_data_pipeline_spark.io.readers import read_messy_csv, with_filename_metadata
-from nhs_data_pipeline_spark.ops.core import (
-    coalesce_columns,
-    rename_columns,
-    union_by_name,
-)
+from nhs_data_pipeline_spark.ops.core import coalesce_columns
 from nhs_data_pipeline_spark.orgchange.adjust import adjust_org_changes
 
 
@@ -53,27 +50,28 @@ class SeriesConfig:
 
 
 def run_series(spark: SparkSession, cfg: SeriesConfig) -> DataFrame:
-    """Execute a series pipeline: per-file messy ingest -> harmonize ->
-    union -> clean -> (optional) org-change adjust. Returns the final
-    panel as one lazy DataFrame (sinks are the caller's choice).
-
-    Per-file work is driver-side only through header detection (small
-    raw files, SURVEY §4); everything after ``union_by_name`` is a
-    single distributed plan.
+    """Execute a series pipeline: messy ingest of every file -> harmonize
+    -> clean -> (optional) org-change adjust. Per-file work runs on the
+    driver (small raw files, SURVEY §4) and every file reaches Spark in
+    one transfer, so the rest is one plan with no union. Returns the
+    panel materialised by an eager ``localCheckpoint``: each sink (the
+    caller's choice) scans the computed rows, not the plan again.
     """
-    frames = []
-    for path in cfg.files:
-        df = read_messy_csv(
-            spark, path, skip=cfg.skip, marker=cfg.marker, skip_markers=cfg.skip_markers
-        )
-        if df is None:  # P12: whole-file exclusion predicate matched
-            continue
-        df = with_filename_metadata(df)
-        df = rename_columns(df, cfg.rename)
-        frames.append(df)
-    if not frames:
+    panel = read_messy_csv(
+        spark, cfg.files, skip=cfg.skip, marker=cfg.marker, skip_markers=cfg.skip_markers
+    )
+    if panel is None:  # P12: every file matched the exclusion predicate
         raise ValueError(f"series {cfg.name}: every input file was skipped")
-    panel = union_by_name(frames)
+    panel = with_filename_metadata(panel)
+    # Era-variant renames; columns landing on one name merge left to
+    # right, as a per-file rename then union by name would.
+    targets: dict[str, list[str]] = {}
+    for c in panel.columns:
+        targets.setdefault(cfg.rename.get(c, c), []).append(c)
+    panel = panel.select(*[
+        (F.col(cs[0]) if len(cs) == 1 else F.coalesce(*cs)).alias(t)
+        for t, cs in targets.items()
+    ])
     panel = coalesce_columns(panel, cfg.coalesce)
     for c in cfg.require_cols:
         panel = panel.filter(F.col(c).isNotNull())
@@ -85,9 +83,9 @@ def run_series(spark: SparkSession, cfg: SeriesConfig) -> DataFrame:
         panel = panel.filter(
             nc.isNull() | ~nc.isin(list(cfg.drop_name_values))
         )
-    for c in cfg.numeric_cols:
-        if c in panel.columns:
-            panel = panel.withColumn(c, to_numeric(c))
+    panel = panel.withColumns(
+        {c: to_numeric(c) for c in cfg.numeric_cols if c in panel.columns}
+    )
     if cfg.org_lookup is not None:
         # CONTRACT: keys[0] is the org column, keys[1] the period
         # column (documented on SeriesConfig) — a differently-ordered
@@ -108,4 +106,4 @@ def run_series(spark: SparkSession, cfg: SeriesConfig) -> DataFrame:
             period_col=keys[1],
             name_col=cfg.name_col,
         )
-    return panel
+    return panel.localCheckpoint()

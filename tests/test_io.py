@@ -64,6 +64,12 @@ def test_missing_header_marker_raises_naming_the_file(spark, tmp_path):
     with pytest.raises(ValueError, match="Occupied Beds") as err:
         read_messy_csv(spark, path, marker="Occupied Beds")
     assert path in str(err.value)
+    beds = str(tmp_path / "beds.csv")
+    with open(beds, "w", newline="") as f:
+        csv.writer(f).writerows([["Occupied Beds", "Org"], ["1", "RX1"]])
+    with pytest.raises(ValueError, match="Occupied Beds") as err:
+        read_messy_csv(spark, [beds, path], marker="Occupied Beds")
+    assert path in str(err.value)
     xlsx = _write_xlsx(tmp_path / "beds.xlsx", [("S1", [["preamble"], ["Org Code", "Beds"]])])
     with pytest.raises(ValueError, match="Occupied Beds") as err:
         read_messy_excel(spark, xlsx, marker="Occupied Beds")
@@ -249,8 +255,42 @@ def test_file_level_skip_predicate(spark, tmp_path):
              ["org", "value"], ["RX1", "3"]]
         )
     assert read_messy_csv(spark, str(p), skip_markers=["adjusted"]) is None
+    assert read_messy_csv(spark, [str(p), str(p)], skip_markers=["adjusted"]) is None
     ok = read_messy_csv(spark, str(p), skip_markers=["the 18 weeks rules"])
     assert ok is not None and ok.count() >= 1
+
+
+def test_read_messy_csv_many_paths_is_their_union(spark, tmp_path):
+    from nhs_data_pipeline_spark.ops.core import union_by_name
+
+    a = _write_messy(tmp_path)
+    b = str(tmp_path / "Theatres_Quarter_3_2014_15.csv")
+    with open(b, "w", newline="") as f:
+        csv.writer(f).writerows(
+            [["Org Code", "Number of Operating Theatres", "Region"],
+             ["RX3", "7", "Y56"], ["RX4", "-", ""]]
+        )
+    got = read_messy_csv(spark, [a, b])
+    want = union_by_name([read_messy_csv(spark, a), read_messy_csv(spark, b)])
+    assert got.dtypes == want.dtypes
+    order = ["_source_file", "_row_idx"]
+    rows = got.orderBy(*order).collect()
+    assert rows == want.orderBy(*order).collect()
+    # _row_idx restarts at 0 for each file
+    assert sorted((r._source_file, r._row_idx) for r in rows) == sorted(
+        [(a, 0), (a, 1), (a, 2), (b, 0), (b, 1)]
+    )
+
+
+def test_read_messy_csv_narrow_preamble_row(spark, tmp_path):
+    # a one-field title line, a blank line, then a 3-column header
+    p = tmp_path / "release.csv"
+    p.write_text("Bed availability\n\nOrg Code,Org Name,Beds\nRX1,ONE,5\nRX2,,-\n")
+    df = read_messy_csv(spark, str(p))
+    assert df.columns == ["_row_idx", "_source_file", "org_code", "org_name", "beds"]
+    assert [tuple(r)[2:] for r in df.orderBy("_row_idx").collect()] == [
+        ("RX1", "ONE", "5"), ("RX2", None, None),
+    ]
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

@@ -48,13 +48,12 @@ def _era_b(tmp_path):
     )
 
 
-@pytest.mark.slow
-def test_supporting_facilities_slice(spark, tmp_path):
+def _facilities_cfg(spark, tmp_path):
     lookup = spark.createDataFrame(
         [("OLD1", "NEW", 0, 0)],
         ["old_code", "final_code", "experiences_split", "problematic"],
     )
-    cfg = SeriesConfig(
+    return SeriesConfig(
         name="supporting_facilities",
         files=[_era_a(tmp_path), _era_b(tmp_path)],
         marker="Operating Theatres",
@@ -70,7 +69,10 @@ def test_supporting_facilities_slice(spark, tmp_path):
         sum_cols=["nr_operating_theatres"],
         org_lookup=lookup,
     )
-    out = run_series(spark, cfg)
+
+
+def test_supporting_facilities_slice(spark, tmp_path):
+    out = run_series(spark, _facilities_cfg(spark, tmp_path))
     rows = {(r.org_code, r.file_year): r for r in out.collect()}
 
     # era A's OLD1 merged into NEW: 4 + 10 in 2012
@@ -84,6 +86,83 @@ def test_supporting_facilities_slice(spark, tmp_path):
     assert not any(k[0] == "OLD1" for k in rows)
     # names re-attached
     assert rows[("NEW", 2012)].org_name == "NEW TRUST"
+    # the panel comes back materialised: sinks scan its rows instead of
+    # re-running ingest, union and the adjustment joins
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan and "Join" not in plan
+
+
+def test_adjusted_panel_schema(spark, tmp_path):
+    out = run_series(spark, _facilities_cfg(spark, tmp_path))
+    assert out.dtypes == [
+        ("org_code", "string"), ("file_year", "int"),
+        ("nr_operating_theatres", "double"),
+        ("exp_problematic_org_change", "int"), ("unproblematic_org_change", "int"),
+        ("org_name", "string"), ("change_period", "int"),
+        ("exp_unproblematic_org_change", "int"),
+    ]
+
+
+def test_rename_collisions_merge_across_eras(spark, tmp_path):
+    # two eras' raw names map onto org_code; a third era has it raw
+    files = [
+        _write(tmp_path / "Theatres_Quarter_1_2012_13.csv",
+               [["OrgID", "Number of Operating Theatres"], ["A1", "1"]]),
+        _write(tmp_path / "Theatres_Quarter_1_2013_14.csv",
+               [["Org ID", "Number of Operating Theatres"], ["B1", "2"], ["B2", "-"]]),
+        _write(tmp_path / "Theatres_Quarter_1_2014_15.csv",
+               [["Number of Operating Theatres", "Org Code"], ["3", "C1"]]),
+    ]
+    cfg = SeriesConfig(
+        name="collisions",
+        files=files,
+        marker="Operating Theatres",
+        rename={"orgid": "org_code", "org_id": "org_code",
+                "number_of_operating_theatres": "nr"},
+        numeric_cols=["nr"],
+    )
+    out = run_series(spark, cfg)
+    got = sorted((r.org_code, r.file_year, r.nr) for r in out.collect())
+    assert got == [("A1", 2012, 1.0), ("B1", 2013, 2.0), ("B2", 2013, None),
+                   ("C1", 2014, 3.0)]
+    assert sorted(out.dtypes) == [
+        ("_row_idx", "bigint"), ("_source_file", "string"),
+        ("file_pathway", "string"), ("file_quarter", "string"),
+        ("file_year", "int"), ("nr", "double"), ("org_code", "string"),
+    ]
+
+
+def test_header_only_and_skipped_releases_add_no_rows(spark, tmp_path):
+    header_only = _write(
+        tmp_path / "Theatres_Quarter_3_2013_14.csv",
+        [["Region Code", "Organisation Code", "Organisation Name",
+          "Number of Operating Theatres"]],
+    )
+    skipped = _write(
+        tmp_path / "Theatres_Quarter_4_2013_14.csv",
+        [["Adjusted release", "", "", ""],
+         ["SHA", "OrgID", "Name", "Number of Operating Theatres"],
+         ["Q30", "SKIP1", "SKIPPED TRUST", "99"]],
+    )
+    cfg = SeriesConfig(
+        name="empty_and_skipped",
+        files=[_era_a(tmp_path), header_only, skipped],
+        marker="Operating Theatres",
+        skip_markers=["adjusted"],
+        rename={"orgid": "org_code", "name": "org_name",
+                "number_of_operating_theatres": "nr_operating_theatres"},
+        numeric_cols=["nr_operating_theatres"],
+        require_cols=["org_code"],
+    )
+    out = run_series(spark, cfg)
+    got = {r.org_code: r.nr_operating_theatres for r in out.collect()}
+    assert got == {"OLD1": 4.0, "NEW": 10.0}
+    # the header-only release still contributes its (all-NULL) columns
+    assert set(out.columns) == {
+        "_row_idx", "_source_file", "sha", "org_code", "org_name",
+        "nr_operating_theatres", "file_year", "file_quarter", "file_pathway",
+        "region_code", "organisation_code", "organisation_name",
+    }
 
 
 def test_pipeline_without_adjustment(spark, tmp_path):
