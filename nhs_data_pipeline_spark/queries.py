@@ -24,6 +24,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nhs_data_pipeline_spark import functions as nf
 from nhs_data_pipeline_spark.llm import dedup as dd
@@ -58,8 +59,22 @@ from nhs_data_pipeline_spark.orgchange import adjust as oa
 from nhs_data_pipeline_spark.orgchange import closure as ocl
 
 
+# Parquet schemas keyed by file identity (path, mtime_ns, size), never by
+# name: a table regenerated in place may land with new physical types.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Table catalog: infer a table's schema once per file identity (one
+    Spark job), then read it with that schema (no job). A fresh
+    DataFrame per call, so two reads of one table never share
+    attribute IDs. A missing table raises FileNotFoundError naming it."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1010,15 +1025,8 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's naive TIMESTAMP exactly, timezone-independent); legacy
     TIMESTAMP(NANOS) files surface as BIGINT under the nanosAsLong
     conf and are rebuilt via integer division (`/` on longs is double
-    division in Spark and the FP quotient can land 1us off)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
+    division in Spark and the FP quotient can land 1us off). Both
+    confs this relies on are pinned by ``session.get_spark``."""
     ev = _t(spark, sf_dir, "events")
     if dict(ev.dtypes).get("ts") == "bigint":
         ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -10,6 +10,11 @@ One place to encode the engine's execution posture:
   initial number mostly a ceiling.
 - Session timezone pinned to UTC so timestamp semantics are stable and
   match the DuckDB oracle (naive parquet timestamps).
+- Parquet TIMESTAMP(NANOS) columns read as BIGINT
+  (``spark.sql.legacy.parquet.nanosAsLong``), which ``queries._events``
+  rebuilds into micros. Pinned here, once per session, because it
+  changes the schema parquet inference lands on and the query
+  registry caches inferred schemas per file.
 """
 
 from __future__ import annotations
@@ -73,6 +78,7 @@ def get_spark(
         # on the composite queries. 512 is the measured middle.
         .config("spark.sql.codegen.cache.maxEntries", "512")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -82,12 +88,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def read_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load the named parquet tables from an sf directory as DataFrames."""
-    dfs = [spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names]
-    return dfs[0] if len(dfs) == 1 else dfs
 
 
 def cluster_conf(

@@ -574,3 +574,53 @@ def test_partitioned_store_prunes_partitions(spark, tmp_path):
     # scan reads one directory — its input rows equal that day's rows
     one = back.filter(F.col("day") == F.lit(days[1]))
     assert one.count() == rows_one_day
+
+
+def test_session_pins_parquet_inference_confs(spark):
+    """get_spark pins the two confs that change what parquet schema
+    inference lands on (the query registry caches inferred schemas):
+    no query has to set them first."""
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_table_catalog_keys_on_file_identity(spark, sf_dir, tmp_path):
+    """queries._t caches each table's schema per (path, mtime_ns,
+    size), never per name: rewriting a table in place with drifted
+    physical types (o_orderdate -> DATE, events.ts -> TIMESTAMP(NANOS),
+    as tools/drift_drill.py rehearses) is picked up within one session
+    and the results do not change. A missing table raises naming it."""
+    import re
+    import shutil
+    from collections import Counter
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from nhs_data_pipeline_spark.queries import QUERIES, _t
+    from tools.drift_drill import _rewrite
+
+    sf = str(tmp_path)
+    for name in ("orders", "events"):
+        shutil.copyfile(os.path.join(sf_dir, f"{name}.parquet"),
+                        tmp_path / f"{name}.parquet")
+
+    def results():
+        w8 = QUERIES["w8_rolling_revenue"](spark, sf)
+        w8 = w8.withColumn("o_orderdate", F.col("o_orderdate").cast("date"))
+        j5 = QUERIES["j5_asof_join"](spark, sf)
+        return Counter(w8.collect()), Counter(j5.collect())
+
+    before = results()
+    assert dict(_t(spark, sf, "orders").dtypes)["o_orderdate"] == "timestamp_ntz"
+    for name, casts in (("orders", {"o_orderdate": pa.date32()}),
+                        ("events", {"ts": pa.timestamp("ns")})):
+        p = tmp_path / f"{name}.parquet"
+        _rewrite(p, p, casts)
+    assert dict(_t(spark, sf, "orders").dtypes)["o_orderdate"] == "date"
+    assert dict(_t(spark, sf, "events").dtypes)["ts"] == "bigint"
+    assert results() == before
+
+    missing = re.escape(str(tmp_path / "missing.parquet"))
+    with pytest.raises(FileNotFoundError, match=missing):
+        _t(spark, sf, "missing")

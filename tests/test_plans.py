@@ -24,6 +24,30 @@ def plan_of(spark, name: str, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+# perfbench's warehouse_query_mix shapes
+WAREHOUSE_MIX = (
+    "q1_pricing_summary", "q3_shipping_priority", "q18_large_orders",
+    "j5_asof_join", "w8_rolling_revenue", "stats_welch_ttest", "dedup_exact",
+)
+
+
+def test_warm_catalog_plan_construction_runs_no_job(spark):
+    """Once the table catalog (queries._t) holds a table's schema,
+    building a query's plan runs no Spark job: tables are read with the
+    cached schema instead of re-inferring it on every call."""
+    sc = spark.sparkContext
+    for name in WAREHOUSE_MIX:
+        QUERIES[name](spark, SF)
+        group = f"warm-plan-build-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            QUERIES[name](spark, SF)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert not sc.statusTracker().getJobIdsForGroup(group), name
+
+
 @pytest.mark.parametrize("q", ["q3_shipping_priority", "q5_local_supplier_volume",
                                "q10_returned_item_topk", "j1_natural_left_join",
                                "orgchange_adjust_panel", "q18_large_orders",
