@@ -4324,10 +4324,6 @@ def o4_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Driver-window ordering
-# ===========================================================================
-
-# ===========================================================================
 # TPC-H shape breadth: q12/q13/q21/q22 (adapted to the synthetic schema,
 # which has no partsupp/shipmode/commitdate/receiptdate/phone columns —
 # "late" means shipped >N days after the order date)
@@ -12846,46 +12842,6 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The driver's correctness gate checks the FIRST 50 registry entries in
-# iteration order. This list pins that window: every SURVEY §2 operator
-# (single queries or merged same-table families), every bench headline
-# query, the LLM-pipeline core, and the flagship warehouse/curation
-# composites (MERGE, SCD2 point-in-time, entity resolution, seeded
-# global shuffle, mixture curation). Five near-duplicate §2 rows whose
-# operators are attested by in-window siblings were rotated out to make
-# room: u2 (union+distinct = u1+p913), sample_split_counts
-# (sample_deterministic shares the md5-bucket mechanism),
-# dedup_jaccard_pairs (minhash_lsh_pairs shares the shingle/LSH block
-# join), a34 (grouped-window family = a25+w1), f8 (date family =
-# f9+f_string_date_family, plus golden-panel tests). Round-4 additions:
-# the new flagship ops dedup_span_stats (ExactSubstr) and
-# sample_dsir_scores (DSIR) rotate in over simhash_fingerprints
-# (sibling simhash_near_pairs + hamming tests still attest SimHash) and
-# dedup_exact (attested inside the curate_corpus composite's dedup
-# stage and by test_llm); curate_audit_panel (the all-signal report
-# card, which transitively attests quality/repetition/span/LM/DSIR/OOV)
-# takes curate_corpus's slot (its quality->dedup->split chain stays
-# attested by curate_mixture_v2 + the local gate). Round-5 rotation
-# (cumulative driver attestation): seven never-driver-checked
-# flagships rotate in — graph_pagerank_nations, sketch_hll_portable,
-# dedup_jaccard_exact_join, embed_kmeans_fit, tokenizer_bpe_merges,
-# tokenizer_bpe_encode, text_bm25_topk — over seven §2 rows already
-# multiply-attested by in-window siblings and 4 prior driver rounds:
-# u1 (union family: r78 + p913 siblings), r1 (reshape: r4 +
-# f_string_date_family), w1 (window family: w2u + w56 stay in), a6
-# (grouped resample: a1 + a25 stay in), p14 (= W4 dedup; p123/p913
-# stay in), s10 (distributed binning: w56 + sketch families), j1
-# (natural join: every TPC-H join + j4/j5/j6 stay in). Late-r05
-# second rotation: the session's new flagship families rotate in —
-# join_bloom_prefilter (runtime-filter pruning), graph_triangle_count
-# (oriented triangle counting), stats_ols_trend (exact-moment OLS),
-# eval_classifier_auc (exact rank-sum AUC) — over four shapes whose
-# operators stay attested by in-window siblings: q4 (EXISTS-semi =
-# j4_semi_anti), q19 (disjunctive scan-filter: q1/q6/q14/q18 stay),
-# q10 (agg top-k: q3's order+limit stays), p8 (set membership =
-# j4's semi/anti + p123/p913 stay). Everything outside the window is
-# verified by the identical local gate (tools/check_oracle.py runs
-# ALL entries).
 # ===========================================================================
 # Tokenizer fertility + duplication profile (r08 additions)
 # ===========================================================================
@@ -14046,100 +14002,3 @@ def contamination_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         k=8,
     )
-
-
-# Sentinel slots in DRIVER_WINDOW: multiply-attested names kept as
-# cross-engine regression canaries. The r12 rotation (10th) closes the
-# never-attested backlog — all 28 remaining never-attested names get
-# slots — and spends its 22 sentinel slots on the r11/r12
-# OPTIMIZATION-touched paths, so every semantic-preservation claim of
-# the two optimization rounds gets a driver attestation on the
-# restructured plans (r11 verdict ask #8).
-# tests/test_plans.py:test_rotation_self_proving enforces the
-# discipline mechanically (window − SENTINELS ⊆ never-attested,
-# SENTINELS ⊆ attested, strict drain).
-DRIVER_WINDOW_SENTINELS: list[str] = [
-    # r12-optimized paths (leaked-persist/codegen fix, int-ordinal
-    # weighted countjoin, fold-based kmeans argmin, checkpointed
-    # model tables):
-    "curate_audit_panel",
-    "dedup_weighted_jaccard_join",
-    "embed_kmeans_fit",
-    "simhash_near_pairs",
-    "simhash_fingerprints",
-    "minhash_lsh_pairs",
-    "dedup_jaccard_pairs",
-    "text_tfidf_keywords",
-    "text_bm25_topk",
-    "text_boilerplate_removal",
-    "mixture_source_kl",
-    "text_lm_perplexity",
-    "sample_dsir_scores",
-    "q15_top_supplier",
-    "q11_important_part_value",
-    "q20_excess_shippers",
-    # r11-optimized paths never attested ON THE OPTIMIZED PLANS:
-    "embed_pca_power",
-    "embed_pca_scores",
-    "classifier_logreg_fit",
-    "graph_pagerank_nations",
-    "eval_isotonic_calibration",
-    "q21_waiting_supplier",
-]
-
-DRIVER_WINDOW = [
-    # r12 rotation (10th): the ENTIRE never-attested backlog (28
-    # names — after this round attests, every registered query has a
-    # driver attestation) ...
-    "sample_token_budget_bpe",
-    "pack_bpe_sequences",
-    "pack_sequences",
-    "ts_cusum_changepoint",
-    "events_funnel_latency",
-    "embed_quantize_int8",
-    "ts_gap_fill_interpolate",
-    "sample_token_budget_mix",
-    "sample_per_source_cap",
-    "skew_salted_join",
-    "media_chunk_segments",
-    "sample_dsir_ess",
-    "quality_linear_classifier",
-    "eval_kmeans_silhouette",
-    "ts_ewma_daily",
-    "diagnose_join_skew_orders",
-    "events_seasonal_deviation",
-    "report_dataset_card",
-    "eval_lang_confusion",
-    "feature_target_encode",
-    "embed_random_projection",
-    "eval_dedup_pair_overlap",
-    "quality_benford_digits",
-    "stats_psi_by_segment",
-    "stats_rate_wilson_ci",
-    "dq_functional_dependency",
-    "dedup_span_trim",
-    "contamination_span_trim",
-    # ... plus the 22 optimization sentinels (see
-    # DRIVER_WINDOW_SENTINELS above for the rationale):
-    *DRIVER_WINDOW_SENTINELS,
-    # (r06-r11 rotation history lives in git; see the r11 tag of this
-    # file for the per-rotation swap rationale.)
-]
-
-
-def _reorder_registry() -> None:
-    """Rebuild QUERIES/ORACLES in driver-window-first iteration order
-    (in place, so every `from queries import QUERIES` alias sees it)."""
-    missing = [n for n in DRIVER_WINDOW if n not in QUERIES]
-    if missing:
-        raise RuntimeError(f"DRIVER_WINDOW names not registered: {missing}")
-    ordered = DRIVER_WINDOW + [n for n in QUERIES if n not in DRIVER_WINDOW]
-    q = {n: QUERIES[n] for n in ordered}
-    QUERIES.clear()
-    QUERIES.update(q)
-    o = {n: ORACLES[n] for n in ordered if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(o)
-
-
-_reorder_registry()

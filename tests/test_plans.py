@@ -297,104 +297,10 @@ def test_content_fingerprint_single_scan_partial_agg(spark):
     assert "Join" not in p and "Window" not in p, p[:2000]
 
 
-def test_driver_window_contract():
-    """The driver hashes the FIRST 50 registry entries: the pinned
-    window must be exactly 50 resolvable names, iteration order must
-    honor it, every window entry must carry a SQL oracle, and the
-    flagship composites must sit inside it (r04 rotation)."""
-    from nhs_data_pipeline_spark.queries import DRIVER_WINDOW, ORACLES, QUERIES
-
-    assert len(DRIVER_WINDOW) == 50
-    assert len(set(DRIVER_WINDOW)) == 50
-    assert list(QUERIES)[:50] == DRIVER_WINDOW
-    missing_oracles = [n for n in DRIVER_WINDOW if n not in ORACLES]
-    assert not missing_oracles, missing_oracles
-    for flagship in [
-        # r12 rotation (10th): the entire never-attested backlog (28
-        # names — closes the drain) + 22 optimization sentinels
-        # (r11/r12-optimized paths re-attested on the restructured
-        # plans; enforced by test_rotation_self_proving below).
-        "sample_token_budget_bpe", "pack_bpe_sequences",
-        "pack_sequences", "ts_cusum_changepoint",
-        "events_funnel_latency", "embed_quantize_int8",
-        "ts_gap_fill_interpolate", "sample_token_budget_mix",
-        "sample_per_source_cap", "skew_salted_join",
-        "media_chunk_segments", "sample_dsir_ess",
-        "quality_linear_classifier", "eval_kmeans_silhouette",
-        "ts_ewma_daily", "diagnose_join_skew_orders",
-        "events_seasonal_deviation", "report_dataset_card",
-        "eval_lang_confusion", "feature_target_encode",
-        "embed_random_projection", "eval_dedup_pair_overlap",
-        "quality_benford_digits", "stats_psi_by_segment",
-        "stats_rate_wilson_ci", "dq_functional_dependency",
-        "dedup_span_trim", "contamination_span_trim",
-        "curate_audit_panel", "dedup_weighted_jaccard_join",
-        "embed_kmeans_fit", "simhash_near_pairs",
-        "simhash_fingerprints", "minhash_lsh_pairs",
-        "dedup_jaccard_pairs", "text_tfidf_keywords",
-        "text_bm25_topk", "text_boilerplate_removal",
-        "mixture_source_kl", "text_lm_perplexity",
-        "sample_dsir_scores", "q15_top_supplier",
-        "q11_important_part_value", "q20_excess_shippers",
-        "embed_pca_power", "embed_pca_scores",
-        "classifier_logreg_fit", "graph_pagerank_nations",
-        "eval_isotonic_calibration", "q21_waiting_supplier",
-    ]:
-        assert flagship in DRIVER_WINDOW, flagship
-
-
-def _attested_names() -> set:
-    """Union of query names in every committed CORRECTNESS_r*.json —
-    the driver's own attestation record."""
-    import glob
-    import json
-    import os
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    names: set = set()
-    records = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    assert records, "no CORRECTNESS_r*.json committed"
-    for f in records:
-        names |= set(json.load(open(f)).keys())
-    return names
-
-
-def test_rotation_self_proving():
-    """r10 verdict ask #3 — the rotation must prove itself: every
-    non-sentinel window slot is drawn from the never-driver-attested
-    set (computed from the committed CORRECTNESS_r*.json records, no
-    judge arithmetic needed), and installing the window strictly
-    shrinks that set. A rotation that wastes slots on already-attested
-    names, or a sentinel list that silently grows, fails here."""
-    from nhs_data_pipeline_spark.queries import (
-        DRIVER_WINDOW,
-        DRIVER_WINDOW_SENTINELS,
-        QUERIES,
-    )
-
-    attested = _attested_names()
-    never = set(QUERIES) - attested
-    new_faces = [n for n in DRIVER_WINDOW if n not in DRIVER_WINDOW_SENTINELS]
-    stale = [n for n in new_faces if n in attested]
-    assert not stale, (
-        f"window slots burned on already-attested names: {stale}"
-    )
-    # sentinels must be genuinely attested (a typo'd sentinel would
-    # otherwise hide a wasted slot)
-    fake_sentinels = [
-        n for n in DRIVER_WINDOW_SENTINELS if n not in attested
-    ]
-    assert not fake_sentinels, fake_sentinels
-    # monotone drain: the window must strictly shrink the backlog
-    assert len(never - set(DRIVER_WINDOW)) < len(never), (
-        "window drains nothing from the never-attested backlog"
-    )
-
-
 def test_registry_size_tripwire():
     """Exactly the expected number of registered queries/oracles — a
     registry-touching edit once silently DELETED four registrations
-    (a str.replace meant for the DRIVER_WINDOW list also matched the
+    (a str.replace meant for a list of query names also matched the
     @query sites) and every gate stayed green on the remainder. Bump
     these numbers deliberately when adding queries; never let them
     drift."""
@@ -406,6 +312,17 @@ def test_registry_size_tripwire():
     # carries a SQL oracle.
     assert len(QUERIES) == 254, len(QUERIES)
     assert len(ORACLES) == 254, len(ORACLES)
+
+
+def test_driver_contract(spark):
+    """__spark_entry__ is the engine's external surface: entry() is a
+    runnable smoke query, queries() is the whole registry in
+    registration order, and every query has a DuckDB oracle."""
+    import __spark_entry__ as E
+
+    assert E.entry(spark).count() >= 1
+    assert list(E.queries()) == list(QUERIES)
+    assert set(E.oracle_sql()) == set(E.queries())
 
 
 def test_readme_registry_tallies_match():
@@ -927,8 +844,8 @@ def test_registry_no_unaudited_global_sort_windows(registry_frames):
         # probe already broadcast — no new memory assumption. Entry is
         # PREEMPTIVE: the registered plan is localCheckpoint-truncated,
         # so this documents the pre-checkpoint lineage (the r11 ADVICE
-        # convention); the isolated verify plan is committed under
-        # plans/r12/.
+        # convention); the isolated verify plan was committed under
+        # plans/r12/, which git history keeps at commit bcd8a05.
         "dedup_weighted_jaccard_join",
         # r12: the same dense vocabulary-ordinal window in the
         # LSH/blocked-candidate verify (llm/dedup.jaccard_pairs):
