@@ -380,21 +380,21 @@ def read_messy_excel_multi(
     """S6 — multi-sheet union scan: every sheet whose name matches
     ``sheet_regex`` goes through the S5 treatment, then union-by-name
     with NULL fill (era-variant sheets differ in columns); a
-    ``_source_sheet`` column records provenance."""
-    from nhs_data_pipeline_spark.ops.core import union_by_name
-
+    ``_source_sheet`` column records provenance. The harmonised sheets
+    are shipped to Spark in one transfer."""
     sheet_names = _excel_sheet_names(path)
     matches = [s for s in sheet_names if re.search(sheet_regex, s, re.I)]
     if not matches:
         raise ValueError(f"no sheet matches {sheet_regex!r} in {path}")
-    parts = [
-        read_messy_excel(
-            spark, path, sheet=s, skip=skip, header=header,
-            marker=marker, na_tokens=na_tokens,
-        ).withColumn("_source_sheet", F.lit(s))
+    pdfs = [
+        _harmonize(
+            _apply_header(_excel_raw_frame(path, s, skip), header, marker, path),
+            path,
+            na_tokens,
+        ).assign(_source_sheet=s)
         for s in matches
     ]
-    return union_by_name(parts)
+    return _to_spark(spark, pdfs)
 
 
 def with_filename_metadata(df: DataFrame, col: str = "_source_file") -> DataFrame:

@@ -220,6 +220,18 @@ def enrich_stream(
     return events.join(F.broadcast(cols), key, how)
 
 
+def _run_catch_up(rows: DataFrame, process, checkpoint: str):
+    """Start ``process`` as the foreachBatch sink of ``rows`` under
+    ``checkpoint`` with the availableNow trigger (runs to catch-up,
+    then stops). Returns the started StreamingQuery."""
+    return (
+        rows.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def dedup_stream_against_store(
     docs: DataFrame,
     store_path: str,
@@ -279,13 +291,7 @@ def dedup_stream_against_store(
         survivors.select("fp").write.mode("append").parquet(store_path)
         survivors.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
+    return _run_catch_up(docs, _process, checkpoint)
 
 
 def near_dedup_stream_against_store(
@@ -381,12 +387,7 @@ def near_dedup_stream_against_store(
         bands_df.unpersist()
         batch.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_catch_up(docs, _process, checkpoint)
 
 
 def _load_guarded_store(
@@ -399,9 +400,9 @@ def _load_guarded_store(
     past ``last_batch_id`` (batch ids are only monotonic within one
     checkpoint; an unkeyed guard would drop a fresh checkpoint's first
     batches as "replays"). Returns ``(old_df_without_guard_cols | None,
-    is_replay)``. Shared by every non-idempotent store maintainer
-    (XOR fingerprints, count-min cells) — ONE definition so their
-    replay semantics can never drift."""
+    is_replay)``. Called only by :func:`_fold_into_store`, which every
+    store maintainer goes through — ONE definition so their replay
+    semantics can never drift."""
     old = _read_store_or_none(spark, store_path)
     if old is None:
         # mid-swap crash window: the store was renamed aside but the
@@ -453,6 +454,49 @@ def _swap_store(
     shutil.rmtree(bak, ignore_errors=True)
 
 
+def _fold_into_store(
+    rows: DataFrame, store_path: str, checkpoint: str, fold, after=None
+):
+    """Run the guarded-store protocol over ``rows``: per micro-batch,
+    read the store through the replay guard (a replay returns at
+    once), swap in ``fold(batch_df, old)`` (``old`` is None on the
+    first batch), then call ``after(spark, batch_id)`` if given. The
+    stream identity is resolved once per query, on its first batch:
+    the checkpoint's query id is fixed for the query's lifetime.
+    Returns the started StreamingQuery (availableNow trigger)."""
+    stream_key = None
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal stream_key
+        spark = batch_df.sparkSession
+        if stream_key is None:
+            stream_key = _stream_identity(checkpoint, spark)
+        old, is_replay = _load_guarded_store(spark, store_path, stream_key, batch_id)
+        if is_replay:
+            return  # replayed batch: already folded into the store
+        _swap_store(fold(batch_df, old), store_path, batch_id, stream_key)
+        if after is not None:
+            after(spark, batch_id)
+
+    return _run_catch_up(rows, _process, checkpoint)
+
+
+def _merge_fold(build, merge):
+    """The fold of every mergeable store: build the micro-batch's own
+    table, union it with the old store and re-aggregate with ``merge``
+    (the batch op's own merge, so store and batch semantics cannot
+    drift). Union + re-aggregation groups NULL keys together, which a
+    full-outer join on ``==`` never does."""
+
+    def fold(batch_df: DataFrame, old: DataFrame | None) -> DataFrame:
+        new = build(batch_df)
+        if old is None:
+            return new
+        return merge(new.unionByName(old.select(*new.columns)))
+
+    return fold
+
+
 def fingerprint_stream_into_store(
     rows: DataFrame,
     store_path: str,
@@ -467,12 +511,14 @@ def fingerprint_stream_into_store(
     batch_n.
 
     Each micro-batch computes its own per-group (n_rows, fingerprint)
-    aggregate (one tiny shuffle over group keys), merges it with the
-    store via a full-outer coalescing join on the group keys, and
-    atomically swaps the store (write new -> replace). The store holds
-    one row per group — dimension-sized — so the full-outer merge's
-    two-sided shuffle (full outer cannot broadcast) moves only
-    group-cardinality rows, never the raw stream.
+    aggregate (one tiny shuffle over group keys), unions it with the
+    store and re-aggregates by ``sum(n_rows)`` and
+    ``bit_xor(content_fingerprint)`` per group, and atomically swaps
+    the store (write new -> replace). The store holds one row per
+    group — dimension-sized — so the re-aggregation's shuffle moves
+    only group-cardinality rows, never the raw stream; NULL group keys
+    merge into one row, exactly as a batch ``content_fingerprint``
+    over all rows groups them.
 
     Delivery: effectively exactly-once. foreachBatch is at-least-once,
     so a crash after the store swap but before the checkpoint commit
@@ -499,60 +545,14 @@ def fingerprint_stream_into_store(
     """
     from nhs_data_pipeline_spark.ops.quality import content_fingerprint
 
-    _ident_cache: dict[str, str] = {}
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # The checkpoint's query id is fixed for the query's lifetime:
-        # resolve it once, not once per micro-batch.
-        if "k" not in _ident_cache:
-            _ident_cache["k"] = _stream_identity(checkpoint, spark)
-        stream_key = _ident_cache["k"]
-        old, is_replay = _load_guarded_store(spark, store_path, stream_key, batch_id)
-        if is_replay:
-            return  # replayed batch: already folded into the store
-        batch_fp = content_fingerprint(batch_df, cols, group_by=group_by)
-        if old is None:
-            merged = batch_fp
-        else:
-            o = old.select(
-                *[F.col(k).alias(f"__o_{k}") for k in group_by],
-                F.col("n_rows").alias("__o_n"),
-                F.col("content_fingerprint").alias("__o_fp"),
-            )
-            cond = None
-            for k in group_by:
-                eq = F.col(k) == F.col(f"__o_{k}")
-                cond = eq if cond is None else cond & eq
-            # NOTE: full-outer equi-joins cannot broadcast (Spark
-            # ignores the hint); both sides shuffle on the group key —
-            # acceptable because both are dimension-sized aggregates
-            # (one row per group), never the raw stream.
-            merged = (
-                batch_fp.join(o, cond, "full_outer")
-                .select(
-                    *[
-                        F.coalesce(F.col(k), F.col(f"__o_{k}")).alias(k)
-                        for k in group_by
-                    ],
-                    (
-                        F.coalesce(F.col("n_rows"), F.lit(0))
-                        + F.coalesce(F.col("__o_n"), F.lit(0))
-                    ).alias("n_rows"),
-                    (
-                        F.coalesce(F.col("content_fingerprint"), F.lit(0))
-                        .bitwiseXOR(F.coalesce(F.col("__o_fp"), F.lit(0)))
-                    ).alias("content_fingerprint"),
-                )
-            )
-        _swap_store(merged, store_path, batch_id, stream_key)
-
-    return (
-        rows.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    fold = _merge_fold(
+        lambda b: content_fingerprint(b, cols, group_by=group_by),
+        lambda u: u.groupBy(*group_by).agg(
+            F.sum("n_rows").alias("n_rows"),
+            F.bit_xor("content_fingerprint").alias("content_fingerprint"),
+        ),
     )
+    return _fold_into_store(rows, store_path, checkpoint, fold)
 
 
 def cm_sketch_stream_into_store(
@@ -569,50 +569,22 @@ def cm_sketch_stream_into_store(
     old_cnt + batch_cnt per (row, bucket).
 
     Each micro-batch builds its own d*w sketch (ops/sketch.cm_sketch —
-    one tiny shuffle), merges it with the store via a full-outer
-    coalescing join on the cell key, and atomically swaps the store.
+    one tiny shuffle), unions it with the store and re-aggregates with
+    ``cm_merge`` (cell-wise addition), and atomically swaps the store.
     The store is d*w rows FOREVER, regardless of stream volume — the
     sketch property that makes unbounded-cardinality frequency state
     feasible where an exact per-key count table would grow without
     bound. Point-query it any time with ops/sketch.cm_estimate.
 
     Delivery: effectively exactly-once via the shared replay guard +
-    rename swap (``_load_guarded_store`` / ``_swap_store`` — cell
-    addition is NOT idempotent, so replayed batches must be skipped,
-    exactly like the XOR fingerprint store). availableNow trigger.
+    rename swap (``_fold_into_store`` — cell addition is NOT
+    idempotent, so replayed batches must be skipped, exactly like the
+    XOR fingerprint store). availableNow trigger.
     """
     from nhs_data_pipeline_spark.ops.sketch import cm_merge, cm_sketch
 
-    _ident_cache: dict[str, str] = {}
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if "k" not in _ident_cache:
-            _ident_cache["k"] = _stream_identity(checkpoint, spark)
-        stream_key = _ident_cache["k"]
-        old, is_replay = _load_guarded_store(
-            spark, store_path, stream_key, batch_id
-        )
-        if is_replay:
-            return
-        batch_sk = cm_sketch(batch_df, key_col, d=d, w=w)
-        if old is None:
-            merged = batch_sk
-        else:
-            # cm_merge owns the cell-addition semantics: union the two
-            # (<= d*w row) tables and re-aggregate — one tiny shuffle,
-            # no hand-rolled full-outer join to drift from the batch op
-            merged = cm_merge(
-                batch_sk.unionByName(old.select("row", "bucket", "cnt"))
-            )
-        _swap_store(merged, store_path, batch_id, stream_key)
-
-    return (
-        rows.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    fold = _merge_fold(lambda b: cm_sketch(b, key_col, d=d, w=w), cm_merge)
+    return _fold_into_store(rows, store_path, checkpoint, fold)
 
 
 def agg_stream_into_store(
@@ -638,49 +610,32 @@ def agg_stream_into_store(
     caller quantizes — the repo's decimal-cents discipline).
 
     Delivery: effectively exactly-once via the shared replay guard +
-    rename swap (``_load_guarded_store`` / ``_swap_store`` — count
-    addition is NOT idempotent, so replayed batches must be skipped,
-    exactly like the XOR fingerprint store). availableNow trigger.
+    rename swap (``_fold_into_store`` — count addition is NOT
+    idempotent, so replayed batches must be skipped, exactly like the
+    XOR fingerprint store). availableNow trigger.
     """
     from nhs_data_pipeline_spark.ops.merge import incremental_agg_merge
 
     sum_cols = sum_cols or {}
-    _ident_cache: dict[str, str] = {}
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if "k" not in _ident_cache:
-            _ident_cache["k"] = _stream_identity(checkpoint, spark)
-        stream_key = _ident_cache["k"]
-        old, is_replay = _load_guarded_store(
-            spark, store_path, stream_key, batch_id
-        )
-        if is_replay:
-            return
+    def fold(batch_df: DataFrame, old: DataFrame | None) -> DataFrame:
         if old is None:
-            merged = batch_df.groupBy(*keys).agg(
+            return batch_df.groupBy(*keys).agg(
                 F.count("*").cast("bigint").alias(count_col),
                 *[
                     F.sum(F.col(src)).cast("bigint").alias(dst)
                     for dst, src in sum_cols.items()
                 ],
             )
-        else:
-            merged = incremental_agg_merge(
-                old.select(*keys, count_col, *sum_cols.keys()),
-                batch_df.withColumn("__op", F.lit(1)),
-                keys,
-                count_col=count_col,
-                sum_cols=sum_cols,
-            )
-        _swap_store(merged, store_path, batch_id, stream_key)
+        return incremental_agg_merge(
+            old.select(*keys, count_col, *sum_cols.keys()),
+            batch_df.withColumn("__op", F.lit(1)),
+            keys,
+            count_col=count_col,
+            sum_cols=sum_cols,
+        )
 
-    return (
-        rows.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_into_store(rows, store_path, checkpoint, fold)
 
 
 def hll_stream_into_store(
@@ -702,36 +657,8 @@ def hll_stream_into_store(
     """
     from nhs_data_pipeline_spark.ops.sketch import hll_merge, hll_register_table
 
-    _ident_cache: dict[str, str] = {}
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if "k" not in _ident_cache:
-            _ident_cache["k"] = _stream_identity(checkpoint, spark)
-        stream_key = _ident_cache["k"]
-        old, is_replay = _load_guarded_store(
-            spark, store_path, stream_key, batch_id
-        )
-        if is_replay:
-            return
-        batch_reg = hll_register_table(batch_df, key_col, p=p)
-        if old is None:
-            merged = batch_reg
-        else:
-            # hll_merge owns the per-bucket MAX semantics (see the
-            # cm maintainer: union + re-aggregate, never a hand-rolled
-            # full-outer join)
-            merged = hll_merge(
-                batch_reg.unionByName(old.select("bucket", "rho"))
-            )
-        _swap_store(merged, store_path, batch_id, stream_key)
-
-    return (
-        rows.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    fold = _merge_fold(lambda b: hll_register_table(b, key_col, p=p), hll_merge)
+    return _fold_into_store(rows, store_path, checkpoint, fold)
 
 
 def histogram_stream_into_store(
@@ -758,48 +685,27 @@ def histogram_stream_into_store(
     not idempotent). availableNow trigger."""
     from nhs_data_pipeline_spark.ops.sketch import grid_bin, histogram_merge
 
-    _ident_cache: dict[str, str] = {}
     if not hi > lo:
         raise ValueError("hi must be > lo")
     if bins < 1:
         raise ValueError("bins must be >= 1")
+    v = F.col(value_col).cast("double")
+    # shared binning (ops/sketch.grid_bin): NaN -> NULL (excluded
+    # below), inf/overflow clamp BEFORE the int cast, bins
+    # validated — hand-rolled copies drifted (review finding)
+    bin_idx = grid_bin(v, F.lit(float(lo)), F.lit(float(hi)), bins)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if "k" not in _ident_cache:
-            _ident_cache["k"] = _stream_identity(checkpoint, spark)
-        stream_key = _ident_cache["k"]
-        old, is_replay = _load_guarded_store(
-            spark, store_path, stream_key, batch_id
-        )
-        if is_replay:
-            return
-        v = F.col(value_col).cast("double")
-        # shared binning (ops/sketch.grid_bin): NaN -> NULL (excluded
-        # below), inf/overflow clamp BEFORE the int cast, bins
-        # validated — hand-rolled copies drifted (review finding)
-        bin_idx = grid_bin(v, F.lit(float(lo)), F.lit(float(hi)), bins)
-        batch_h = (
+    def build(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.filter(v.isNotNull())
             .select(bin_idx.alias("bin"))
             .filter(F.col("bin").isNotNull())
             .groupBy("bin")
             .agg(F.count("*").alias("cnt"))
         )
-        if old is None:
-            merged = batch_h
-        else:
-            merged = histogram_merge(
-                batch_h.unionByName(old.select("bin", "cnt"))
-            )
-        _swap_store(merged, store_path, batch_id, stream_key)
 
-    return (
-        rows.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    fold = _merge_fold(build, histogram_merge)
+    return _fold_into_store(rows, store_path, checkpoint, fold)
 
 
 def bloom_stream_into_store(
@@ -823,35 +729,10 @@ def bloom_stream_into_store(
     """
     from nhs_data_pipeline_spark.ops.sketch import bloom_build, bloom_merge
 
-    _ident_cache: dict[str, str] = {}
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if "k" not in _ident_cache:
-            _ident_cache["k"] = _stream_identity(checkpoint, spark)
-        stream_key = _ident_cache["k"]
-        old, is_replay = _load_guarded_store(
-            spark, store_path, stream_key, batch_id
-        )
-        if is_replay:
-            return
-        batch_words = bloom_build(batch_df, key_col, k=k, m_bits=m_bits)
-        if old is None:
-            merged = batch_words
-        else:
-            # bloom_merge owns the word-wise OR semantics (union +
-            # re-aggregate, never a hand-rolled full-outer join)
-            merged = bloom_merge(
-                batch_words.unionByName(old.select("word_idx", "word"))
-            )
-        _swap_store(merged, store_path, batch_id, stream_key)
-
-    return (
-        rows.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    fold = _merge_fold(
+        lambda b: bloom_build(b, key_col, k=k, m_bits=m_bits), bloom_merge
     )
+    return _fold_into_store(rows, store_path, checkpoint, fold)
 
 
 def bitmap_stream_into_store(
@@ -870,33 +751,8 @@ def bitmap_stream_into_store(
     bitmaps from other shards. availableNow trigger."""
     from nhs_data_pipeline_spark.ops.sketch import bitmap_build, bitmap_merge
 
-    _ident_cache: dict[str, str] = {}
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if "k" not in _ident_cache:
-            _ident_cache["k"] = _stream_identity(checkpoint, spark)
-        stream_key = _ident_cache["k"]
-        old, is_replay = _load_guarded_store(
-            spark, store_path, stream_key, batch_id
-        )
-        if is_replay:
-            return
-        batch_words = bitmap_build(batch_df, key_col)
-        if old is None:
-            merged = batch_words
-        else:
-            merged = bitmap_merge(
-                batch_words.unionByName(old.select("word_idx", "word"))
-            )
-        _swap_store(merged, store_path, batch_id, stream_key)
-
-    return (
-        rows.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    fold = _merge_fold(lambda b: bitmap_build(b, key_col), bitmap_merge)
+    return _fold_into_store(rows, store_path, checkpoint, fold)
 
 
 def psi_stream_monitor(
@@ -932,19 +788,8 @@ def psi_stream_monitor(
     store). availableNow trigger."""
     from nhs_data_pipeline_spark.ops.analytics import psi_from_bucket_counts
 
-    _ident_cache: dict[str, str] = {}
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if "k" not in _ident_cache:
-            _ident_cache["k"] = _stream_identity(checkpoint, spark)
-        stream_key = _ident_cache["k"]
-        old, is_replay = _load_guarded_store(
-            spark, store_path, stream_key, batch_id
-        )
-        if is_replay:
-            return
-        batch_counts = (
+    def build(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.filter(F.col(value_int_col).isNotNull())
             .select(
                 F.expr(f"{value_int_col} div {int(bucket_width)}").alias("__b")
@@ -952,20 +797,11 @@ def psi_stream_monitor(
             .groupBy("__b")
             .agg(F.count("*").cast("bigint").alias("__cb"))
         )
-        if old is None:
-            merged = batch_counts
-        else:
-            # union+re-aggregate, like the other count stores: a full
-            # _ns_join kept only the LEFT key copy, so a bucket first
-            # seen after batch 1 landed as __b=NULL and later batches
-            # appended more NULL rows instead of accumulating (r8 fix).
-            merged = (
-                old.select("__b", "__cb")
-                .unionByName(batch_counts)
-                .groupBy("__b")
-                .agg(F.sum("__cb").cast("bigint").alias("__cb"))
-            )
-        _swap_store(merged, store_path, batch_id, stream_key)
+
+    def merge(counts: DataFrame) -> DataFrame:
+        return counts.groupBy("__b").agg(F.sum("__cb").cast("bigint").alias("__cb"))
+
+    def log_psi(spark: SparkSession, batch_id: int) -> None:
         cur = spark.read.parquet(store_path).select("__b", "__cb")
         psi_row = psi_from_bucket_counts(baseline_counts, cur).select(
             F.lit(batch_id).cast("bigint").alias("batch_id"),
@@ -976,9 +812,6 @@ def psi_stream_monitor(
         )
         psi_row.coalesce(1).write.mode("append").parquet(log_path)
 
-    return (
-        rows.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _fold_into_store(
+        rows, store_path, checkpoint, _merge_fold(build, merge), after=log_psi
     )

@@ -293,6 +293,25 @@ def test_read_messy_csv_narrow_preamble_row(spark, tmp_path):
     ]
 
 
+def test_read_messy_csv_bom_crlf_release_matches_plain(spark, tmp_path):
+    # one release, written plain (LF) and with a UTF-8 BOM + CRLF; the
+    # BOM lands on the header row, so it would prefix the first name
+    lines = ["Org Code,Org Name,Beds", "RX1,ONE,5", "RX2,TWO,-"]
+    plain, bom = tmp_path / "plain.csv", tmp_path / "bom.csv"
+    plain.write_bytes("\n".join(lines).encode() + b"\n")
+    bom.write_bytes(b"\xef\xbb\xbf" + "\r\n".join(lines).encode() + b"\r\n")
+    a, b = (read_messy_csv(spark, str(p), marker="Org Code") for p in (plain, bom))
+    assert a.columns == b.columns == [
+        "_row_idx", "_source_file", "org_code", "org_name", "beds",
+    ]
+    rows_a, rows_b = (
+        [r[:1] + r[2:] for r in d.orderBy("_row_idx").collect()] for d in (a, b)
+    )
+    assert rows_a == rows_b == [(0, "RX1", "ONE", "5"), (1, "RX2", "TWO", None)]
+    cells = b.columns + [v for r in b.collect() for v in r if isinstance(v, str)]
+    assert not any("\ufeff" in c or "\r" in c for c in cells)
+
+
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     import contextlib
     import io as _io

@@ -588,6 +588,9 @@ def test_fingerprint_store_recovers_from_mid_swap_state(spark, tmp_path):
     import os
     import shutil
 
+    from pyspark.sql import functions as F
+
+    from nhs_data_pipeline_spark.ops.quality import content_fingerprint
     from nhs_data_pipeline_spark.streaming.pipeline import (
         fingerprint_stream_into_store,
         stream_files,
@@ -602,7 +605,9 @@ def test_fingerprint_store_recovers_from_mid_swap_state(spark, tmp_path):
     store = str(tmp_path / "store")
 
     src1 = str(tmp_path / "s1")
-    spark.createDataFrame([("a", 1), ("a", 2)], schema).coalesce(1).write.parquet(src1)
+    spark.createDataFrame(
+        [("a", 1), ("a", 2), (None, 5)], schema
+    ).coalesce(1).write.parquet(src1)
     q = fingerprint_stream_into_store(
         stream_files(spark, src1, schema),
         store, str(tmp_path / "ck1"), cols=["k", "v"], group_by=["k"],
@@ -620,18 +625,26 @@ def test_fingerprint_store_recovers_from_mid_swap_state(spark, tmp_path):
     os.makedirs(store + ".batch99", exist_ok=True)
 
     src2 = str(tmp_path / "s2")
-    spark.createDataFrame([("a", 3), ("b", 4)], schema).coalesce(1).write.parquet(src2)
+    spark.createDataFrame(
+        [("a", 3), ("b", 4), (None, 6)], schema
+    ).coalesce(1).write.parquet(src2)
     q2 = fingerprint_stream_into_store(
         stream_files(spark, src2, schema),
         store, str(tmp_path / "ck2"), cols=["k", "v"], group_by=["k"],
     )
     q2.awaitTermination()
 
-    got = {
-        r.k: (r.n_rows, r.content_fingerprint)
-        for r in spark.read.parquet(store).collect()
-    }
+    stored = spark.read.parquet(store).collect()
+    got = {r.k: (r.n_rows, r.content_fingerprint) for r in stored}
     assert got["a"][0] == 3 and got["b"][0] == 1  # merged, not reset
+    # NULL group keys merge into one row, as the batch fingerprint
+    # of both sources groups them
+    assert [r.k for r in stored].count(None) == 1
+    both = spark.read.parquet(src1).unionByName(spark.read.parquet(src2))
+    want = content_fingerprint(both, ["k", "v"], group_by=["k"]).filter(
+        F.col("k").isNull()
+    ).first()
+    assert got[None] == (want.n_rows, want.content_fingerprint)
     assert not os.path.exists(store + ".old")  # recovery copy retired
     shutil.rmtree(store + ".batch99", ignore_errors=True)
 
@@ -968,7 +981,6 @@ def test_agg_stream_matches_batch_rebuild(spark, tmp_path):
     assert None in streamed  # NULL group survives the eqNullSafe merge
 
 
-@pytest.mark.slow
 def test_agg_stream_replay_guard(spark, tmp_path):
     """A re-delivered batch (cloned checkpoint, last commit marker
     removed) must NOT double-count into the aggregate store; a FRESH
