@@ -89,13 +89,12 @@ def overwrite_partitions(
     lands, the pipeline recomputes that (year, quarter) slice, and the
     sink rewrites one partition instead of 100 TB. Requires partitioned
     layout (see ``write_parquet(partition_by=...)``)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")  # this write only, not the session
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
     return path
 
 

@@ -21,7 +21,7 @@ Spark-first shape (100 TB design)
 - The winning pair is a TakeOrdered(1) broadcast-crossed back into
   the vocabulary — the merge itself never leaves the cluster and no
   driver round-trip is needed; the word table localCheckpoints per
-  round (the iterative-loop lineage rule, ops/graph.py).
+  round (the iterative-loop lineage rule, llm/cluster.kmeans_fit).
 
 Cross-engine determinism
 ------------------------

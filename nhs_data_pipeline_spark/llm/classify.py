@@ -73,12 +73,6 @@ def bucket_weight_millionths(bucket: Column) -> Column:
     return F.pmod(bucket * F.lit(_MIX) + F.lit(12345), F.lit(_RES + 1))
 
 
-def bucket_weight(bucket: Column) -> Column:
-    """The bucket weight itself, in [-0.5, 0.5] (for inspection /
-    export of the weight table; scoring sums the integer form)."""
-    return bucket_weight_millionths(bucket) / F.lit(float(_RES)) - F.lit(0.5)
-
-
 def linear_quality_scores(
     df: DataFrame,
     buckets: int = 1024,

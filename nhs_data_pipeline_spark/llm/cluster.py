@@ -16,7 +16,7 @@ Scale shape (100 TB): per iteration exactly ONE shuffle of (cid, dim,
 partial-sum) — the assign join is broadcast (k centroids are tiny by
 definition), the update aggregate combines map-side, and nothing ever
 returns to the driver. The centroid table is localCheckpointed per
-iteration (k rows — the iterative-loop lineage rule, see ops/graph.py).
+iteration (k rows): persist alone leaves the unrolled plan growing.
 
 Cross-engine determinism (how an iterative float algorithm stays
 hash-exact)

@@ -109,30 +109,6 @@ def char_shingles(text_col_name: str, k: int = 5, pre_normalized: bool = False) 
     )
 
 
-def char_shingle_hashes(
-    text_col_name: str, k: int = 5, sample_mod: int = 1, pre_normalized: bool = False
-) -> Column:
-    """Distinct xxhash64 values of character k-shingles, optionally
-    mod-``sample_mod`` sampled (Broder's shingle sampling: estimating
-    Jaccard over the hash-sampled shingle universe is unbiased).
-
-    The MinHash pipeline never needs the shingle *strings* — hashing
-    inline means array_distinct dedupes longs instead of strings and the
-    downstream explode carries 8-byte values; sampling divides the
-    signature aggregate's input by ``sample_mod``."""
-    if pre_normalized:
-        norm = text_col_name
-    else:
-        norm = f"trim(regexp_replace(lower({text_col_name}), '\\\\s+', ' '))"
-    grams = (
-        f"transform(sequence(1, greatest(length({norm}) - {k} + 1, 1)), "
-        f"i -> xxhash64(substring({norm}, i, {k})))"
-    )
-    if sample_mod > 1:
-        grams = f"filter({grams}, h -> pmod(h, {sample_mod}) = 0)"
-    return F.expr(f"array_distinct({grams})")
-
-
 def word_ngrams(text: Column | str, n: int = 3) -> Column:
     """Distinct word n-grams (space-joined) of normalized text."""
     c = text if isinstance(text, Column) else F.col(text)
@@ -143,45 +119,6 @@ def word_ngrams(text: Column | str, n: int = 3) -> Column:
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         )
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    shingles: Column,
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signatures: for each document, ``num_hashes`` min-values
-    of universal hashes ``(a*h + b) mod p`` over the shingle set's
-    xxhash64 values. Deterministic in ``seed``.
-
-    Shape: explode shingles -> hash each shingle ONCE -> one hash
-    aggregate with ``num_hashes`` min() expressions (map-side partials;
-    the shuffle carries num_hashes longs per doc, never the shingles).
-    Two rejected alternatives, both measured slower at sf0.1:
-    nested array-lambda per-row signatures (interpreted, no CSE — 8x
-    slower) and one-permutation hashing with densification (the extra
-    collect_list shuffle + interpreted map probes cost more than the
-    64 vectorized min-aggs save).
-    Docs with zero shingles produce no signature row (empty-set
-    semantics). Returns ``(id_col, sig: array<bigint>)``."""
-    coeffs = minhash_coeffs(num_hashes, seed)
-    exploded = df.select(F.col(id_col), F.explode(shingles).alias("__s"))
-    if dict(exploded.dtypes)["__s"] == "bigint":  # pre-hashed shingles
-        exploded = exploded.withColumn("__h", F.pmod("__s", F.lit(_MERSENNE)))
-    else:
-        exploded = exploded.withColumn("__h", F.pmod(F.xxhash64("__s"), F.lit(_MERSENNE)))
-    mins = exploded.groupBy(id_col).agg(
-        *[
-            F.min(F.pmod(a * F.col("__h") + b, F.lit(_MERSENNE))).alias(f"__m{j}")
-            for j, (a, b) in enumerate(coeffs)
-        ]
-    )
-    return mins.select(
-        F.col(id_col), F.array(*[f"__m{j}" for j in range(num_hashes)]).alias("sig")
-    )
-
 
 
 def _signature_cols(hashes_df: DataFrame, id_col: str, num_hashes: int, seed: int) -> DataFrame:

@@ -105,21 +105,6 @@ def _make_signature_udf(planes: list[list[float]]):
     return signature
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def with_cosine(df: DataFrame, a: str, b: str, out: str = "cosine") -> DataFrame:
-    """Cosine similarity between two double-array columns; NULL when
-    either norm is 0."""
-    av, bv = F.col(a), F.col(b)
-    na, nb = _norm(av), _norm(bv)
-    return df.withColumn(
-        out,
-        F.when((na == 0) | (nb == 0), F.lit(None)).otherwise(_dot(av, bv) / (na * nb)),
-    )
-
-
 def _as_double(df: DataFrame, vec: str) -> DataFrame:
     return df.withColumn(vec, F.col(vec).cast("array<double>"))
 
@@ -184,26 +169,6 @@ def _nested_array_lit(rows: list[list[float]]) -> Column:
     exactly."""
     return F.expr(
         "array(" + ",".join("array(" + ",".join(repr(w) for w in r) + ")" for r in rows) + ")"
-    )
-
-
-def signature_bits(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit signature of ``vec`` against fixed hyperplanes, packed
-    into a long (bit i = sign of dot with plane i). Native expressions
-    only: one nested-array literal for the planes, a ``transform`` for
-    the dots, and a struct-accumulator ``aggregate`` (running weight
-    2^i) to pack the bits — constant-size expression tree regardless
-    of plane count."""
-    dots = F.transform(_nested_array_lit(planes), lambda p: _dot(vec, p))
-    acc0 = F.struct(F.lit(0).cast("long").alias("s"), F.lit(1).cast("long").alias("w"))
-    return F.aggregate(
-        dots,
-        acc0,
-        lambda a, d: F.struct(
-            (a["s"] + F.when(d > 0, a["w"]).otherwise(F.lit(0).cast("long"))).alias("s"),
-            (a["w"] * F.lit(2).cast("long")).alias("w"),
-        ),
-        lambda a: a["s"],
     )
 
 

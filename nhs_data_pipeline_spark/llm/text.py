@@ -266,17 +266,6 @@ def rolling_hash_fingerprint(text_col_name: str, window: int = 8) -> Column:
 # Repetition metrics (Gopher-style quality filters, Rae et al. 2021 A1.2)
 # ---------------------------------------------------------------------------
 
-def word_ngrams_all(text: Column | str, n: int) -> Column:
-    """ALL word n-grams (space-joined, duplicates kept — counts matter
-    for repetition metrics, unlike the dedup path's distinct sets)."""
-    c = _c(text)
-    toks = F.split(normalize_text(c), " ")
-    return F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-
-
 def repetition_metrics(
     df, text_col: str = "text", id_col: str = "doc_id", ns: tuple = (1, 2, 3)
 ):

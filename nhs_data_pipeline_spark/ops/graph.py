@@ -1,84 +1,43 @@
-"""Iterative graph analytics: weighted PageRank over an edge table.
+"""Iterative graph analytics over a ``(src, dst, weight)`` edge table.
 
 The org-change subsystem already ships one iterative-closure algorithm
 (orgchange/closure.py — successor chains). This module adds the other
-canonical iterative graph primitive a data-curation stack needs:
-*link-analysis centrality*. Public pipelines use PageRank-family
-scores over hyperlink graphs (Common Crawl's harmonic-centrality
-ranking) to up-weight well-linked sources; the same operator ranks any
-``(src, dst, weight)`` edge table — citation graphs, org-successor
+canonical iterative graph primitives a data-curation stack needs:
+link-analysis centrality (PageRank, HITS), communities (label
+propagation), shortest paths, k-core peeling and triangle counts. The
+same operators rank any edge table — citation graphs, org-successor
 graphs, near-duplicate clusters.
 
-Spark-first shape (100 TB design)
----------------------------------
-- The graph stays a *distributed edge table*; ranks are a ``(node,
-  pr)`` table. One iteration = join(edges, ranks on src) ->
-  groupBy(dst) -> rejoin the node set. Nothing is ever collected to
-  the driver; a billion-edge graph iterates exactly like this 25-node
-  one.
-- Fixed iteration count (default 5): each iteration adds two shuffles
-  (join on src is co-partitioned with the previous groupBy; the
-  aggregate shuffles on dst). Each iteration's rank table is
-  ``localCheckpoint``ed (lazy) + count()-materialized — same
-  discipline as orgchange/closure.py. A plain persist is NOT enough
-  here: it caches data but leaves the unrolled logical plan in place,
-  so per-iteration Catalyst analysis cost compounds superlinearly
-  (measured: a 20-iteration loop crawled under persist, constant-time
-  under checkpoint).
-- Dangling nodes (no out-edges) contribute no redistributed mass
-  (the standard "ignore dangling mass" simplification — documented,
-  deterministic); nodes with no in-edges get the teleport term.
-
-Cross-engine determinism (opt-in)
----------------------------------
-In ``pagerank(deterministic=True)`` mode, per-edge contributions
-``pr(src) * w / outw(src)`` are IEEE-identical given identical inputs
-(integer weights, one division); the per-node sum folds contributions
-in *src order* via the sorted-array ``aggregate``, and each
-iteration's rank rounds to 9 decimals — so every iteration's rank
-table is bit-identical in any engine (DuckDB replays with
-``list_reduce(list(contrib ORDER BY src))``). The DEFAULT mode uses a
-plain partial-aggregating float sum instead: scale-safe on power-law
-hub nodes (no per-node in-edge array), at the cost of bit-stability —
-see the ``pagerank`` docstring for the full trade.
+The iterative operators run their rounds on the driver, as the
+succession closure does. Their graphs are keyed by a dimension of the
+data (the registry's nation x nation trade graphs have at most 625
+edges), and on graphs that small each synchronous Spark round is 2-3
+scheduled jobs of pure latency. So the corpus-scale edge aggregation
+stays a Catalyst plan; the aggregated edges are collected once under
+``_EDGE_CAP`` (a larger edge table is refused, never truncated); the
+rounds run as plain Python and the result is a small frame. Python
+floats are IEEE doubles, the float folds run in src (or dst) order
+from 0.0 and ``_round9`` is Spark's HALF_UP ``round``, so the DuckDB
+oracles replay every round bit for bit. ``triangle_count`` has no
+rounds and stays a Spark plan.
 """
 
 from __future__ import annotations
 
 from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DataType,
     DoubleType,
     LongType,
     StructField,
     StructType,
 )
 
-# ---------------------------------------------------------------------------
-# Bounded local-model iteration (r11 optimization)
-#
-# Every operator below defaults to the distributed loop — the billion-
-# edge plan. But several REGISTERED queries run these loops over
-# key-aggregated graphs whose size is bounded by a DIMENSION of the
-# data (nation x nation: <= 625 edges), where each synchronous round
-# costs 2-3 driver-scheduled shuffle jobs of pure latency (~0.5-0.7 s
-# per round at sf0.1 on local[32], constant in corpus size — measured
-# r11). For those callers the operators take ``local_model=True``: the
-# corpus-scale edge AGGREGATION stays a Catalyst plan, the aggregated
-# edge table collects once (guarded by ``local_edge_cap`` — the
-# collect is refused, loudly, above it), and the rounds run as plain
-# Python arithmetic on the driver. Python floats are IEEE doubles and
-# each local loop below replays the engine spelling exactly (same
-# contribution expressions, same src-ordered left folds from 0.0, and
-# ``_round9`` == Spark's BigDecimal-HALF_UP round — the r5 build-notes
-# replica rule), so results are bit-identical to the distributed mode;
-# the integer operators (label propagation, shortest paths, k-core)
-# need no float discipline at all. This is the measured-dispatch
-# pattern of llm/similarity.choose_topk: same results, physical
-# strategy chosen from what the caller knows about the data.
-# ---------------------------------------------------------------------------
+#: Most aggregated edges an operator collects to the driver.
+_EDGE_CAP = 1_000_000
 
 
 def _round9(x: float) -> float:
@@ -89,65 +48,44 @@ def _round9(x: float) -> float:
     )
 
 
-def _collect_edges(e: DataFrame, cap: int, op: str) -> list:
-    """Collect an aggregated edge table under a hard row cap. The
+def _collect_edges(e: DataFrame, op: str) -> list:
+    """Collect an edge table under ``_EDGE_CAP`` rows. The
     ``limit(cap + 1)`` probe bounds what the driver can ever pull; a
     capped result is a loud refusal, never a silent truncation."""
-    rows = e.limit(cap + 1).collect()
-    if len(rows) > cap:
+    rows = e.limit(_EDGE_CAP + 1).collect()
+    if len(rows) > _EDGE_CAP:
         raise RuntimeError(
-            f"{op}(local_model=True): aggregated edge table exceeds "
-            f"local_edge_cap={cap} rows; use the distributed mode "
-            "(local_model=False) for unbounded graphs"
+            f"{op}: edge table exceeds {_EDGE_CAP} rows; the graph "
+            "operators run on the driver and refuse larger graphs"
         )
     return rows
 
 
-def _edge_and_node_tables(
-    edges: DataFrame, src: str, dst: str, weight: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared preamble of the iterative ops: drop NULL-endpoint edges
-    (a NULL node silently falls out of the src equi-joins — the
-    build-notes NULL-key trap), pre-aggregate parallel edges, persist
-    both the edge and derived node tables (caller unpersists), and
-    materialize them. ONE definition so the two iterative operators'
-    edge policies can never drift apart."""
-    e = (
+def _aggregated_edges(
+    edges: DataFrame, src: str, dst: str, w: Column, op: str
+) -> tuple[dict, list, DataType]:
+    """Shared preamble of the weighted operators: drop NULL-endpoint
+    edges (a NULL is no node), aggregate parallel edges with ``w``,
+    collect, and sort the nodes. Returns ``({(u, v): w}, nodes, node
+    type)``."""
+    agg = (
         edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
         .groupBy(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .agg(F.sum(weight).alias("w"))
-        .persist()
+        .agg(w.alias("w"))
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    return e, nodes
+    ew = {(r["src"], r["dst"]): r["w"] for r in _collect_edges(agg, op)}
+    nodes = sorted({u for u, _ in ew} | {v for _, v in ew})
+    return ew, nodes, agg.schema["src"].dataType
 
 
-def _per_node_sums(contribs: DataFrame, deterministic: bool) -> DataFrame:
-    """Per-node contribution sums ``(node, __s)`` for one PageRank
-    round. Default: plain partial-aggregating ``F.sum`` — constant
-    aggregation buffers, hub-node safe. ``deterministic=True``: fold
-    in src order via ``sort_array(collect_list(...))`` — bit-stable
-    cross-engine, but materializes a node's full in-edge list in one
-    buffer (opt-in, verification scale only). Split out so the plan
-    contract (no collect_list in the default path) is testable."""
-    if not deterministic:
-        return contribs.groupBy("node").agg(F.sum("__c").alias("__s"))
-    return (
-        contribs.groupBy("node")
-        .agg(F.sort_array(F.collect_list(F.struct("src", "__c"))).alias("__st"))
-        .withColumn(
-            "__s",
-            F.expr(
-                "aggregate(transform(__st, __x -> __x.__c), "
-                "cast(0.0 as double), (__a, __b) -> __a + __b)"
-            ),
-        )
+def _node_frame(
+    spark, node_t: DataType, fields: list[tuple[str, DataType]], rows: list
+) -> DataFrame:
+    """The small ``(node, *fields)`` result frame."""
+    schema = StructType(
+        [StructField("node", node_t)] + [StructField(n, t) for n, t in fields]
     )
+    return spark.createDataFrame(rows, schema)
 
 
 def pagerank(
@@ -157,9 +95,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    deterministic: bool = False,
-    local_model: bool = False,
-    local_edge_cap: int = 1_000_000,
 ) -> DataFrame:
     """Weighted PageRank after ``iterations`` synchronous rounds:
     ``(node, pr)`` with uniform ``1/N`` initial ranks and
@@ -168,97 +103,37 @@ def pagerank(
                        pr(u) * w(u,v) / outw(u), 9)
 
     ``edges`` may carry parallel edges; they are pre-aggregated on
-    (src, dst).
-
-    Fold modes (the scale/determinism trade, explicit):
-
-    - ``deterministic=False`` (DEFAULT, scale-safe): per-node sums are
-      a plain partial-aggregating ``F.sum`` — constant-size
-      aggregation buffers, so a power-law hub node with 10^7 in-edges
-      costs nothing special. Float sums are then partition-order
-      dependent (not bit-stable across runs/engines), which is the
-      correct default for a 100 TB hyperlink graph.
-    - ``deterministic=True`` (oracle/replay mode): contributions fold
-      in ``u`` order via ``sort_array(collect_list(...))`` — bit-
-      reproducible in any engine (module docstring), but the per-node
-      array materializes ALL in-edges of a node in one aggregation
-      buffer: an executor OOM on hub nodes at scale. Opt in only for
-      cross-engine replay at verification scale.
-
-    ``local_model=True`` (bounded graphs only — module docstring):
-    collect the aggregated edges and run the rounds on the driver,
-    replaying the deterministic fold bit-exactly; identical results,
-    none of the per-round job latency.
+    (src, dst). Each node's sum folds its contributions in ``u`` order
+    (the oracle's ``list(c ORDER BY src)``). Dangling nodes (no
+    out-edges) redistribute no mass (the standard simplification);
+    nodes with no in-edges get the teleport term.
     """
-    if local_model:
-        agg = (
-            edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-            .groupBy(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .agg(F.sum(weight).alias("w"))
-        )
-        rows = _collect_edges(agg, local_edge_cap, "pagerank")
-        ew = {(r["src"], r["dst"]): r["w"] for r in rows}
-        nodes_l = sorted({u for u, _ in ew} | {v for _, v in ew})
-        outw = {}
-        for (u, _v), w in ew.items():
-            outw[u] = outw.get(u, 0) + w
-        inn: dict = {v: [] for v in nodes_l}
-        for (u, v) in ew:
-            inn[v].append(u)
-        for v in inn:
-            inn[v].sort()  # the src-ordered fold key
-        n = len(nodes_l)
-        teleport = (1.0 - damping) / n
-        pr = {v: 1.0 / n for v in nodes_l}
-        for _ in range(iterations):
-            new = {}
-            for v in nodes_l:
-                acc = 0.0
-                for u in inn[v]:
-                    acc = acc + pr[u] * ew[(u, v)] / outw[u]
-                new[v] = _round9(teleport + damping * acc)
-            pr = new
-        node_t = agg.schema["src"].dataType
-        schema = StructType(
-            [StructField("node", node_t), StructField("pr", DoubleType())]
-        )
-        return edges.sparkSession.createDataFrame(
-            [(v, pr[v]) for v in nodes_l], schema
-        )
-
-    e, nodes = _edge_and_node_tables(edges, src, dst, weight)
-    outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    n = nodes.count()  # also materializes the persists above
-    teleport = F.lit((1.0 - damping) / n)
-
-    ranks = nodes.withColumn("pr", F.lit(1.0 / n))
+    ew, nodes, node_t = _aggregated_edges(
+        edges, src, dst, F.sum(weight), "pagerank"
+    )
+    outw: dict = {}
+    for (u, _v), w in ew.items():
+        outw[u] = outw.get(u, 0) + w
+    inn: dict = {v: [] for v in nodes}
+    for (u, v) in ew:
+        inn[v].append(u)
+    for v in inn:
+        inn[v].sort()  # the src-ordered fold key
+    n = len(nodes)
+    teleport = (1.0 - damping) / n
+    pr = {v: 1.0 / n for v in nodes}
     for _ in range(iterations):
-        contribs = (
-            e.join(outw, "src")
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                "src",
-                (F.col("pr") * F.col("w") / F.col("ow")).alias("__c"),
-            )
-        )
-        summed = _per_node_sums(contribs, deterministic)
-        ranks = (
-            nodes.join(summed.select("node", "__s"), "node", "left")
-            .select(
-                "node",
-                F.round(
-                    teleport + F.lit(damping) * F.coalesce("__s", F.lit(0.0)), 9
-                ).alias("pr"),
-            )
-            # truncate the unrolled plan each round (module docstring);
-            # the count() materializes the checkpoint
-            .localCheckpoint(eager=False)
-        )
-        ranks.count()
-    e.unpersist()
-    nodes.unpersist()
-    return ranks
+        new = {}
+        for v in nodes:
+            acc = 0.0
+            for u in inn[v]:
+                acc = acc + pr[u] * ew[(u, v)] / outw[u]
+            new[v] = _round9(teleport + damping * acc)
+        pr = new
+    return _node_frame(
+        edges.sparkSession, node_t, [("pr", DoubleType())],
+        [(v, pr[v]) for v in nodes],
+    )
 
 
 def label_propagation(
@@ -267,8 +142,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    local_model: bool = False,
-    local_edge_cap: int = 1_000_000,
 ) -> DataFrame:
     """Synchronous weighted label propagation (community detection):
     every node starts in its own community (label = node id); each
@@ -278,81 +151,32 @@ def label_propagation(
 
     Deterministic by construction — labels and weights are integers,
     the argmax tie-breaks totally, and rounds are synchronous — so the
-    result is identical on any engine/partitioning (no float anywhere;
-    the oracle needs no rounding discipline at all). Communities over
-    a near-duplicate pair graph give dedup clusters with locality
+    oracle needs no rounding discipline at all. Communities over a
+    near-duplicate pair graph give dedup clusters with locality
     (denser than connected components); over a link graph, topical
-    domains.
-
-    Scale shape mirrors :func:`pagerank`: the graph stays an edge
-    table, one round = join(labels on src) -> groupBy(dst, label) ->
-    per-node argmax, labels localCheckpoint per round (the
-    iterative-loop lineage rule). Pass a symmetrized edge table for
-    undirected semantics. NULL endpoints are dropped like pagerank's.
-
-    ``local_model=True`` (bounded graphs only — module docstring):
-    all-integer rounds on the collected aggregated edges — identical
-    labels (the argmax tie-breaks totally; no float anywhere).
+    domains. Pass a symmetrized edge table for undirected semantics.
+    NULL endpoints are dropped like pagerank's.
     """
-    if local_model:
-        agg = (
-            edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-            .groupBy(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .agg(F.sum(weight).alias("w"))
-        )
-        rows = _collect_edges(agg, local_edge_cap, "label_propagation")
-        ew = {(r["src"], r["dst"]): r["w"] for r in rows}
-        nodes_l = sorted({u for u, _ in ew} | {v for _, v in ew})
-        labels = {v: v for v in nodes_l}
-        for _ in range(iterations):
-            wt: dict = {}
-            for (u, v), w in ew.items():
-                key = (v, labels[u])
-                wt[key] = wt.get(key, 0) + w
-            best: dict = {}
-            for (v, lb), w in wt.items():
-                cur = best.get(v)
-                # argmax by (weight desc, label asc) — total order
-                if cur is None or (-w, lb) < (-cur[0], cur[1]):
-                    best[v] = (w, lb)
-            labels = {
-                v: (best[v][1] if v in best else labels[v]) for v in nodes_l
-            }
-        node_t = agg.schema["src"].dataType
-        schema = StructType(
-            [StructField("node", node_t), StructField("label", node_t)]
-        )
-        return edges.sparkSession.createDataFrame(
-            [(v, labels[v]) for v in nodes_l], schema
-        )
-
-    e, nodes = _edge_and_node_tables(edges, src, dst, weight)
-    nodes.count()
-    labels = nodes.withColumn("label", F.col("node"))
+    ew, nodes, node_t = _aggregated_edges(
+        edges, src, dst, F.sum(weight), "label_propagation"
+    )
+    labels = {v: v for v in nodes}
     for _ in range(iterations):
-        w_in = (
-            e.join(labels.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"), "label")
-            .agg(F.sum("w").alias("__wt"))
-        )
-        win = Window.partitionBy("node").orderBy(
-            F.desc("__wt"), F.asc("label")
-        )
-        best = (
-            w_in.withColumn("__rk", F.row_number().over(win))
-            .filter(F.col("__rk") == 1)
-            .select("node", F.col("label").alias("__new"))
-        )
-        labels = (
-            nodes.join(best, "node", "left")
-            .join(labels.withColumnRenamed("label", "__old"), "node")
-            .select("node", F.coalesce("__new", "__old").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        labels.count()
-    e.unpersist()
-    nodes.unpersist()
-    return labels
+        wt: dict = {}
+        for (u, v), w in ew.items():
+            key = (v, labels[u])
+            wt[key] = wt.get(key, 0) + w
+        best: dict = {}
+        for (v, lb), w in wt.items():
+            cur = best.get(v)
+            # argmax by (weight desc, label asc) — total order
+            if cur is None or (-w, lb) < (-cur[0], cur[1]):
+                best[v] = (w, lb)
+        labels = {v: (best[v][1] if v in best else labels[v]) for v in nodes}
+    return _node_frame(
+        edges.sparkSession, node_t, [("label", node_t)],
+        [(v, labels[v]) for v in nodes],
+    )
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -421,97 +245,41 @@ def shortest_paths(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    local_model: bool = False,
-    local_edge_cap: int = 1_000_000,
 ) -> DataFrame:
     """Single-source (or multi-source) shortest path distances after
     ``iterations`` synchronous Bellman-Ford rounds: ``(node, dist)``
     with ``dist = NULL`` for nodes not reached within the round
     budget. ``sources`` is a one-column (``node``) DataFrame; source
     distance is 0. Weights must be non-negative integers — every
-    relaxation is then exact integer arithmetic and the converged
-    distances are engine- and partitioning-independent with zero
-    float discipline (the label-propagation property).
+    relaxation is then exact integer arithmetic with zero float
+    discipline (the label-propagation property).
 
-    One round = join(dist on src) -> per-dst MIN -> union-min with the
-    standing distances; the graph stays a distributed edge table and
-    the distance table is node-sized. ``iterations`` bounds the
-    explored hop depth (Bellman-Ford guarantees convergence at
-    diameter rounds); each round localCheckpoints — the iterative-loop
-    lineage rule. Parallel edges pre-aggregate to their MINIMUM weight
-    (cheapest link is the only one shortest paths can use), NULL
-    endpoints drop as in :func:`pagerank`.
-
-    ``local_model=True`` (bounded graphs only — module docstring):
-    all-integer synchronous relaxations on the collected aggregated
-    edges — identical distances (no float anywhere)."""
-    if local_model:
-        agg = (
-            edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-            .groupBy(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .agg(F.min(weight).cast("bigint").alias("w"))
-        )
-        rows = _collect_edges(agg, local_edge_cap, "shortest_paths")
-        ew = {(r["src"], r["dst"]): r["w"] for r in rows}
-        nodes_l = sorted({u for u, _ in ew} | {v for _, v in ew})
-        src_rows = _collect_edges(
-            sources.select("node").distinct(), local_edge_cap,
-            "shortest_paths(sources)",
-        )
-        srcs_set = {r["node"] for r in src_rows}
-        dist: dict = {v: (0 if v in srcs_set else None) for v in nodes_l}
-        for _ in range(iterations):
-            new = dict(dist)
-            for (u, v), w in ew.items():
-                if dist[u] is not None:
-                    c = dist[u] + w
-                    if new[v] is None or c < new[v]:
-                        new[v] = c
-            dist = new
-        node_t = agg.schema["src"].dataType
-        schema = StructType(
-            [StructField("node", node_t), StructField("dist", LongType())]
-        )
-        return edges.sparkSession.createDataFrame(
-            [(v, dist[v]) for v in nodes_l], schema
-        )
-
-    e = (
-        edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .groupBy(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .agg(F.min(weight).cast("bigint").alias("w"))
-        .persist()
+    ``iterations`` bounds the explored hop depth (Bellman-Ford
+    converges in diameter rounds). Parallel edges pre-aggregate to
+    their MINIMUM weight (the cheapest link is the only one shortest
+    paths can use); NULL endpoints drop as in :func:`pagerank`."""
+    ew, nodes, node_t = _aggregated_edges(
+        edges, src, dst, F.min(weight).cast("bigint"), "shortest_paths"
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    nodes.count()
-    dist = nodes.join(
-        sources.select(F.col("node")).distinct().withColumn("__s", F.lit(0).cast("bigint")),
-        "node",
-        "left",
-    ).select("node", F.col("__s").alias("dist"))
+    srcs = {
+        r["node"]
+        for r in _collect_edges(
+            sources.select("node").distinct(), "shortest_paths(sources)"
+        )
+    }
+    dist: dict = {v: (0 if v in srcs else None) for v in nodes}
     for _ in range(iterations):
-        cand = (
-            e.join(
-                dist.filter(F.col("dist").isNotNull()).withColumnRenamed("node", "src"),
-                "src",
-            )
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        dist.count()
-    e.unpersist()
-    nodes.unpersist()
-    return dist
+        new = dict(dist)
+        for (u, v), w in ew.items():
+            if dist[u] is not None:
+                c = dist[u] + w
+                if new[v] is None or c < new[v]:
+                    new[v] = c
+        dist = new
+    return _node_frame(
+        edges.sparkSession, node_t, [("dist", LongType())],
+        [(v, dist[v]) for v in nodes],
+    )
 
 
 def kcore(
@@ -520,8 +288,6 @@ def kcore(
     rounds: int,
     src: str = "src",
     dst: str = "dst",
-    local_model: bool = False,
-    local_edge_cap: int = 1_000_000,
 ) -> DataFrame:
     """Iterative k-core peeling over an undirected edge table:
     repeatedly drop nodes whose *current* degree is below ``k`` (and
@@ -535,73 +301,31 @@ def kcore(
     reachability), re-expressed as degree peeling.
 
     ``edges`` must already be symmetrized (both directions present)
-    and deduplicated — degree is then ``COUNT(*)`` grouped by ``src``.
-    ``k_table`` is a ONE-ROW DataFrame with a BIGINT column ``k``: the
-    threshold stays in-plan (broadcast-crossed into the degree filter)
-    so oracles derive it from the data themselves — never a driver
-    literal (the build-notes magnitude-coupling rule).
-
-    100 TB design: the graph stays a distributed edge table; one round
-    = degree aggregate (map-side combined) + two semi-joins on the
-    surviving-node table, all shuffling on the node key. ``rounds``
+    and deduplicated — degree is then the row count per ``src``
+    (multiplicity is kept, not aggregated). ``k_table`` is a ONE-ROW
+    DataFrame with a BIGINT column ``k``, so callers derive the
+    threshold from the data in their own plan — never a driver
+    literal (the build-notes magnitude-coupling rule). ``rounds``
     bounds the peel depth; a converged graph passes through later
     rounds unchanged, and the unrolled oracle replays the SAME fixed
-    rounds, converged or not — all-integer decisions, zero float
-    discipline. Each round ``localCheckpoint``s the edge table (the
-    iterative-loop lineage rule; plain persist leaves compounding
-    Catalyst analysis cost).
-
-    ``local_model=True`` (bounded graphs only — module docstring):
-    all-integer peeling on the collected edge list (multiplicity
-    preserved — degree is a row count, exactly as the distributed
-    aggregate sees it); ``k`` still derives from the data via the
-    one-row ``k_table`` collect — identical cores."""
-    if local_model:
-        filt = edges.filter(
-            F.col(src).isNotNull() & F.col(dst).isNotNull()
-        ).select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        e_l = [
-            (r["src"], r["dst"])
-            for r in _collect_edges(filt, local_edge_cap, "kcore")
-        ]
-        k = k_table.collect()[0]["k"]
-        for _ in range(rounds):
-            deg: dict = {}
-            for u, _v in e_l:
-                deg[u] = deg.get(u, 0) + 1
-            alive = {u for u, d in deg.items() if d >= k}
-            e_l = [(u, v) for (u, v) in e_l if u in alive and v in alive]
-        core: dict = {}
-        for u, _v in e_l:
-            core[u] = core.get(u, 0) + 1
-        node_t = filt.schema["src"].dataType
-        schema = StructType(
-            [StructField("node", node_t), StructField("core_deg", LongType())]
-        )
-        return edges.sparkSession.createDataFrame(
-            sorted(core.items()), schema
-        )
-
-    e = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull()).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    )
-    kt = F.broadcast(k_table)
+    rounds, converged or not — all-integer decisions."""
+    filt = edges.filter(
+        F.col(src).isNotNull() & F.col(dst).isNotNull()
+    ).select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e_l = [(r["src"], r["dst"]) for r in _collect_edges(filt, "kcore")]
+    k = k_table.collect()[0]["k"]
     for _ in range(rounds):
-        deg = e.groupBy("src").agg(F.count("*").alias("__deg"))
-        alive = (
-            deg.crossJoin(kt)
-            .filter(F.col("__deg") >= F.col("k"))
-            .select(F.col("src").alias("node"))
-        )
-        e = (
-            e.join(alive.withColumnRenamed("node", "src"), "src", "semi")
-            .join(alive.withColumnRenamed("node", "dst"), "dst", "semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
-        )
-        e.count()
-    return e.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("bigint").alias("core_deg")
+        deg: dict = {}
+        for u, _v in e_l:
+            deg[u] = deg.get(u, 0) + 1
+        alive = {u for u, d in deg.items() if d >= k}
+        e_l = [(u, v) for (u, v) in e_l if u in alive and v in alive]
+    core: dict = {}
+    for u, _v in e_l:
+        core[u] = core.get(u, 0) + 1
+    return _node_frame(
+        edges.sparkSession, filt.schema["src"].dataType,
+        [("core_deg", LongType())], sorted(core.items()),
     )
 
 
@@ -611,9 +335,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    deterministic: bool = False,
-    local_model: bool = False,
-    local_edge_cap: int = 1_000_000,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg, public) after
     ``iterations`` synchronous rounds: ``(node, hub, authority)``.
@@ -624,126 +345,47 @@ def hits(
 
     with all-ones initial hubs. L-infinity normalization (divide by
     the max) on purpose: ``max`` is ORDER-FREE over doubles, so the
-    normalizer is exact on any partitioning — an L2 norm's
-    sum-of-squares would be partition-order-dependent float addition
-    on top of the per-node sums (and converges to the same principal
-    eigenvector direction regardless).
+    oracle's normalizer needs no fold order — an L2 norm's
+    sum-of-squares would be one more ordered float fold (and converges
+    to the same principal eigenvector direction regardless).
 
-    Scale/determinism contract mirrors :func:`pagerank`: per-node sums
-    default to plain partial-aggregating ``F.sum`` (hub-node safe);
-    ``deterministic=True`` folds contributions in neighbor order via
-    ``sort_array(collect_list(...))`` for bit-exact cross-engine
-    replay at verification scale. Each round re-ranks off a
-    ``localCheckpoint`` so the unrolled plan never compounds
-    (module docstring); nodes with no in-edges (out-edges) hold
-    authority (hub) 0.
-
-    ``local_model=True`` (bounded graphs only — module docstring):
-    the deterministic neighbor-ordered folds replayed on the
-    collected aggregated edges — bit-identical scores, none of the
-    ~2 checkpoint jobs per round."""
-    if local_model:
-        agg = (
-            edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-            .groupBy(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .agg(F.sum(weight).alias("w"))
-        )
-        rows = _collect_edges(agg, local_edge_cap, "hits")
-        ew = {(r["src"], r["dst"]): r["w"] for r in rows}
-        nodes_l = sorted({u for u, _ in ew} | {v for _, v in ew})
-        inn: dict = {v: [] for v in nodes_l}
-        outn: dict = {u: [] for u in nodes_l}
-        for (u, v) in ew:
-            inn[v].append(u)
-            outn[u].append(v)
-        for v in nodes_l:
-            inn[v].sort()   # authority fold key: src order
-            outn[v].sort()  # hub fold key: dst order
-        h = {v: 1.0 for v in nodes_l}
-        a = {}
-        for _ in range(iterations):
-            s_a = {}
-            for v in nodes_l:
-                if inn[v]:
-                    acc = 0.0
-                    for u in inn[v]:
-                        acc = acc + h[u] * ew[(u, v)]
-                    s_a[v] = acc
-            m = max(s_a.values())
-            a = {v: _round9(s_a.get(v, 0.0) / m) for v in nodes_l}
-            s_h = {}
-            for u in nodes_l:
-                if outn[u]:
-                    acc = 0.0
-                    for v in outn[u]:
-                        acc = acc + a[v] * ew[(u, v)]
-                    s_h[u] = acc
-            m2 = max(s_h.values())
-            h = {u: _round9(s_h.get(u, 0.0) / m2) for u in nodes_l}
-        node_t = agg.schema["src"].dataType
-        schema = StructType(
-            [
-                StructField("node", node_t),
-                StructField("hub", DoubleType()),
-                StructField("authority", DoubleType()),
-            ]
-        )
-        return edges.sparkSession.createDataFrame(
-            [(v, h[v], a[v]) for v in nodes_l], schema
-        )
-
-    e, nodes = _edge_and_node_tables(edges, src, dst, weight)
-    nodes.count()
-    hubs = nodes.withColumn("h", F.lit(1.0))
-    auths = None
-    for _ in range(iterations):
-        a_contrib = (
-            e.join(hubs.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                "src",
-                (F.col("h") * F.col("w")).alias("__c"),
-            )
-        )
-        a_sum = _per_node_sums(a_contrib, deterministic)
-        a_max = a_sum.agg(F.max("__s").alias("__m"))
-        auths = (
-            nodes.join(a_sum.select("node", "__s"), "node", "left")
-            .crossJoin(F.broadcast(a_max))
-            .select(
-                "node",
-                F.round(
-                    F.coalesce("__s", F.lit(0.0)) / F.col("__m"), 9
-                ).alias("a"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        auths.count()
-        h_contrib = (
-            e.join(auths.withColumnRenamed("node", "dst"), "dst")
-            .select(
-                F.col("src").alias("node"),
-                F.col("dst").alias("src"),  # fold order key
-                (F.col("a") * F.col("w")).alias("__c"),
-            )
-        )
-        h_sum = _per_node_sums(h_contrib, deterministic)
-        h_max = h_sum.agg(F.max("__s").alias("__m"))
-        hubs = (
-            nodes.join(h_sum.select("node", "__s"), "node", "left")
-            .crossJoin(F.broadcast(h_max))
-            .select(
-                "node",
-                F.round(
-                    F.coalesce("__s", F.lit(0.0)) / F.col("__m"), 9
-                ).alias("h"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        hubs.count()
-    out = hubs.join(auths, "node").select(
-        "node", F.col("h").alias("hub"), F.col("a").alias("authority")
+    Authority sums fold in src order, hub sums in dst order (the
+    oracle's fold keys). Nodes with no in-edges (out-edges) hold
+    authority (hub) 0."""
+    ew, nodes, node_t = _aggregated_edges(
+        edges, src, dst, F.sum(weight), "hits"
     )
-    e.unpersist()
-    nodes.unpersist()
-    return out
+    inn: dict = {v: [] for v in nodes}
+    outn: dict = {u: [] for u in nodes}
+    for (u, v) in ew:
+        inn[v].append(u)
+        outn[u].append(v)
+    for v in nodes:
+        inn[v].sort()   # authority fold key: src order
+        outn[v].sort()  # hub fold key: dst order
+    h = {v: 1.0 for v in nodes}
+    a = {}
+    for _ in range(iterations):
+        s_a = {}
+        for v in nodes:
+            if inn[v]:
+                acc = 0.0
+                for u in inn[v]:
+                    acc = acc + h[u] * ew[(u, v)]
+                s_a[v] = acc
+        m = max(s_a.values(), default=1.0)  # empty only on an empty graph
+        a = {v: _round9(s_a.get(v, 0.0) / m) for v in nodes}
+        s_h = {}
+        for u in nodes:
+            if outn[u]:
+                acc = 0.0
+                for v in outn[u]:
+                    acc = acc + a[v] * ew[(u, v)]
+                s_h[u] = acc
+        m2 = max(s_h.values(), default=1.0)
+        h = {u: _round9(s_h.get(u, 0.0) / m2) for u in nodes}
+    return _node_frame(
+        edges.sparkSession, node_t,
+        [("hub", DoubleType()), ("authority", DoubleType())],
+        [(v, h[v], a[v]) for v in nodes],
+    )

@@ -12,7 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nhs_data_pipeline_spark.functions import safe_div, to_numeric
+from nhs_data_pipeline_spark.functions import (
+    fiscal_range_to_calendar_year,
+    safe_div,
+    to_numeric,
+)
 
 # positional schema of era-B sheets, columns 6-15 (:201-205)
 POSITIONAL_MEASURES = [
@@ -57,11 +61,9 @@ def calendar_year_from_fiscal(df: DataFrame, month_col: str = "month",
                               fiscal_col: str = "year") -> DataFrame:
     """"2010-11" fiscal label + month name -> calendar year: Jan-Mar
     belong to the end year (:220-228)."""
-    # try_cast: a footnote/total survivor row ('all providers') must
-    # yield NULL, not an ANSI CAST_INVALID_INPUT aborting the build.
-    start = F.substring(F.col(fiscal_col), 1, 4).try_cast("int")
-    is_q4 = F.lower(F.col(month_col)).isin("january", "february", "march")
-    return df.withColumn("calendar_year", F.when(is_q4, start + 1).otherwise(start))
+    return df.withColumn(
+        "calendar_year", fiscal_range_to_calendar_year(fiscal_col, month_col)
+    )
 
 
 def recompute_occupancy_all_types(df: DataFrame) -> DataFrame:

@@ -8699,7 +8699,7 @@ def _pagerank_oracle_sql(iterations: int = 5) -> str:
     """Unrolled-iteration DuckDB replica of ops/graph.pagerank on the
     customer-nation -> supplier-nation trade graph: each iteration is
     one CTE pair (fold contributions in src order, round to 9
-    decimals) — the same IEEE op sequence as the Spark loop."""
+    decimals) — the same IEEE op sequence as the driver loop."""
     its = []
     for i in range(1, iterations + 1):
         its.append(f"""
@@ -8813,9 +8813,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
     )
-    # local_model: nation-keyed aggregated graph, <= 625 edges by
-    # construction (ops/graph module docstring — bounded-model dispatch)
-    labels = og.label_propagation(sym, iterations=5, local_model=True)
+    labels = og.label_propagation(sym, iterations=5)
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return labels.join(
         F.broadcast(nation), labels.node == nation.n_nationkey
@@ -8826,9 +8824,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank (5 synchronous iterations, d=0.85) over the
     customer-nation -> supplier-nation trade-flow graph (edge weight =
-    lineitem count). The graph stays a distributed edge table; one
-    iteration = join + groupBy — the plan a billion-edge hyperlink
-    graph runs unchanged (ops/graph module docstring)."""
+    lineitem count). The edge aggregation is a Spark plan; the
+    rounds run on the driver (ops/graph module docstring)."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -8842,14 +8839,7 @@ def graph_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("w"))
     )
-    # deterministic=True: oracle-replay fold (bit-stable per-node sums);
-    # the scale-safe default mode is plain F.sum (ops/graph.pagerank).
-    # local_model: nation-keyed aggregated graph, <= 625 edges by
-    # construction (ops/graph module docstring — bounded-model dispatch)
-    ranks = og.pagerank(
-        edges, iterations=5, damping=0.85, deterministic=True,
-        local_model=True,
-    )
+    ranks = og.pagerank(edges, iterations=5, damping=0.85)
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return ranks.join(
         F.broadcast(nation), ranks.node == nation.n_nationkey
@@ -8923,10 +8913,9 @@ def graph_hits_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized) over the customer-nation -> supplier-nation trade
     graph: hub = how strongly a nation's customers buy from
     authoritative suppliers, authority = how strongly a nation's
-    suppliers serve hub buyers. Same distributed join+groupBy rounds
-    as PageRank, two folds per round; max-normalization keeps the
-    normalizer order-free (no sum-of-squares float fold)
-    (ops/graph.hits)."""
+    suppliers serve hub buyers. Same driver-side rounds as PageRank,
+    two folds per round; max-normalization keeps the normalizer
+    order-free (no sum-of-squares float fold) (ops/graph.hits)."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -8940,9 +8929,7 @@ def graph_hits_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("w"))
     )
-    # local_model: nation-keyed aggregated graph, <= 625 edges by
-    # construction (ops/graph module docstring — bounded-model dispatch)
-    scores = og.hits(edges, iterations=4, deterministic=True, local_model=True)
+    scores = og.hits(edges, iterations=4)
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return scores.join(
         F.broadcast(nation), scores.node == nation.n_nationkey
@@ -10675,9 +10662,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph — min total edge weight, NULL where unreached (ops/graph.
     shortest_paths). All-integer relaxations: the converged distances
     are engine- and partitioning-independent with no float discipline
-    at all. The graph stays a distributed edge table; one round =
-    join + per-dst MIN + union-min, localCheckpoint per round — the
-    billion-edge plan unchanged."""
+    at all."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -10701,9 +10686,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     )
     sources = spark.createDataFrame([(0,)], "node bigint")  # NATION_0
-    # local_model: nation-keyed aggregated graph, <= 625 edges by
-    # construction (ops/graph module docstring — bounded-model dispatch)
-    dist = og.shortest_paths(sym, sources, iterations=6, local_model=True)
+    dist = og.shortest_paths(sym, sources, iterations=6)
     e.unpersist()
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return nation.join(
@@ -10778,13 +10761,11 @@ def graph_kcore_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     above-average trade graph: per nation, whether it survives in the
     k-core and its surviving degree (ops/graph.kcore). k derives from
     the data in-plan — ceil(avg degree) + 1 in exact integer
-    arithmetic, broadcast-crossed into every round's filter (never a
-    driver literal). The dense-subgraph filter used on hyperlink
+    arithmetic, passed as a one-row table (never a driver
+    literal). The dense-subgraph filter used on hyperlink
     graphs (spam farms peel away; genuinely embedded pages survive);
     all-integer decisions make the converged cores engine- and
-    partitioning-independent. The graph stays a distributed edge
-    table; one round = degree aggregate + two node-key semi-joins,
-    localCheckpoint per round — the billion-edge plan unchanged."""
+    partitioning-independent."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -10815,9 +10796,7 @@ def graph_kcore_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ktab = sym.agg(
         F.count("*").alias("ne"), F.count_distinct("src").alias("nv")
     ).select(F.expr("CAST((ne + nv - 1) div nv + 1 AS BIGINT)").alias("k"))
-    # local_model: nation-keyed aggregated graph, <= 625 edges by
-    # construction (ops/graph module docstring — bounded-model dispatch)
-    core = og.kcore(sym, ktab, rounds=4, local_model=True)
+    core = og.kcore(sym, ktab, rounds=4)
     e0.unpersist()
     sym.unpersist()
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")

@@ -70,17 +70,13 @@ def _read_store_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     doesn't exist yet (first batch). Any other failure — corrupt
     footer, permission error, schema mismatch — re-raises: silently
     treating a damaged store as 'first batch' would reset all
-    accumulated state."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        cond = getattr(e, "getCondition", getattr(e, "getErrorClass", None))
-        cls = cond() if callable(cond) else None
-        if cls == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(e):
-            return None
-        raise
+    accumulated state. Existence is asked of the path's Hadoop
+    FileSystem, not probed with a read: a read of a missing path makes
+    Spark log a warning with a full stack trace."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+        return None
+    return spark.read.parquet(path)
 
 
 def stream_files(

@@ -428,11 +428,6 @@ def test_registry_wide_plan_hygiene(registry_frames):
         # co-occurrence shape on the bigram key plus the broadcast
         # df/N weight joins (llm/dedup.weighted_jaccard_join)
         "dedup_weighted_jaccard_join",
-        # audited: the final hubs x authorities assembly joins two
-        # node-cardinality localCheckpoint tables (stats-less RDD
-        # scans; both sides corpus-scaled on a billion-node graph,
-        # so the co-partitioned shuffle join is the correct plan)
-        "graph_hits_nations",
         # audited: the PPJoin mode's prefix-candidate join and its
         # exact-intersection verify join are likewise corpus x corpus
         # on (prefix-token, doc-pair) keys — shuffle joins correct

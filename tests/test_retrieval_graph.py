@@ -190,47 +190,9 @@ def test_pagerank_parallel_edges_preaggregate(spark):
 def test_pagerank_partitioning_invariance(spark):
     rows = [(i, (i * 3 + 1) % 17, 1 + i % 4) for i in range(17)]
     e = spark.createDataFrame(rows, ["src", "dst", "w"])
-    a = og.pagerank(e, iterations=5, deterministic=True).collect()
-    b = og.pagerank(
-        e.repartition(11, "src"), iterations=5, deterministic=True
-    ).collect()
+    a = og.pagerank(e, iterations=5).collect()
+    b = og.pagerank(e.repartition(11, "src"), iterations=5).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-@pytest.mark.slow
-def test_pagerank_default_mode_matches_deterministic_approx(spark):
-    # The scale-safe default (plain F.sum) must agree with the ordered
-    # fold up to float reassociation — same semantics, different fold.
-    rows = [(i, (i * 3 + 1) % 17, 1 + i % 4) for i in range(17)]
-    e = spark.createDataFrame(rows, ["src", "dst", "w"])
-    a = {r.node: r.pr for r in og.pagerank(e, iterations=5).collect()}
-    b = {
-        r.node: r.pr
-        for r in og.pagerank(e, iterations=5, deterministic=True).collect()
-    }
-    assert set(a) == set(b)
-    for k in a:
-        assert abs(a[k] - b[k]) < 1e-7
-
-
-def test_pagerank_default_mode_plan_has_no_collect_list(spark):
-    # Scale guard: the default fold must never materialize a per-node
-    # in-edge array (hub-node OOM at 100 TB). The ordered fold is
-    # opt-in via deterministic=True only. (pagerank() itself returns a
-    # checkpoint scan, so assert on the fold builder's plan.)
-    contribs = spark.createDataFrame(
-        [(1, 2, 0.5), (1, 3, 0.25)], ["node", "src", "__c"]
-    )
-    plan = (
-        og._per_node_sums(contribs, deterministic=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "collect_list" not in plan
-    det_plan = (
-        og._per_node_sums(contribs, deterministic=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "collect_list" in det_plan
 
 
 # ------------------------------------------------- python replicas
@@ -293,7 +255,7 @@ def test_pagerank_matches_python_replica(spark):
     e = spark.createDataFrame(edges, ["src", "dst", "w"])
     got = {
         r.node: r.pr
-        for r in og.pagerank(e, iterations=5, deterministic=True).collect()
+        for r in og.pagerank(e, iterations=5).collect()
     }
 
     agg = {}
@@ -326,6 +288,16 @@ def test_bm25_duplicate_query_terms_deduped(spark):
     )
     got = {r.doc_id: r for r in rtv.bm25_topk(docs, qs, k=10).collect()}
     assert got[1].n_terms_hit == 1  # not double-counted
+
+
+def test_graph_edge_cap_refuses_never_truncates(spark, monkeypatch):
+    monkeypatch.setattr(og, "_EDGE_CAP", 3)
+    rows = [(1, 2, 1), (2, 3, 1), (3, 1, 1)]
+    e3 = spark.createDataFrame(rows, ["src", "dst", "w"])
+    assert og.pagerank(e3, iterations=2).count() == 3
+    e4 = spark.createDataFrame(rows + [(1, 3, 1)], ["src", "dst", "w"])
+    with pytest.raises(RuntimeError, match="pagerank"):
+        og.pagerank(e4, iterations=2)
 
 
 def test_pagerank_null_endpoint_edges_dropped(spark):
@@ -1608,7 +1580,7 @@ def test_hits_matches_python_replica_bit_exact(spark):
     e = spark.createDataFrame(edges, ["src", "dst", "w"])
     got = {
         r.node: (r.hub, r.authority)
-        for r in og.hits(e, iterations=4, deterministic=True).collect()
+        for r in og.hits(e, iterations=4).collect()
     }
     agg = {}
     for s, d, w in edges:
@@ -1646,10 +1618,14 @@ def test_hits_matches_python_replica_bit_exact(spark):
 def test_hits_partitioning_invariance_deterministic(spark):
     rows = [(i % 6, (i * 3) % 6 + 1, 1 + i % 3) for i in range(30)]
     e = spark.createDataFrame(rows, ["src", "dst", "w"])
-    x = sorted(map(tuple, og.hits(e, deterministic=True).collect()))
-    y = sorted(map(tuple, og.hits(
-        e.repartition(7), deterministic=True).collect()))
+    x = sorted(map(tuple, og.hits(e).collect()))
+    y = sorted(map(tuple, og.hits(e.repartition(7)).collect()))
     assert x == y
+
+
+def test_hits_empty_graph_is_empty(spark):
+    e = spark.createDataFrame([], "src bigint, dst bigint, w bigint")
+    assert og.hits(e).count() == 0
 
 
 def test_weighted_jaccard_downweights_boilerplate(spark):

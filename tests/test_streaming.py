@@ -698,6 +698,20 @@ def test_sessionize_stream_rejects_non_utc_session(spark):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
+def test_read_store_or_none_missing_vs_damaged(spark, tmp_path):
+    """A store that does not exist yet is the first batch (None); a
+    store directory holding a file that is not parquet is damaged and
+    must raise, never pass for an empty store."""
+    from nhs_data_pipeline_spark.streaming.pipeline import _read_store_or_none
+
+    assert _read_store_or_none(spark, str(tmp_path / "absent")) is None
+    store = tmp_path / "store"
+    store.mkdir()
+    (store / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        _read_store_or_none(spark, str(store))
+
+
 @pytest.mark.slow
 def test_cm_sketch_stream_matches_batch(spark, tmp_path):
     """Incremental count-min store over a 2-batch stream must equal the
