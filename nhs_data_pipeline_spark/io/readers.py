@@ -6,14 +6,17 @@ tokens (SURVEY §1.3, §2.1). That edge is inherently driver-side — the
 files are KB-to-MB sized and positional (row order matters), which a
 distributed shuffle would destroy. The engine therefore:
 
-- reads each raw file on the driver, attaching a stable ``_row_idx``
-  (per-file row position) and ``_source_file`` before anything else;
-- runs header detection / promotion *before* creating the DataFrame, so
-  downstream Spark code sees a canonical, statically-typed schema;
-- converts sentinel tokens to real NULLs at this edge only;
-- ships every file of one call to Spark in a single Arrow-backed
-  ``createDataFrame``, the harmonised pandas frames concatenated by
-  column name (``read_messy_csv`` takes one path or a sequence).
+- reads each raw file on the driver into raw rows (lists of strings,
+  empty cells None), CSV through stdlib ``csv`` and xlsx through a
+  stdlib zip+XML parser, so a file reads the same in every environment;
+- runs header detection / promotion on those rows *before* creating the
+  DataFrame, so downstream Spark code sees a canonical, statically-typed
+  schema;
+- converts sentinel tokens to real NULLs at this edge only, attaching a
+  stable ``_row_idx`` (per-file row position) and ``_source_file``;
+- ships every file of one call to Spark as one Arrow table, unioned by
+  column name, in a single ``createDataFrame`` (``read_messy_csv`` takes
+  one path or a sequence).
 
 The 100 TB path never touches this code — canonical storage is parquet
 read natively by Spark with full predicate pushdown.
@@ -31,12 +34,13 @@ from __future__ import annotations
 import csv
 import itertools
 import re
+import xml.etree.ElementTree as ET
+import zipfile
 from typing import Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from nhs_data_pipeline_spark.functions import (
     NA_TOKENS,
@@ -46,9 +50,11 @@ from nhs_data_pipeline_spark.functions import (
 )
 from nhs_data_pipeline_spark.ops.core import clean_name, dedupe_positional
 
+Rows = list[list[str | None]]  # one raw file: rows of string cells, None = empty
 
-def detect_header_row(pdf: pd.DataFrame, marker: str | None = None, scan_rows: int = 30) -> int:
-    """Find the header row inside a raw frame.
+
+def detect_header_row(rows: Rows, marker: str | None = None, scan_rows: int = 30) -> int:
+    """Find the header row inside a file's raw rows.
 
     With ``marker``: first row containing the marker string in any cell
     (case-insensitive) — scripts/build_datasets_main.py:105-113; raises
@@ -58,15 +64,15 @@ def detect_header_row(pdf: pd.DataFrame, marker: str | None = None, scan_rows: i
     at least half the columns are populated (janitor ``find_header``
     heuristic, build_datasets_wait_times.R:126-128), else row 0.
     """
-    n = min(scan_rows, len(pdf))
-    for i in range(n):
-        row = pdf.iloc[i]
-        cells = [str(v) for v in row.tolist() if pd.notna(v) and str(v).strip() != ""]
+    n = min(scan_rows, len(rows))
+    width = max(map(len, rows), default=0)
+    for i, row in enumerate(rows[:n]):
+        cells = [v for v in row if v is not None and v.strip() != ""]
         if marker is not None:
             if any(marker.lower() in c.lower() for c in cells):
                 return i
             continue
-        if len(cells) >= max(2, len(pdf.columns) // 2) and not any(
+        if len(cells) >= max(2, width // 2) and not any(
             re.fullmatch(r"-?\d+(\.\d+)?", c) for c in cells
         ):
             return i
@@ -75,92 +81,83 @@ def detect_header_row(pdf: pd.DataFrame, marker: str | None = None, scan_rows: i
     return 0
 
 
-def _promote_header(pdf: pd.DataFrame, header_row: int) -> pd.DataFrame:
-    """Promote an in-data row to column names and drop it + the preamble
-    (R3 — scripts/build_datasets_main.py:258-266)."""
-    names = [
-        clean_name(str(v)) if pd.notna(v) and str(v).strip() else f"x{i + 1}"
-        for i, v in enumerate(pdf.iloc[header_row].tolist())
-    ]
-    names = dedupe_positional(names)
-    out = pdf.iloc[header_row + 1 :].copy()
-    out.columns = names
-    return out
-
-
 def _apply_header(
-    pdf: pd.DataFrame, header: str | int | None, marker: str | None, path: str
-) -> pd.DataFrame:
-    """Promote the detected (``header='detect'``) or given header row;
-    a missing ``marker`` raises naming the file."""
+    rows: Rows, header: str | int | None, marker: str | None, path: str
+) -> tuple[list[str], Rows]:
+    """(column names, data rows): promote the detected
+    (``header='detect'``) or given header row to names and drop it with
+    the preamble (R3 — scripts/build_datasets_main.py:258-266); any other
+    ``header`` keeps every row, columns named by position. A missing
+    ``marker`` or a header row past the last row raises naming the file."""
     if header == "detect":
         try:
-            header = detect_header_row(pdf, marker=marker)
+            header = detect_header_row(rows, marker=marker)
         except ValueError as err:
             raise ValueError(f"{path}: {err}") from None
-    return _promote_header(pdf, header) if isinstance(header, int) else pdf
+    if not isinstance(header, int):
+        return [str(i) for i in range(max(map(len, rows), default=0))], rows
+    if header >= len(rows):
+        raise ValueError(f"{path}: no header row {header}, the release has {len(rows)} rows")
+    names = [
+        clean_name(v) if v is not None and v.strip() else f"x{i + 1}"
+        for i, v in enumerate(rows[header])
+    ]
+    return dedupe_positional(names), rows[header + 1 :]
 
 
-def _harmonize(pdf: pd.DataFrame, source: str, na_tokens: Sequence[str]) -> pd.DataFrame:
-    """Sentinels -> NULL, every data cell a string; attach the per-file
-    ``_row_idx`` and ``_source_file``."""
-    pdf = pdf.reset_index(drop=True)
-    pdf = pdf.astype("object")
+def _to_spark(
+    spark: SparkSession,
+    parts: Sequence[tuple[str, list[str], Rows, dict[str, str]]],
+    na_tokens: Sequence[str],
+) -> DataFrame:
+    """Ship files to Spark in one Arrow transfer. Each part is
+    ``(source file, column names, data rows, constant columns)``; the
+    parts are unioned by column name (a column missing from a file is
+    NULL for its rows, and columns keep their order of first appearance,
+    as ``unionByName``), sentinel cells become NULL, and ``_row_idx``
+    restarts at 0 per part. ``_row_idx`` is a long and every other
+    column a string, also with zero rows."""
     toks = {str(t).strip() for t in na_tokens}
-    pdf = pdf.map(
-        lambda v: None
-        if v is None or (isinstance(v, float) and pd.isna(v)) or str(v).strip() in toks
-        else str(v)
+    row_idx: list[int] = []
+    cols: dict[str, list[str | None]] = {"_source_file": []}
+    for source, names, rows, consts in parts:
+        before = len(row_idx)
+        row_idx.extend(range(len(rows)))
+        cols["_source_file"].extend([source] * len(rows))
+        for j, name in enumerate(names):
+            cols.setdefault(name, [None] * before).extend(
+                None if r[j] is None or r[j].strip() in toks else r[j] for r in rows
+            )
+        for name, value in consts.items():
+            cols.setdefault(name, [None] * before).extend([value] * len(rows))
+        for values in cols.values():
+            values.extend([None] * (len(row_idx) - len(values)))
+    table = pa.table(
+        {"_row_idx": pa.array(row_idx, pa.int64())}
+        | {name: pa.array(values, pa.string()) for name, values in cols.items()}
     )
-    pdf.insert(0, "_row_idx", range(len(pdf)))
-    pdf.insert(1, "_source_file", source)
-    return pdf
-
-
-def _to_spark(spark: SparkSession, pdfs: Sequence[pd.DataFrame]) -> DataFrame:
-    """Ship harmonised frames to Spark in one transfer, concatenated by
-    column name (a column missing from a file is NULL for its rows, and
-    columns keep their order of first appearance, as ``unionByName``)."""
-    pdf = pd.concat(pdfs, ignore_index=True, sort=False)
-    data = pdf.columns[1:]  # concat fills a file's absent columns with NaN
-    pdf[data] = pdf[data].astype("object").where(pdf[data].notna(), None)
-    # Explicit schema: inference crashes on ZERO data rows
-    # (CANNOT_INFER_EMPTY_SCHEMA — a just-published empty release is a
-    # real shape) and on all-NULL columns without Arrow. _row_idx is a
-    # long, everything else is string by the module contract.
-    schema = T.StructType(
-        [T.StructField("_row_idx", T.LongType())]
-        + [T.StructField(str(c), T.StringType()) for c in data]
-    )
-    return spark.createDataFrame(pdf, schema=schema)
+    return spark.createDataFrame(table)
 
 
 def file_matches_skip_predicate(
-    pdf: pd.DataFrame, skip_markers: Sequence[str], scan_rows: int = 10
+    rows: Rows, skip_markers: Sequence[str], scan_rows: int = 10
 ) -> bool:
     """P12 — file-level predicate: True when any of ``skip_markers``
     appears in the first ``scan_rows`` rows, meaning the whole file
     should be dropped ("adjusted"/"The 18 weeks rules" releases,
     build_datasets_wait_times.R:72-83)."""
-    head = pdf.iloc[: min(scan_rows, len(pdf))]
-    blob = " ".join(
-        str(v).lower() for v in head.to_numpy().ravel() if pd.notna(v)
-    )
+    blob = " ".join(v.lower() for row in rows[:scan_rows] for v in row if v is not None)
     return any(m.lower() in blob for m in skip_markers)
 
 
-def _read_raw_csv(path: str, skip: int) -> pd.DataFrame:
-    """Raw all-string frame (header=None semantics) after ``skip``
-    records: blank lines dropped, empty cells NULL, and every row padded
-    to the widest row, so a narrow preamble row cannot fix the width."""
+def _read_raw_csv(path: str, skip: int) -> Rows:
+    """Raw rows (header=None semantics) after ``skip`` records: blank
+    lines dropped, empty cells None, and every row padded to the widest
+    row, so a narrow preamble row cannot fix the width."""
     with open(path, newline="", encoding="utf-8-sig") as f:
         rows = [r for r in itertools.islice(csv.reader(f), skip, None) if r]
     width = max(map(len, rows), default=0)
-    return pd.DataFrame(
-        [[v or None for v in r] + [None] * (width - len(r)) for r in rows],
-        columns=range(width),
-        dtype=object,
-    )
+    return [[v or None for v in r] + [None] * (width - len(r)) for r in rows]
 
 
 def read_messy_csv(
@@ -182,17 +179,17 @@ def read_messy_csv(
     matching a ``skip_markers`` file-level predicate is excluded (P12);
     when every file is excluded the result is None.
     """
-    pdfs = []
+    parts = []
     for p in [path] if isinstance(path, str) else path:
-        pdf = _read_raw_csv(p, skip)
-        if skip_markers and file_matches_skip_predicate(pdf, skip_markers):
+        rows = _read_raw_csv(p, skip)
+        if skip_markers and file_matches_skip_predicate(rows, skip_markers):
             continue
-        pdfs.append(_harmonize(_apply_header(pdf, header, marker, p), p, na_tokens))
-    return _to_spark(spark, pdfs) if pdfs else None
+        parts.append((p, *_apply_header(rows, header, marker, p), {}))
+    return _to_spark(spark, parts, na_tokens) if parts else None
 
 
 # ---------------------------------------------------------------------------
-# Stdlib xlsx parsing (zip + XML) — fallback when no Excel engine exists
+# Stdlib xlsx parsing (an xlsx IS a zip of XML)
 # ---------------------------------------------------------------------------
 
 def _xml_local(tag: str) -> str:
@@ -203,8 +200,6 @@ def _xml_local(tag: str) -> str:
 def _xlsx_sheet_map(zf) -> list[tuple[str, str]]:
     """[(sheet_name, archive_path)] in workbook order, resolved through
     workbook.xml + its .rels (sheet order in the zip is not meaningful)."""
-    import xml.etree.ElementTree as ET
-
     rels = {}
     for rel in ET.fromstring(zf.read("xl/_rels/workbook.xml.rels")):
         target = rel.get("Target").lstrip("/")
@@ -220,8 +215,6 @@ def _xlsx_sheet_map(zf) -> list[tuple[str, str]]:
 
 
 def _xlsx_shared_strings(zf) -> list[str]:
-    import xml.etree.ElementTree as ET
-
     try:
         root = ET.fromstring(zf.read("xl/sharedStrings.xml"))
     except KeyError:
@@ -248,22 +241,29 @@ def _cell_col_idx(ref: str | None, fallback: int) -> int:
     return col - 1 if col else fallback
 
 
-def _read_xlsx_stdlib(path: str, sheet: str | int = 0) -> tuple[pd.DataFrame, list[str]]:
+def _sheets_matching(path: str, sheet_regex: str) -> list[str]:
+    """Names of the workbook's sheets matching ``sheet_regex``
+    (case-insensitive), in workbook order; raises when none does."""
+    with zipfile.ZipFile(path) as zf:
+        names = [n for n, _ in _xlsx_sheet_map(zf)]
+    matches = [s for s in names if re.search(sheet_regex, s, re.I)]
+    if not matches:
+        raise ValueError(f"no sheet matches {sheet_regex!r} in {path}")
+    return matches
+
+
+def _read_xlsx_stdlib(path: str, sheet: str | int = 0) -> Rows:
     """Minimal xlsx reader on zipfile + ElementTree — no Excel engine.
 
-    Returns (raw all-string frame with header=None semantics, sheet
-    names). Handles shared strings (incl. rich-text runs), inline
+    Returns the sheet's raw rows (header=None semantics), all as wide as
+    its widest row. Handles shared strings (incl. rich-text runs), inline
     strings, formula string results (t="str"), booleans, and sparse
-    cells (missing cells/rows become NULL). Numeric cells keep their
+    cells (missing cells/rows become None). Numeric cells keep their
     literal stored text (dates therefore surface as Excel serials —
     acceptable at this edge; the reference's date parsing happens
     downstream on strings anyway)."""
-    import xml.etree.ElementTree as ET
-    import zipfile
-
     with zipfile.ZipFile(path) as zf:
         sheets = _xlsx_sheet_map(zf)
-        names = [n for n, _ in sheets]
         if isinstance(sheet, int):
             target = sheets[sheet][1]
         else:
@@ -308,36 +308,11 @@ def _read_xlsx_stdlib(path: str, sheet: str | int = 0) -> tuple[pd.DataFrame, li
                 cells[col] = val
                 max_col = max(max_col, col)
             rows[r_idx] = cells
-        n_rows = (max(rows) + 1) if rows else 0
-        data = [
-            [rows.get(r, {}).get(c) for c in range(max_col + 1)]
-            for r in range(n_rows)
-        ]
-        return pd.DataFrame(data, dtype=object), names
-
-
-def _excel_sheet_names(path: str) -> list[str]:
-    try:
-        import openpyxl  # noqa: F401
-
-        return pd.ExcelFile(path).sheet_names  # pragma: no cover - env-dependent
-    except ImportError:
-        return _read_xlsx_stdlib(path, 0)[1]
-
-
-def _excel_raw_frame(path: str, sheet: str | int, skip: int) -> pd.DataFrame:
-    """Raw all-string frame for one sheet (header=None), via pandas when
-    an Excel engine exists, else the stdlib zip+XML parser."""
-    try:
-        import openpyxl  # noqa: F401
-
-        pdf = pd.read_excel(  # pragma: no cover - env-dependent
-            path, sheet_name=sheet, header=None, skiprows=skip, dtype=str
-        )
-    except ImportError:
-        pdf, _ = _read_xlsx_stdlib(path, sheet)
-        pdf = pdf.iloc[skip:].reset_index(drop=True)
-    return pdf
+    n_rows = (max(rows) + 1) if rows else 0
+    return [
+        [rows.get(r, {}).get(c) for c in range(max_col + 1)]
+        for r in range(n_rows)
+    ]
 
 
 def read_messy_excel(
@@ -352,20 +327,11 @@ def read_messy_excel(
 ) -> DataFrame:
     """Excel scan (S5/S6): sheet by index, exact name, or name regex
     (``^providers?$`` style, build_datasets_wait_times.R:66-70); then the
-    same preamble/header/sentinel treatment as ``read_messy_csv``.
-
-    Uses pandas+openpyxl when available; otherwise a stdlib zip+XML
-    fallback (an xlsx IS a zip of XML) so Excel ingest executes in
-    engine-free environments too."""
+    same preamble/header/sentinel treatment as ``read_messy_csv``."""
     if sheet_regex is not None:
-        sheet_names = _excel_sheet_names(path)
-        matches = [s for s in sheet_names if re.search(sheet_regex, s, re.I)]
-        if not matches:
-            raise ValueError(f"no sheet matches {sheet_regex!r} in {path}")
-        sheet = matches[0]
-    pdf = _excel_raw_frame(path, sheet, skip)
-    pdf = _harmonize(_apply_header(pdf, header, marker, path), path, na_tokens)
-    return _to_spark(spark, [pdf])
+        sheet = _sheets_matching(path, sheet_regex)[0]
+    rows = _read_xlsx_stdlib(path, sheet)[skip:]
+    return _to_spark(spark, [(path, *_apply_header(rows, header, marker, path), {})], na_tokens)
 
 
 def read_messy_excel_multi(
@@ -380,21 +346,14 @@ def read_messy_excel_multi(
     """S6 — multi-sheet union scan: every sheet whose name matches
     ``sheet_regex`` goes through the S5 treatment, then union-by-name
     with NULL fill (era-variant sheets differ in columns); a
-    ``_source_sheet`` column records provenance. The harmonised sheets
-    are shipped to Spark in one transfer."""
-    sheet_names = _excel_sheet_names(path)
-    matches = [s for s in sheet_names if re.search(sheet_regex, s, re.I)]
-    if not matches:
-        raise ValueError(f"no sheet matches {sheet_regex!r} in {path}")
-    pdfs = [
-        _harmonize(
-            _apply_header(_excel_raw_frame(path, s, skip), header, marker, path),
-            path,
-            na_tokens,
-        ).assign(_source_sheet=s)
-        for s in matches
+    ``_source_sheet`` column records provenance. The sheets are shipped
+    to Spark in one transfer."""
+    parts = [
+        (path, *_apply_header(_read_xlsx_stdlib(path, s)[skip:], header, marker, path),
+         {"_source_sheet": s})
+        for s in _sheets_matching(path, sheet_regex)
     ]
-    return _to_spark(spark, pdfs)
+    return _to_spark(spark, parts, na_tokens)
 
 
 def with_filename_metadata(df: DataFrame, col: str = "_source_file") -> DataFrame:
@@ -407,4 +366,3 @@ def with_filename_metadata(df: DataFrame, col: str = "_source_file") -> DataFram
         .withColumn("file_quarter", extract_quarter(src))
         .withColumn("file_pathway", extract_pathway(src))
     )
-

@@ -32,12 +32,15 @@ def write_single_csv(
     if order_by:
         df = df.orderBy(*order_by)
     tmp = path + "__tmp"
-    (df.coalesce(1).write.mode("overwrite").option("header", True)
-       .option("nullValue", null_value).option("emptyValue", "")
-       .csv(tmp))
-    part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-    shutil.move(part, path)
-    shutil.rmtree(tmp)
+    try:
+        (df.coalesce(1).write.mode("overwrite").option("header", True)
+           .option("nullValue", null_value).option("emptyValue", "")
+           .csv(tmp))
+        # a rename replaces the last good file only once the new one exists
+        part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
+        shutil.move(part, path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return path
 
 

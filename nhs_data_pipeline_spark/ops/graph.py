@@ -119,7 +119,7 @@ def pagerank(
         inn[v].append(u)
     for v in inn:
         inn[v].sort()  # the src-ordered fold key
-    n = len(nodes)
+    n = len(nodes) or 1  # an empty graph ranks no node
     teleport = (1.0 - damping) / n
     pr = {v: 1.0 / n for v in nodes}
     for _ in range(iterations):

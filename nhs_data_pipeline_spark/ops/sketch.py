@@ -29,9 +29,9 @@ under the engine-portable md5-prefix hash (``llm/dedup._MD5_H60``
 over ``key || '#' || row``), so the whole sketch — and every
 estimate — replays bit-for-bit in any engine with md5(). The
 portable-HLL family below applies the same upgrade to distinct
-counting (sketch_approx_distinct / sketch_quantiles /
-sketch_hll_mergeable remain rows-only by necessity — they wrap JVM
-Datasketches blobs).
+counting (Spark's native ``approx_count_distinct``,
+``percentile_approx`` and ``hll_sketch_agg`` cannot be oracled by
+value: their sketches are JVM-specific).
 """
 
 from __future__ import annotations
@@ -155,7 +155,7 @@ def hll_register_table(
     1-based position of the leftmost 1 in the remaining ``60-p`` bits
     (all-zero suffix -> ``60-p+1``), registers = max(rho) per bucket.
 
-    Unlike the JVM Datasketches blobs (``sketch_hll_mergeable``), the
+    Unlike the JVM Datasketches blobs (``hll_sketch_agg``), the
     registers are plain integers from portable arithmetic — the whole
     sketch AND its estimate replay bit-exactly in any engine with
     md5() (the same upgrade cm_sketch makes over opaque counter

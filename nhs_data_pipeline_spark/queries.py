@@ -4087,25 +4087,6 @@ def r2_pivot_quarters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return piv
 
 
-# Retired from the registry in r11 (judge ask #5): engine-native HLL++
-# differs from DuckDB's sketch so this was rows-only; the portable HLL
-# (sketch_hll_portable, register-exact cross-engine) is the oracled
-# twin. Kept as a documented API; relative-error property asserted in
-# tests/test_ops.py.
-def sketch_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cardinality sketch (HyperLogLog++): approx distinct customers
-    per priority at 1% target rsd — at 100 TB this replaces exact
-    countDistinct's full shuffle with mergeable fixed-size sketches."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.approx_count_distinct("o_custkey", 0.01).alias("approx_customers"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
-
 @query(
     "u3_intersect",
     """
@@ -4143,36 +4124,6 @@ def u4_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     return op.subtract(f)
 
 
-# Retired from the registry in r11 (judge ask #5): the quantile sketch
-# differs per engine so this was rows-only; o3_exact_percentiles and
-# o5_quantile_bands are the oracled exact twins. Kept as a documented
-# API; bracketing property asserted in tests/test_ops.py.
-def sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile sketch: approx percentiles of order value per status —
-    the mergeable-sketch path that replaces exact sort-based quantiles
-    at scale (pairs with the exact binned_median operator). The three
-    quartiles ship as scalar columns, not an array — the driver's
-    canonicalizer cannot hash ARRAY columns (the r05 latent red
-    row)."""
-    q = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_orderstatus")
-        .agg(
-            F.percentile_approx(
-                "o_totalprice", [0.25, 0.5, 0.75], 10000
-            ).alias("__q"),
-            F.count("*").alias("n"),
-        )
-    )
-    return q.select(
-        "o_orderstatus",
-        F.col("__q")[0].alias("p25"),
-        F.col("__q")[1].alias("p50"),
-        F.col("__q")[2].alias("p75"),
-        "n",
-    )
-
-
 @query(
     "o3_exact_percentiles",
     """
@@ -4185,7 +4136,7 @@ def sketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def o3_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (sort-based aggregate) — the
-    exact counterpart to the sketch_quantiles path; Spark's
+    exact counterpart to Spark's ``percentile_approx`` sketch; Spark's
     ``percentile`` and DuckDB's ``quantile_cont`` share the linear-
     interpolation definition. SCALE NOTE: the sort-based aggregate
     buffers each group's full value set in one task — fine for the
@@ -5354,7 +5305,7 @@ def sketch_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable HyperLogLog distinct-user estimates per event type:
     per-day register shards max-merged, then the classic estimator
     with linear-counting correction — the register-exact counterpart
-    to sketch_hll_mergeable's opaque Datasketches blobs. Every
+    to Spark's opaque Datasketches blobs (``hll_sketch_agg``). Every
     register is integer arithmetic under the portable md5 hash and
     the 2^-M terms come from exact bit shifts, so even the
     APPROXIMATION ERROR is bit-identical cross-engine and this sketch
@@ -7408,35 +7359,6 @@ def media_chunk_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return mm.chunk_media_segments(
         docs, "duration_ms", chunk_ms=1000, overlap_ms=250
-    )
-
-
-# Retired from the registry in r11 (judge ask #5): the Datasketches
-# blob differs per engine so this could only ever be rows-only; its
-# portable register-exact twin sketch_hll_set_algebra (ops/sketch.py)
-# is oracled and benched. Kept as a documented API + test surface.
-def sketch_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Re-aggregatable distinct-count sketches — the 100 TB pattern the
-    plain approx_count_distinct can't do: persist one tiny HLL sketch
-    per (event_type, day) shard, then answer any-date-range distinct
-    questions by UNIONING sketches instead of rescanning raw events.
-    Union-merge is exact over sketches (Datasketches algebra), verified
-    against the direct single-pass sketch and the exact distinct in
-    tests; exact count included in the output for error visibility."""
-    ev = _events(spark, sf_dir)
-    shards = (
-        ev.withColumn("day", F.to_date("ts"))
-        .groupBy("event_type", "day")
-        .agg(F.hll_sketch_agg("user_id").alias("sk"))
-    )
-    merged = shards.groupBy("event_type").agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_users")
-    )
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users")
-    )
-    return merged.join(exact, "event_type").select(
-        "event_type", "approx_users", "exact_users"
     )
 
 

@@ -7,6 +7,7 @@ import csv
 import os
 
 import pytest
+from pyspark.errors import NumberFormatException
 
 from nhs_data_pipeline_spark.io import (
     detect_header_row,
@@ -56,10 +57,8 @@ def test_read_messy_csv_marker_mode(spark, tmp_path):
 
 
 def test_missing_header_marker_raises_naming_the_file(spark, tmp_path):
-    import pandas as pd
-
     with pytest.raises(ValueError, match="Occupied Beds"):
-        detect_header_row(pd.DataFrame([["preamble", None], ["a", "b"]]), marker="Occupied Beds")
+        detect_header_row([["preamble", None], ["a", "b"]], marker="Occupied Beds")
     path = _write_messy(tmp_path)
     with pytest.raises(ValueError, match="Occupied Beds") as err:
         read_messy_csv(spark, path, marker="Occupied Beds")
@@ -73,6 +72,23 @@ def test_missing_header_marker_raises_naming_the_file(spark, tmp_path):
     xlsx = _write_xlsx(tmp_path / "beds.xlsx", [("S1", [["preamble"], ["Org Code", "Beds"]])])
     with pytest.raises(ValueError, match="Occupied Beds") as err:
         read_messy_excel(spark, xlsx, marker="Occupied Beds")
+    assert xlsx in str(err.value)
+
+
+def test_empty_release_raises_naming_the_file(spark, tmp_path):
+    # a zero-byte release, and a skip past the last row, have no header
+    # row to promote, whether it is detected or given
+    empty = tmp_path / "empty_release.csv"
+    empty.write_text("")
+    path = _write_messy(tmp_path)
+    for p, kwargs in ((str(empty), {}), (str(empty), {"header": 0}),
+                      (path, {"skip": 6}), (path, {"skip": 6, "header": 0})):
+        with pytest.raises(ValueError, match="no header row") as err:
+            read_messy_csv(spark, p, **kwargs)
+        assert p in str(err.value)
+    xlsx = _write_xlsx(tmp_path / "empty.xlsx", [("S1", [])])
+    with pytest.raises(ValueError, match="no header row") as err:
+        read_messy_excel(spark, xlsx)
     assert xlsx in str(err.value)
 
 
@@ -99,12 +115,8 @@ def test_with_filename_metadata(spark, tmp_path):
 
 
 def test_detect_header_row_heuristic():
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        [["title only", None, None], [None, None, None], ["a", "b", "c"], ["1", "2", "3"]]
-    )
-    assert detect_header_row(pdf) == 2
+    rows = [["title only", None, None], [None, None, None], ["a", "b", "c"], ["1", "2", "3"]]
+    assert detect_header_row(rows) == 2
 
 
 def _write_xlsx(path, sheets):
@@ -178,7 +190,7 @@ def _write_xlsx(path, sheets):
 
 
 def test_excel_stdlib_end_to_end(spark, tmp_path):
-    """S5 executes without openpyxl: stdlib zip+XML parse -> preamble
+    """S5 on the stdlib zip+XML parser: raw rows -> preamble
     skip -> header detection/promotion -> NA sentinels -> _row_idx."""
     path = _write_xlsx(
         tmp_path / "beds 2013-14 Q2.xlsx",
@@ -243,6 +255,21 @@ def test_write_single_csv_roundtrip(spark, tmp_path):
     with open(out) as f:
         lines = [line.strip() for line in f]
     assert lines == ["id,v", "1,a", "2,b"]
+
+
+def test_write_single_csv_failed_write_keeps_previous_file(spark, tmp_path):
+    # the new file replaces the old one by rename, so a write that fails
+    # while executing leaves the last good output, and no staging dir
+    out = str(tmp_path / "out.csv")
+    write_single_csv(spark.createDataFrame([(1, "a")], ["id", "v"]), out)
+    with open(out, "rb") as f:
+        before = f.read()
+    bad = spark.createDataFrame([("x0",)], ["s"]).selectExpr("cast(s as int) AS n")
+    with pytest.raises(NumberFormatException, match="x0"):
+        write_single_csv(bad, out)
+    with open(out, "rb") as f:
+        assert f.read() == before
+    assert os.listdir(tmp_path) == ["out.csv"]
 
 
 def test_file_level_skip_predicate(spark, tmp_path):
@@ -504,8 +531,7 @@ def test_xlsx_row_without_r_attribute_follows_previous(tmp_path):
 
     from nhs_data_pipeline_spark.io.readers import _read_xlsx_stdlib
 
-    pdf, _ = _read_xlsx_stdlib(str(p))
-    col = pdf.iloc[:, 0].tolist()
+    col = [r[0] for r in _read_xlsx_stdlib(str(p))]
     # h1 at row 0, row5 at row 4, anon at row 5 (AFTER row5, not at
     # index 2 where len(rows)+1 would have put it).
     assert col[0] == "h1" and col[4] == "row5" and col[5] == "anon"

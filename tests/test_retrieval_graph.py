@@ -1626,6 +1626,9 @@ def test_hits_partitioning_invariance_deterministic(spark):
 def test_hits_empty_graph_is_empty(spark):
     e = spark.createDataFrame([], "src bigint, dst bigint, w bigint")
     assert og.hits(e).count() == 0
+    assert og.pagerank(e).columns == ["node", "pr"]
+    assert og.pagerank(e).count() == 0
+    assert og.label_propagation(e).count() == 0
 
 
 def test_weighted_jaccard_downweights_boilerplate(spark):
