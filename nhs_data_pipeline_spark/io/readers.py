@@ -32,6 +32,7 @@ Parity citations (into /root/reference/):
 from __future__ import annotations
 
 import csv
+import io
 import itertools
 import re
 import xml.etree.ElementTree as ET
@@ -154,8 +155,17 @@ def _read_raw_csv(path: str, skip: int) -> Rows:
     """Raw rows (header=None semantics) after ``skip`` records: blank
     lines dropped, empty cells None, and every row padded to the widest
     row, so a narrow preamble row cannot fix the width."""
-    with open(path, newline="", encoding="utf-8-sig") as f:
-        rows = [r for r in itertools.islice(csv.reader(f), skip, None) if r]
+    with open(path, "rb") as f:
+        data = f.read()
+    try:
+        text = data.decode("utf-8").removeprefix("\ufeff")
+    except UnicodeDecodeError as err:
+        raise ValueError(
+            f"{path}: byte 0x{data[err.start]:02x} at offset {err.start} "
+            "is not UTF-8"
+        ) from None
+    lines = io.StringIO(text, newline="")
+    rows = [r for r in itertools.islice(csv.reader(lines), skip, None) if r]
     width = max(map(len, rows), default=0)
     return [[v or None for v in r] + [None] * (width - len(r)) for r in rows]
 

@@ -45,14 +45,22 @@ def write_single_csv(
 
 
 def write_parquet(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite"
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> str:
     """Canonical sink: parquet, optionally hive-partitioned so downstream
-    readers get partition pruning for free."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    readers get partition pruning for free. Replaces any previous output
+    at ``path``, but only once the new one is complete: a write that
+    fails leaves the last good output as it was."""
+    tmp = path + "__tmp"
+    try:
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(tmp)
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(tmp, path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return path
 
 

@@ -18,7 +18,8 @@ Scale design
   LSH, or standalone on blocked pairs.
 
 All stages are native expressions (explode/groupBy/array ops); nothing
-collects to the driver.
+collects to the driver except ``leakage_safe_split``'s pair list, which
+``ops.graph.connected_components`` resolves there.
 """
 
 from __future__ import annotations
@@ -665,220 +666,6 @@ def simhash_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    id_col: str = "id",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Undirected connected components over a near-duplicate pair list:
-    the final step of near-dedup, turning pairwise matches into dup
-    CLUSTERS. Returns ``(id, component)`` where ``component`` is the
-    smallest id in the cluster — the canonical survivor; drop every row
-    whose id != component to dedup.
-
-    ``nodes`` (optional, with ``id_col``) includes isolated ids as
-    singleton components; otherwise only ids appearing in pairs are
-    labeled.
-
-    Algorithm: iterative min-label propagation WITH POINTER JUMPING —
-    each round every node takes the min of its own label, its
-    neighbors' labels, and its LABEL'S label (path halving), so rounds
-    grow with log2(diameter), not diameter; fixpoint when nothing
-    moves. Two shuffle joins + one aggregate per round. The r10
-    sampled-sf1 rehearsal caught the plain-propagation variant
-    silently returning NON-converged labels on a ~600-node chainy
-    component (diameter > the 30-round cap) — pointer jumping makes
-    30 rounds cover diameters past 2^29, and a residual non-fixpoint
-    now RAISES instead of returning wrong components.
-    ``connected_components_star`` (large-star/small-star rewrite)
-    remains the alternative O(log n) formulation.
-    Like orgchange.closure, one Spark action per round: a lazy
-    localCheckpoint truncates lineage and the convergence count
-    materializes it.
-    """
-    e = pairs.select(F.col(id_a).alias("__s"), F.col(id_b).alias("__d"))
-    edges = (
-        e.unionByName(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
-        .distinct()
-        .persist()
-    )
-    edges.count()
-
-    if nodes is not None:
-        base = nodes.select(F.col(id_col).alias("id")).distinct()
-    else:
-        base = edges.select(F.col("__s").alias("id")).distinct()
-    labels = base.select("id", F.col("id").alias("component"))
-
-    converged = False
-    for _ in range(max_iter):
-        nb = (
-            edges.join(labels, edges["__s"] == labels["id"])
-            .select(F.col("__d").alias("id"), F.col("component").alias("__nb"))
-            .groupBy("id")
-            .agg(F.min("__nb").alias("__nb"))
-        )
-        # pointer jumping: my label's CURRENT label (labels is keyed by
-        # id == every label value, since labels start as identity and
-        # only ever take existing ids)
-        ptr = labels.select(
-            F.col("id").alias("__lid"), F.col("component").alias("__lc")
-        )
-        upd = (
-            labels.join(nb, "id", "left")
-            .join(ptr, F.col("component") == F.col("__lid"), "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("__nb", F.col("component")),
-                    F.coalesce("__lc", F.col("component")),
-                ).alias("component"),
-                (
-                    F.least(
-                        F.coalesce("__nb", F.col("component")),
-                        F.coalesce("__lc", F.col("component")),
-                    )
-                    < F.col("component")
-                ).alias("__moved"),
-            )
-        )
-        upd = upd.localCheckpoint(eager=False)
-        moved = upd.filter("__moved").limit(1).count()
-        labels = upd.drop("__moved")
-        if moved == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not reach a fixpoint in "
-            f"{max_iter} pointer-jumping rounds (diameter would exceed "
-            f"2^{max_iter - 1}); raise max_iter or use "
-            "connected_components_star"
-        )
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame | None = None,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    id_col: str = "id",
-    max_iter: int = 50,
-    round_report: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    rewrites (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14): converges in O(log n) rounds on ANY graph shape,
-    including the adversarially long chains where min-label propagation
-    (``connected_components``) needs diameter rounds. Same contract:
-    ``(id, component)`` with component = smallest id in the cluster.
-
-    Each round is two star rewrites; each rewrite is one groupBy-min +
-    one join over the current edge list, and the edge list contracts
-    toward the star form, so per-round cost tracks the shrinking |E|.
-    One Spark action per round (the convergence signature) over a lazy
-    localCheckpoint, like the min-label loop.
-
-    - large-star: every node's strictly-larger neighbors re-point to
-      the minimum of its closed neighborhood (keeps big subtrees
-      hanging off small labels without growing edges).
-    - small-star: orient edges larger-first, then each node and its
-      smaller neighbors all re-point to the neighborhood minimum.
-
-    ``round_report`` (optional dict) receives {rounds, edges_final}.
-    """
-
-    def _large_star(edges: DataFrame) -> DataFrame:
-        sym = edges.unionByName(
-            edges.select(F.col("__v").alias("__u"), F.col("__u").alias("__v"))
-        )
-        m = (
-            sym.groupBy("__u")
-            .agg(F.min("__v").alias("__mn"))
-            .select("__u", F.least("__u", "__mn").alias("__m"))
-        )
-        return (
-            sym.filter(F.col("__v") > F.col("__u"))
-            .join(m, "__u")
-            .select(F.col("__v").alias("__u"), F.col("__m").alias("__v"))
-            .filter(F.col("__u") != F.col("__v"))
-            .distinct()
-        )
-
-    def _small_star(edges: DataFrame) -> DataFrame:
-        ori = (
-            edges.select(
-                F.greatest("__u", "__v").alias("__u"),
-                F.least("__u", "__v").alias("__v"),
-            )
-            .filter(F.col("__u") != F.col("__v"))
-            .distinct()
-        )
-        m = ori.groupBy("__u").agg(F.min("__v").alias("__m"))
-        nbr = (
-            ori.join(m, "__u")
-            .filter(F.col("__v") != F.col("__m"))
-            .select(F.col("__v").alias("__u"), F.col("__m").alias("__v"))
-        )
-        ctr = m.select("__u", F.col("__m").alias("__v"))
-        return (
-            nbr.unionByName(ctr)
-            .filter(F.col("__u") != F.col("__v"))
-            .distinct()
-        )
-
-    def _sig(edges: DataFrame) -> tuple:
-        # decimal sum: ANSI mode throws on long overflow, and a sum of
-        # 64-bit hashes overflows almost immediately
-        r = edges.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("__u", "__v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (r["n"], r["h"])
-
-    cur = (
-        pairs.select(F.col(id_a).alias("__u"), F.col(id_b).alias("__v"))
-        .filter(F.col("__u") != F.col("__v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    sig = _sig(cur)
-    rounds = 0
-    for _ in range(max_iter):
-        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-        nsig = _sig(nxt)
-        rounds += 1
-        if nsig == sig:
-            cur = nxt
-            break
-        cur, sig = nxt, nsig
-    if round_report is not None:
-        round_report.update(rounds=rounds, edges_final=sig[0])
-
-    # At the fixpoint the edge list is a star forest: (node, center)
-    # with center = component minimum. Centers and isolated nodes label
-    # themselves.
-    labels = cur.groupBy(F.col("__u").alias("id")).agg(
-        F.min("__v").alias("component")
-    )
-    if nodes is not None:
-        base = nodes.select(F.col(id_col).alias("id")).distinct()
-    else:
-        e0 = pairs.select(F.col(id_a).alias("id")).unionByName(
-            pairs.select(F.col(id_b).alias("id"))
-        )
-        base = e0.distinct()
-    return base.join(labels, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-
-
 def ngram_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -1081,13 +868,15 @@ def leakage_safe_split(
     component can never straddle the split by construction.
 
     Scale shape: the split decision is a codegen'd scalar, the pair
-    graph is the bounded LSH self-join, components are the O(diameter)
-    label-propagation loop, and the repair is one tiny per-component
-    aggregate joined back — nothing new shuffles document text.
+    graph is the bounded LSH self-join, components are one driver-side
+    union-find over the collected pairs, and the repair is one tiny
+    per-component aggregate joined back — nothing new shuffles document
+    text.
 
     Returns ``(id_col, split, reassigned)`` where ``reassigned`` marks
     docs assigned val but repaired into train (leak-driven moves).
     """
+    from nhs_data_pipeline_spark.ops.graph import connected_components
     from nhs_data_pipeline_spark.ops.sampling import _BUCKETS, hash_bucket
 
     threshold = int(val_fraction * _BUCKETS)
@@ -1102,14 +891,7 @@ def leakage_safe_split(
             id_col=id_col,
             **lsh_kwargs,
         )
-    # star variant, not min-label propagation: the repair must be
-    # correct on ANY component shape, and a chained near-dup family
-    # (incrementally edited boilerplate) can have diameter > the
-    # propagation loop's round budget — unconverged labels would emit
-    # exactly the straddling pairs this op exists to prevent. The
-    # large-star/small-star rewrite converges in O(log n) rounds on
-    # any graph.
-    cc = connected_components_star(pairs, nodes=df, id_col=id_col).select(
+    cc = connected_components(pairs, nodes=df, id_col=id_col).select(
         F.col("id").alias(id_col), "component"
     )
     labeled = assigned.join(cc, id_col)

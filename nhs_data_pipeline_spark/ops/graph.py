@@ -4,9 +4,10 @@ The org-change subsystem already ships one iterative-closure algorithm
 (orgchange/closure.py — successor chains). This module adds the other
 canonical iterative graph primitives a data-curation stack needs:
 link-analysis centrality (PageRank, HITS), communities (label
-propagation), shortest paths, k-core peeling and triangle counts. The
-same operators rank any edge table — citation graphs, org-successor
-graphs, near-duplicate clusters.
+propagation), connected components (near-duplicate clusters), shortest
+paths, k-core peeling and triangle counts. The same operators rank any
+edge table — citation graphs, org-successor graphs, near-duplicate
+clusters.
 
 The iterative operators run their rounds on the driver, as the
 succession closure does. Their graphs are keyed by a dimension of the
@@ -18,8 +19,9 @@ stays a Catalyst plan; the aggregated edges are collected once under
 rounds run as plain Python and the result is a small frame. Python
 floats are IEEE doubles, the float folds run in src (or dst) order
 from 0.0 and ``_round9`` is Spark's HALF_UP ``round``, so the DuckDB
-oracles replay every round bit for bit. ``triangle_count`` has no
-rounds and stays a Spark plan.
+oracles replay every round bit for bit. ``connected_components`` collects
+its pairs the same way and resolves them in one union-find pass.
+``triangle_count`` has no rounds and stays a Spark plan.
 """
 
 from __future__ import annotations
@@ -176,6 +178,64 @@ def label_propagation(
     return _node_frame(
         edges.sparkSession, node_t, [("label", node_t)],
         [(v, labels[v]) for v in nodes],
+    )
+
+
+def connected_components(
+    pairs: DataFrame,
+    nodes: DataFrame | None = None,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    id_col: str = "id",
+) -> DataFrame:
+    """Undirected connected components over a pair list — the last step
+    of near-dedup, turning pairwise matches into duplicate CLUSTERS.
+    Returns ``(id, component)`` where ``component`` is the smallest id
+    in the cluster, the canonical survivor: drop every row whose id !=
+    component to dedup.
+
+    Without ``nodes`` every non-NULL pair endpoint is labelled (an id
+    seen only in a self-pair is its own component). With ``nodes``
+    (ids in ``id_col``) exactly its distinct ids are labelled, an id in
+    no pair being a singleton. A pair with a NULL endpoint is dropped,
+    as the other operators drop NULL-endpoint edges.
+
+    The distinct pairs are collected once under ``_EDGE_CAP`` and
+    resolved by a union-find (the smaller root wins, so every root is
+    its cluster's minimum; path halving keeps finds short). There are
+    no rounds, so no chain is too long to converge.
+    """
+    p = (
+        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .distinct()
+    )
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in _collect_edges(p, "connected_components"):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    t = p.schema["a"].dataType
+    cc = pairs.sparkSession.createDataFrame(
+        [(v, find(v)) for v in sorted(parent)],
+        StructType([StructField("id", t), StructField("component", t)]),
+    )
+    if nodes is None:
+        return cc
+    return (
+        nodes.select(F.col(id_col).alias("id"))
+        .distinct()
+        .join(F.broadcast(cc), "id", "left")
+        .select("id", F.coalesce("component", "id").alias("component"))
     )
 
 

@@ -3759,13 +3759,13 @@ ORACLES["dedup_embed_cosine_pairs"] = _cosine_dedup_oracle_sql()
 @query("dedup_components")  # oracle attached below (recursive CTE over the same LSH edges)
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs -> duplicate CLUSTERS: connected components over
-    the embedding-cosine pair graph (min-label propagation driver loop,
-    one shuffle join per round). component == smallest vec_id in the
+    the embedding-cosine pair graph (one driver-side union-find over the
+    collected pairs). component == smallest vec_id in the
     cluster = the canonical survivor; all embeddings appear (isolated
     vectors are singleton components)."""
     emb = _t(spark, sf_dir, "embeddings")
     pairs = sim.cosine_dedup_pairs(emb, threshold=0.35)
-    cc = dd.connected_components(pairs, nodes=emb, id_col="vec_id")
+    cc = og.connected_components(pairs, nodes=emb, id_col="vec_id")
     return cc.select(F.col("id").alias("vec_id"), "component")
 
 
@@ -3823,18 +3823,6 @@ def _components_oracle_sql(
 
 
 ORACLES["dedup_components"] = _components_oracle_sql()
-
-
-@query("dedup_components_star", _components_oracle_sql())
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering as dedup_components, via the O(log n)-round
-    large-star/small-star rewrite (Kiveris et al.) instead of min-label
-    propagation — the variant that survives adversarially long chain
-    graphs. Checked against the identical recursive-CTE oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = sim.cosine_dedup_pairs(emb, threshold=0.35)
-    cc = dd.connected_components_star(pairs, nodes=emb, id_col="vec_id")
-    return cc.select(F.col("id").alias("vec_id"), "component")
 
 
 def _canonical_oracle_sql() -> str:
@@ -3920,7 +3908,7 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     d = _t(spark, sf_dir, "documents")
     pairs = sim.cosine_dedup_pairs(emb, threshold=0.35)
-    cc = dd.connected_components(pairs, nodes=emb, id_col="vec_id")
+    cc = og.connected_components(pairs, nodes=emb, id_col="vec_id")
     scored = d.select("doc_id", tx.quality_score("text").alias("quality"))
     j = cc.join(scored, cc.id == scored.doc_id).select(
         F.col("id").alias("vec_id"), "component", "quality"
@@ -12844,7 +12832,7 @@ def dedup_component_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     component table; all integers."""
     emb = _t(spark, sf_dir, "embeddings")
     pairs = sim.cosine_dedup_pairs(emb, threshold=0.35)
-    cc = dd.connected_components(pairs, nodes=emb, id_col="vec_id")
+    cc = og.connected_components(pairs, nodes=emb, id_col="vec_id")
     szs = cc.groupBy("component").agg(
         F.count("*").cast("bigint").alias("component_size")
     )

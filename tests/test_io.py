@@ -92,6 +92,19 @@ def test_empty_release_raises_naming_the_file(spark, tmp_path):
     assert xlsx in str(err.value)
 
 
+def test_non_utf8_release_raises_naming_the_file(spark, tmp_path):
+    # a Windows-1252 release stores the pound sign as the single byte
+    # 0xa3; the offset counts from the file's first byte, BOM included
+    cp1252 = tmp_path / "cp1252_release.csv"
+    cp1252.write_bytes("Org,Cost\nRX1,\u00a312\n".encode("cp1252"))
+    bom = tmp_path / "bom_release.csv"
+    bom.write_bytes(b"\xef\xbb\xbf" + cp1252.read_bytes())
+    for p, offset in ((str(cp1252), 13), (str(bom), 16)):
+        with pytest.raises(ValueError, match=f"0xa3 at offset {offset}") as err:
+            read_messy_csv(spark, p)
+        assert p in str(err.value)
+
+
 def test_read_messy_csv_fixed_skip(spark, tmp_path):
     path = _write_messy(tmp_path)
     df = read_messy_csv(spark, path, skip=2, header=0)
@@ -270,6 +283,24 @@ def test_write_single_csv_failed_write_keeps_previous_file(spark, tmp_path):
     with open(out, "rb") as f:
         assert f.read() == before
     assert os.listdir(tmp_path) == ["out.csv"]
+
+
+def test_write_parquet_failed_write_keeps_previous_output(spark, tmp_path):
+    # the new output replaces the old one by rename, so a write that
+    # fails while executing leaves the last good output, and no staging dir
+    from nhs_data_pipeline_spark.io.writers import write_parquet
+
+    out = str(tmp_path / "panel")
+    good = spark.createDataFrame([(2023, "RX1", 1), (2024, "RX2", 2)], ["year", "org", "n"])
+    write_parquet(good, out, partition_by=["year"])
+    bad = spark.createDataFrame([(2023, "x0")], ["year", "s"]).selectExpr(
+        "year", "cast(s as int) AS n"
+    )
+    with pytest.raises(NumberFormatException, match="x0"):
+        write_parquet(bad, out, partition_by=["year"])
+    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
+    assert got == [("RX1", 1, 2023), ("RX2", 2, 2024)]
+    assert os.listdir(tmp_path) == ["panel"]
 
 
 def test_file_level_skip_predicate(spark, tmp_path):

@@ -11,6 +11,7 @@ from nhs_data_pipeline_spark.llm import dedup as dd
 from nhs_data_pipeline_spark.llm import multimodal as mm
 from nhs_data_pipeline_spark.llm import similarity as sim
 from nhs_data_pipeline_spark.llm import text as tx
+from nhs_data_pipeline_spark.ops import graph as og
 
 
 BASE = (
@@ -281,9 +282,9 @@ def _union_find_components(edges, nodes):
 
 
 @pytest.mark.slow
-def test_star_components_match_union_find_and_minlabel(spark):
-    """Large-star/small-star equals union-find ground truth (and the
-    min-label implementation) on a random graph + cliques + singletons."""
+def test_components_match_union_find_cliques_and_singletons(spark):
+    """connected_components equals union-find ground truth on a random
+    graph + a clique + singletons, with and without ``nodes``."""
     import random
 
     rng = random.Random(5)
@@ -295,57 +296,31 @@ def test_star_components_match_union_find_and_minlabel(spark):
 
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     ndf = spark.createDataFrame([(n,) for n in nodes], ["id"])
-    star = {
+    got = {
         r.id: r.component
-        for r in dd.connected_components_star(pairs, nodes=ndf).collect()
+        for r in og.connected_components(pairs, nodes=ndf).collect()
     }
-    assert star == expected
-    minlabel = {
-        r.id: r.component
-        for r in dd.connected_components(pairs, nodes=ndf, max_iter=60).collect()
-    }
-    assert minlabel == expected
-
-
-@pytest.mark.slow
-def test_star_components_chain_logarithmic_rounds(spark):
-    """The adversarial case for min-label propagation: a 200-node path
-    (diameter 199). The star algorithm must label it correctly in
-    O(log n) rounds — far fewer than the diameter."""
-    n = 200
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
-    )
-    report: dict = {}
-    out = dd.connected_components_star(pairs, round_report=report)
-    rows = out.collect()
-    assert len(rows) == n
-    assert all(r.component == 0 for r in rows)
-    assert report["rounds"] <= 12  # log-ish, not ~199
+    assert got == expected
+    # without nodes: every endpoint, and an id seen only in a self-pair
+    loop = spark.createDataFrame(edges + [(70, 70)], ["id_a", "id_b"])
+    ends = {a for e in edges for a in e}
+    got = {r.id: r.component for r in og.connected_components(loop).collect()}
+    assert got == {**{n: expected[n] for n in ends}, 70: 70}
 
 
 def test_minlabel_components_chain_pointer_jumping(spark):
-    """r10 sampled-sf1 regression: a 120-node path (diameter 119) with
-    the DEFAULT max_iter=30. Plain min-label propagation silently
-    returned non-converged labels here (the ~600-node chainy component
-    in the sampled-sf1 embedding graph was mislabeled); pointer
-    jumping must converge in O(log diameter) rounds, and a true
-    non-fixpoint must RAISE rather than return wrong components."""
-    n = 120
+    """r10 sampled-sf1 regression: a 600-node path (diameter 599), the
+    shape of the ~600-node chainy component in the sampled-sf1
+    embedding graph that a round-capped propagation loop once silently
+    mislabeled. The union-find has no rounds, so the whole chain must
+    label to its minimum."""
+    n = 600
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
     )
-    out = dd.connected_components(pairs).collect()  # default max_iter
+    out = og.connected_components(pairs).collect()
     assert len(out) == n
     assert all(r.component == 0 for r in out)
-    # the loud-failure path: 1 round cannot close a 10-node chain
-    import pytest as _pt
-
-    small = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], ["id_a", "id_b"]
-    )
-    with _pt.raises(RuntimeError, match="fixpoint"):
-        dd.connected_components(small, max_iter=1)
 
 
 def test_jaccard_pairs_exact_value(spark):
@@ -2329,7 +2304,7 @@ def test_connected_components_matches_union_find(spark):
     nodes = spark.range(n).withColumnRenamed("id", "nid")
     got = {
         r.id: r.component
-        for r in dd.connected_components(pairs, nodes=nodes, id_col="nid").collect()
+        for r in og.connected_components(pairs, nodes=nodes, id_col="nid").collect()
     }
     assert got == exp_label
 

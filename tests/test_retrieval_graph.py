@@ -298,6 +298,11 @@ def test_graph_edge_cap_refuses_never_truncates(spark, monkeypatch):
     e4 = spark.createDataFrame(rows + [(1, 3, 1)], ["src", "dst", "w"])
     with pytest.raises(RuntimeError, match="pagerank"):
         og.pagerank(e4, iterations=2)
+    p3 = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["id_a", "id_b"])
+    assert og.connected_components(p3).count() == 5
+    p4 = spark.createDataFrame([(1, 2), (2, 3), (4, 5), (5, 6)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="connected_components"):
+        og.connected_components(p4)
 
 
 def test_pagerank_null_endpoint_edges_dropped(spark):
@@ -1629,6 +1634,22 @@ def test_hits_empty_graph_is_empty(spark):
     assert og.pagerank(e).columns == ["node", "pr"]
     assert og.pagerank(e).count() == 0
     assert og.label_propagation(e).count() == 0
+    p = spark.createDataFrame([], "id_a bigint, id_b bigint")
+    cc = og.connected_components(p)
+    assert cc.columns == ["id", "component"]
+    assert cc.count() == 0
+    nodes = spark.createDataFrame([(3,), (1,)], "id bigint")
+    got = og.connected_components(p, nodes=nodes).collect()
+    assert sorted((r.id, r.component) for r in got) == [(1, 1), (3, 3)]
+
+
+def test_components_null_endpoint_pairs_dropped(spark):
+    p = spark.createDataFrame(
+        [(2, 1), (1, 2), (None, 1), (3, None), (None, None), (4, 4)],
+        "id_a bigint, id_b bigint",
+    )
+    got = og.connected_components(p).collect()
+    assert sorted((r.id, r.component) for r in got) == [(1, 1), (2, 1), (4, 4)]
 
 
 def test_weighted_jaccard_downweights_boilerplate(spark):
