@@ -26,14 +26,17 @@ def write_single_csv(
     ``coalesce(1)`` is correct *only* for reference-sized outputs (tens
     of thousands of rows); large results should use ``write_parquet``.
     An optional sink-time sort reproduces the reference's ordered CSVs
-    (O1 — ``arrange(org_code, year, quarter)``); ``null_value="NA"``
-    reproduces R ``write.csv``'s NA rendering.
+    (O1 — ``arrange(org_code, year, quarter)``); it sorts the one
+    partition in its single task, so it needs no range-sampling job or
+    shuffle, and any narrow work upstream of the sink runs in that task
+    too. ``null_value="NA"`` reproduces R ``write.csv``'s NA rendering.
     """
+    df = df.coalesce(1)
     if order_by:
-        df = df.orderBy(*order_by)
+        df = df.sortWithinPartitions(*order_by)
     tmp = path + "__tmp"
     try:
-        (df.coalesce(1).write.mode("overwrite").option("header", True)
+        (df.write.mode("overwrite").option("header", True)
            .option("nullValue", null_value).option("emptyValue", "")
            .csv(tmp))
         # a rename replaces the last good file only once the new one exists

@@ -19,8 +19,11 @@ import re
 from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 # ---------------------------------------------------------------------------
@@ -334,3 +337,21 @@ def reorder_columns(df: DataFrame, first: Sequence[str]) -> DataFrame:
     scripts/build_datasets_main.py:53-55). Pure projection."""
     rest = [c for c in df.columns if c not in set(first)]
     return df.select(*first, *rest)
+
+
+# ---------------------------------------------------------------------------
+# Driver-built frames
+# ---------------------------------------------------------------------------
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: StructType) -> DataFrame:
+    """A small frame from row tuples computed on the driver, shipped as
+    one Arrow table. The plan leaf is a ``LocalTableScan``; a
+    ``createDataFrame`` from a list pickles an RDD instead, whose scan
+    runs Python worker processes. ``schema`` is kept as given,
+    nullability included."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

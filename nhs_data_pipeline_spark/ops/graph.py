@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from nhs_data_pipeline_spark.ops.core import local_frame
+
 #: Most aggregated edges an operator collects to the driver.
 _EDGE_CAP = 1_000_000
 
@@ -87,7 +89,7 @@ def _node_frame(
     schema = StructType(
         [StructField("node", node_t)] + [StructField(n, t) for n, t in fields]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def pagerank(
@@ -225,7 +227,8 @@ def connected_components(
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     t = p.schema["a"].dataType
-    cc = pairs.sparkSession.createDataFrame(
+    cc = local_frame(
+        pairs.sparkSession,
         [(v, find(v)) for v in sorted(parent)],
         StructType([StructField("id", t), StructField("component", t)]),
     )

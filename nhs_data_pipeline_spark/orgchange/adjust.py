@@ -26,9 +26,12 @@ Semantics, in the reference's order:
 10. Re-attach names; derive ``unproblematic_org_change`` /
     ``exp_unproblematic_org_change`` flags.
 
-The whole transformer is one lazy DAG: the only shuffles are the re-
-aggregation group-by and the final union's downstream consumer; lookup
-joins are broadcast.
+The whole transformer is one lazy DAG with one broadcast join and one
+shuffle. One projection over the broadcast lookup join recodes every
+row. The panel is then hash-partitioned on the output org code, which
+serves both the re-aggregation (its keys include the org code) and the
+per-org window that attaches the name, the change period and the group
+flag, so neither needs an exchange of its own.
 """
 
 from __future__ import annotations
@@ -39,12 +42,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nhs_data_pipeline_spark.functions import safe_div
-from nhs_data_pipeline_spark.ops.core import (
-    first_per_group,
-    grouped_any_flag,
-    natural_join,
-    union_by_name,
-)
+from nhs_data_pipeline_spark.ops.core import union_by_name
 
 
 def adjust_org_changes(
@@ -69,6 +67,13 @@ def adjust_org_changes(
     sum_cols : measure columns re-aggregated by NA-preserving sum.
     ratio_specs : ``{out_col: (numerator_col, denominator_col)}`` ratios
         recomputed *after* summation (ratios don't sum).
+
+    Precondition: the lookup is transitively closed, so a final code is
+    never itself recoded; ``successor_closure`` lookups are, as a final
+    code is a terminal or a stop code that keeps its own rows. The name
+    of an output org is read from the rows that already carried its
+    code, so under a hand-built chain (``A -> X`` and ``X -> Y``, both
+    adjustable) group ``X`` holds only A's rows and its name is NULL.
     """
     ratio_specs = dict(ratio_specs or {})
     # Only the columns the adjustment reads: carrying extras (e.g.
@@ -82,47 +87,40 @@ def adjust_org_changes(
         )
     )
 
-    # 1. name snapshot (P14): first name per code, deterministic by period.
-    names = None
-    if name_col is not None and name_col in df.columns:
-        # Tiebreak on the name itself: two names in the same earliest
-        # period would otherwise pick per-run-arbitrarily (row_number
-        # over a non-unique order), flipping the adjusted output's
-        # org_name between runs.
-        names = first_per_group(
-            df.select(org_col, period_col, name_col),
-            [org_col],
-            [period_col, name_col],
-        ).select(org_col, name_col)
-
-    # 2-3. membership flags. A single broadcast left join replaces the
+    # 2-4. membership flags. A single broadcast left join replaces the
     # reference's physical semi/anti split (J4) — the "partition" is a
     # column predicate, so Catalyst keeps one scan of the fact table.
     joined = df.join(lkp, df[org_col] == lkp["old_code"], "left")
-    problematic_flag = F.when(F.col("problematic") == 1, 1).otherwise(0)
     adjustable = F.col("final_code").isNotNull() & (
         F.coalesce(F.col("problematic"), F.lit(0)) == 0
     )
-    flagged = joined.withColumn("exp_problematic_org_change", problematic_flag)
-
-    # 5. change indicator: last period each adjusted old code reports.
-    change_dates = (
-        flagged.filter(adjustable)
-        .groupBy("final_code")
-        .agg(F.max(period_col).alias("change_period"))
+    # 6. recode + mark, in one projection.
+    org = F.when(adjustable, F.col("final_code")).otherwise(F.col(org_col))
+    named = name_col is not None and name_col in df.columns
+    recoded = joined.select(
+        *[org.alias(k) if k == org_col else F.col(k) for k in keys],
+        *sum_cols,
+        F.when(F.col("problematic") == 1, 1).otherwise(0).alias("exp_problematic_org_change"),
+        F.when(adjustable, 1).otherwise(0).alias("unproblematic_org_change"),
+        # 5. change indicator: the periods the adjusted old codes report.
+        F.when(adjustable, F.col(period_col)).alias("__change"),
+        # 1. name snapshot (P14): the first (period, name) of the rows
+        # that already carried the output code. min() of a struct
+        # orders NULLs first, like the reference's ascending sort, and
+        # the name breaks period ties, so the pick is deterministic.
+        *([F.when(F.col(org_col) == org, F.struct(period_col, name_col)).alias("__name")]
+          if named else []),
     )
-
-    # 6. recode + mark.
-    recoded = flagged.withColumn(
-        "unproblematic_org_change", F.when(adjustable, 1).otherwise(0)
-    ).withColumn(org_col, F.when(adjustable, F.col("final_code")).otherwise(F.col(org_col)))
 
     # 7. re-aggregate NA-preserving sums over the full key set; the
     # change flags ride along via max() so merged groups stay flagged.
-    aggregated = recoded.groupBy(*keys).agg(
+    # The exchange on the org code alone also serves the window below.
+    aggregated = recoded.repartition(org_col).groupBy(*keys).agg(
         *[F.sum(c).alias(c) for c in sum_cols],
         F.max("exp_problematic_org_change").alias("exp_problematic_org_change"),
         F.max("unproblematic_org_change").alias("unproblematic_org_change"),
+        F.max("__change").alias("__change"),
+        *([F.min("__name").alias("__name")] if named else []),
     )
 
     # 8. recompute ratios post-sum (build_datasets_overnight_day_beds.R:528-539).
@@ -130,21 +128,17 @@ def adjust_org_changes(
     for out_col, (num, den) in ratio_specs.items():
         out = out.withColumn(out_col, safe_div(F.col(num), F.col(den)))
 
-    # 10. re-attach names and change metadata.
-    if names is not None:
-        out = natural_join(out, names, how="left", broadcast_right=True)
-    out = out.join(
-        F.broadcast(change_dates),
-        out[org_col] == change_dates["final_code"],
-        "left",
-    ).drop("final_code")
-    out = grouped_any_flag(
-        out,
-        [org_col],
-        F.col("unproblematic_org_change") == 1,
-        "exp_unproblematic_org_change",
+    # 10. per-org name, change period and group flag. The org code leads
+    # when a name is attached; that column order is part of the output.
+    w = Window.partitionBy(org_col)
+    lead = [org_col] if named else []
+    return out.select(
+        *lead,
+        *[c for c in out.columns if c not in (*lead, "__change", "__name")],
+        *([F.min("__name").over(w)[name_col].alias(name_col)] if named else []),
+        F.max("__change").over(w).alias("change_period"),
+        F.max("unproblematic_org_change").over(w).alias("exp_unproblematic_org_change"),
     )
-    return out
 
 
 def split_affected(

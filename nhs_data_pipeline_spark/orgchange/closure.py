@@ -5,10 +5,10 @@ final_code, with splits fanning one-to-many) by an iterative in-memory
 loop (scripts/org-changes/build_trust_lookup.R:59-84,
 build_all_org_changes.R:55-106). Succession graphs are lookup-sized, so
 the engine does the same: it collects the edges once, walks them in
-plain Python on the driver and returns the resolved pairs as a small
-local DataFrame. A Spark loop of self-joins would spend its time
-scheduling jobs, not joining. A cycle has no terminal successor, so it
-raises ``ValueError`` naming the codes on the cycle.
+plain Python on the driver and ships the resolved pairs back as one
+Arrow table (a ``LocalTableScan``). A Spark loop of self-joins would
+spend its time scheduling jobs, not joining. A cycle has no terminal
+successor, so it raises ``ValueError`` naming the codes on the cycle.
 """
 
 from __future__ import annotations
@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from nhs_data_pipeline_spark.ops.core import local_frame
 
 
 def _find_cycle(succ: dict) -> list | None:
@@ -75,7 +77,7 @@ def successor_closure(edges: DataFrame, old: str = "old_code", new: str = "new_c
         T.StructField("final_code", n_field.dataType, n_field.nullable),
         T.StructField("n_hops", T.IntegerType(), False),
     ])
-    return edges.sparkSession.createDataFrame(rows, schema)
+    return local_frame(edges.sparkSession, rows, schema)
 
 
 def classify_changes(edges: DataFrame, old: str = "old_code", new: str = "new_code") -> DataFrame:

@@ -270,6 +270,27 @@ def test_write_single_csv_roundtrip(spark, tmp_path):
     assert lines == ["id,v", "1,a", "2,b"]
 
 
+def test_write_single_csv_sorts_in_one_task(spark, tmp_path):
+    # the single partition is sorted in place: a shuffle stage for the
+    # repartitioned input, then the write, and no range-sampling job
+    df = spark.createDataFrame(
+        [(i * 7 % 40, f"v{i}") for i in range(40)], ["id", "v"]
+    ).repartition(8)
+    out = str(tmp_path / "out.csv")
+    sc = spark.sparkContext
+    sc.setJobGroup("single-csv-sort", "write_single_csv")
+    try:
+        write_single_csv(df, out, order_by=["id"])
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup("single-csv-sort")) == 2
+    with open(out) as f:
+        lines = [line.strip() for line in f]
+    assert lines[0] == "id,v"
+    assert [int(line.split(",")[0]) for line in lines[1:]] == list(range(40))
+
+
 def test_write_single_csv_failed_write_keeps_previous_file(spark, tmp_path):
     # the new file replaces the old one by rename, so a write that fails
     # while executing leaves the last good output, and no staging dir

@@ -84,6 +84,10 @@ def test_closure_output_schema(spark):
         ("org", T.LongType()), ("final_code", T.LongType()), ("n_hops", T.IntegerType()),
     ]
     assert _closure_rows(out) == [(1, 3, 2), (2, 3, 1)]
+    assert [f.nullable for f in out.schema] == [True, True, False]
+    # shipped as one Arrow table: no pickled RDD, no Python workers
+    leaf = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in leaf and "ExistingRDD" not in leaf, leaf
 
 
 @pytest.mark.slow
@@ -119,7 +123,6 @@ def _lookup(spark):
     )
 
 
-@pytest.mark.slow
 def test_adjust_merges_and_conserves_sums(spark):
     out = adjust_org_changes(
         _panel(spark), _lookup(spark), keys=["org_code", "period"],
@@ -171,3 +174,72 @@ def test_split_affected_partitions(spark):
     unaff_codes = {r.org_code for r in unaff.collect()}
     assert aff_codes == {"OLD1", "OLD2", "NEW", "PROB"}  # PROB via old_code, NEW via final
     assert unaff_codes == {"FREE", "NA1"}
+
+
+_ADJUST_KW = dict(keys=["org_code", "period"], sum_cols=["val"],
+                  org_col="org_code", period_col="period")
+
+
+def _edge_panel(spark):
+    panel = spark.createDataFrame([
+        (None, 2001, "No Code", 1.0), (None, 2002, "No Code B", 2.0),
+        ("N", 2001, None, 3.0), ("N", 2001, "En", 4.0),  # NULL name, earliest period
+        ("N", 2002, "En 2", 5.0),
+        ("A", None, "Alpha N", 6.0), ("A", 2001, "Alpha", 7.0),  # NULL period
+        ("B", 2004, "Bee", 8.0),                                  # B -> A
+        ("S", 2001, "Self", 9.0), ("S", 2003, "Self", 10.0),      # S -> S
+        ("X", 2001, "Stop", 11.0), ("X", 2002, "Stop", 12.0),     # X -> NULL, X -> Y
+        ("Y", 2002, "Why", 13.0),
+        ("P", 2001, "Prob", 14.0),                                # problematic
+        ("Z", 2001, "Zed", None),                                 # all-NULL measure
+    ], "org_code string, period int, org_name string, val double")
+    lookup = spark.createDataFrame(
+        [("S", "S", 0, 0), ("X", None, 1, 0), ("X", "Y", 1, 0), ("P", "Q", 0, 1),
+         ("B", "A", 0, 0)],
+        "old_code string, final_code string, experiences_split int, problematic int",
+    )
+    return panel, lookup
+
+
+def test_adjust_plans_one_shuffle_and_one_broadcast(spark):
+    """One hash exchange on the output org code serves the re-aggregation
+    and the per-org window; the lookup is the only broadcast."""
+    out = adjust_org_changes(*_edge_panel(spark), **_ADJUST_KW)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+
+
+def test_adjust_edge_cases_exact(spark):
+    """NULL org codes keep no name, a NULL name or a NULL period sorts
+    first in the name pick, a self-map and a stop code keep their own
+    rows, a problematic code is flagged not moved, an all-NULL measure
+    stays NULL; the schema is pinned, nullability included."""
+    panel, lookup = _edge_panel(spark)
+    out = adjust_org_changes(panel, lookup, **_ADJUST_KW)
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema] == [
+        ("org_code", "string", True), ("period", "int", True), ("val", "double", True),
+        ("exp_problematic_org_change", "int", True), ("unproblematic_org_change", "int", True),
+        ("org_name", "string", True), ("change_period", "int", True),
+        ("exp_unproblematic_org_change", "int", True),
+    ]
+    assert sorted(map(tuple, out.collect()), key=repr) == [
+        ("A", 2001, 7.0, 0, 0, "Alpha N", 2004, 1),
+        ("A", 2004, 8.0, 0, 1, "Alpha N", 2004, 1),
+        ("A", None, 6.0, 0, 0, "Alpha N", 2004, 1),
+        ("N", 2001, 7.0, 0, 0, None, None, 0),
+        ("N", 2002, 5.0, 0, 0, None, None, 0),
+        ("P", 2001, 14.0, 1, 0, "Prob", None, 0),
+        ("S", 2001, 9.0, 0, 1, "Self", 2003, 1),
+        ("S", 2003, 10.0, 0, 1, "Self", 2003, 1),
+        ("X", 2001, 11.0, 0, 0, "Stop", None, 0),
+        ("X", 2002, 12.0, 0, 0, "Stop", None, 0),
+        ("Y", 2001, 11.0, 0, 1, "Why", 2002, 1),
+        ("Y", 2002, 25.0, 0, 1, "Why", 2002, 1),
+        ("Z", 2001, None, 0, 0, "Zed", None, 0),
+        (None, 2001, 1.0, 0, 0, None, None, 0),
+        (None, 2002, 2.0, 0, 0, None, None, 0),
+    ]
+    unnamed = adjust_org_changes(panel, lookup, name_col=None, **_ADJUST_KW)
+    assert "org_name" not in unnamed.columns and unnamed.count() == 15
+    assert adjust_org_changes(panel.limit(0), lookup, **_ADJUST_KW).collect() == []

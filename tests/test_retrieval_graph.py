@@ -305,6 +305,21 @@ def test_graph_edge_cap_refuses_never_truncates(spark, monkeypatch):
         og.connected_components(p4)
 
 
+def test_pagerank_and_component_frames_scan_local_tables(spark):
+    # driver-built results ship as one Arrow table: no pickled RDD
+    e = spark.createDataFrame([(1, 2, 1.0), (2, 1, 1.0)], "src bigint, dst bigint, w double")
+    p = spark.createDataFrame([(1, 2), (4, 3)], "id_a bigint, id_b bigint")
+    for out, schema in [
+        (og.pagerank(e, iterations=2), [("node", "bigint"), ("pr", "double")]),
+        (og.connected_components(p), [("id", "bigint"), ("component", "bigint")]),
+    ]:
+        assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema] == [
+            (n, t, True) for n, t in schema
+        ]
+        leaf = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in leaf and "ExistingRDD" not in leaf, leaf
+
+
 def test_pagerank_null_endpoint_edges_dropped(spark):
     e = spark.createDataFrame(
         [(1, 2, 1), (2, 1, 1), (None, 1, 9), (1, None, 9)],
