@@ -58,6 +58,7 @@ from pyspark.sql.types import (
 
 from nhs_data_pipeline_spark.llm.dedup import _MD5_H60
 from nhs_data_pipeline_spark.llm.text import explode_terms
+from nhs_data_pipeline_spark.ops.core import local_frame
 from nhs_data_pipeline_spark.ops.graph import _round9
 
 #: Knuth multiplicative constant — spreads consecutive bucket ids.
@@ -282,8 +283,8 @@ def logreg_fit(
             StructField("weight", DoubleType()),
         ]
     )
-    return df.sparkSession.createDataFrame(
-        [(i - 1, w[i]) for i in range(buckets + 1)], schema
+    return local_frame(
+        df.sparkSession, [(i - 1, w[i]) for i in range(buckets + 1)], schema
     )
 
 
@@ -791,4 +792,4 @@ def isotonic_calibrate(
             StructField("iso_rate", DoubleType()),
         ]
     )
-    return bins_df.sparkSession.createDataFrame(out_rows, schema)
+    return local_frame(bins_df.sparkSession, out_rows, schema)

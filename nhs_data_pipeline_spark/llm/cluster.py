@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nhs_data_pipeline_spark.ops.core import local_frame
+
 _DIST = (
     "aggregate(zip_with(__x, __c, (a, b) -> (a - b) * (a - b)), "
     "cast(0.0 as double), (acc, t) -> acc + t)"
@@ -329,7 +331,8 @@ def kcenter_coreset(
     # carry the input's id dtype through (string doc ids work too; a
     # hardcoded bigint miscast/failed for non-bigint ids — r8 fix)
     id_type = emb.schema[id_col].dataType
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         selected,
         T.StructType(
             [

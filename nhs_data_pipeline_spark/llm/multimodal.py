@@ -17,6 +17,14 @@ need external libraries (MP3, video) remain stubbed behind
 ``NotImplementedError`` / a deterministic fake because this container
 ships no media libraries.
 
+One parser per container: BMP, WAV and PNG each have one function
+that walks the header and returns samples (:func:`_pixels_bmp`,
+:func:`_wav_samples`, :func:`_png_samples`); the 8-dim features, the
+resize pixels and the framed-audio samples are all derived from those.
+Resize takes a PNG whenever its samples are exact 8-bit (``vmax ==
+255``): 8-bit color/gray and every palette, interlaced or not; 16-bit
+and sub-byte grayscale stay feature-only.
+
 Scale design: decode/feature-extract runs as ``mapInPandas`` — one
 Arrow batch in, one out, executor-parallel, no shuffle. Batch size is
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a row of
@@ -27,8 +35,10 @@ row per artifact (flat, join-able by id).
 from __future__ import annotations
 
 import hashlib
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,14 +83,18 @@ def _fake_decode(content: bytes | None, dim: int = 8) -> list[float] | None:
     return [b / 255.0 for b in digest[:dim]]
 
 
-def _decode_bmp(b: bytes) -> list[float] | None:
-    """Pure-python decode of an uncompressed 24-bit BMP into an 8-dim
-    feature vector: ``[mean_b, mean_g, mean_r, mean_luma, width/4096,
-    height/4096, aspect_wh, 1.0]`` (channel means in 0..1). Exact
-    integer pixel sums, one float division each — deterministic across
-    platforms. Returns None for anything that is not a plain
-    BI_RGB 24bpp bottom-up-or-top-down BMP (truncated files included):
-    decode failures surface as ``decode_ok = False``, never a crash."""
+def _channel_sums(rgb: "np.ndarray") -> list[int]:
+    """Exact ``[sum_r, sum_g, sum_b]`` of an ``(h, w, 3)`` sample array
+    as Python ints, so each feature is one float division of exact
+    integers — deterministic across platforms."""
+    return [int(s) for s in rgb.reshape(-1, 3).sum(axis=0, dtype=np.int64)]
+
+
+def _pixels_bmp(b: bytes) -> "np.ndarray | None":
+    """The one BMP parser: an uncompressed BI_RGB 24bpp BMP, bottom-up
+    or top-down, into an ``(h, w, 3)`` uint8 RGB array with rows
+    top-down. Returns None for anything else, truncated files
+    included."""
     if len(b) < 54 or b[:2] != b"BM":
         return None
     data_off = int.from_bytes(b[10:14], "little")
@@ -94,14 +108,25 @@ def _decode_bmp(b: bytes) -> list[float] | None:
     stride = ((bpp * width + 31) // 32) * 4
     if data_off + stride * rows > len(b):
         return None
-    sb = sg = sr = 0
-    for r in range(rows):
-        base = data_off + r * stride
-        for c in range(width):
-            p = base + 3 * c
-            sb += b[p]
-            sg += b[p + 1]
-            sr += b[p + 2]
+    raw = np.frombuffer(
+        b, dtype=np.uint8, count=stride * rows, offset=data_off
+    ).reshape(rows, stride)
+    bgr = raw[:, : 3 * width].reshape(rows, width, 3)
+    if height > 0:  # bottom-up storage -> flip to top-down
+        bgr = bgr[::-1]
+    return bgr[:, :, ::-1].copy()  # BGR -> RGB
+
+
+def _decode_bmp(b: bytes) -> list[float] | None:
+    """BMP 8-dim feature vector from the :func:`_pixels_bmp` samples:
+    ``[mean_b, mean_g, mean_r, mean_luma, width/4096, height/4096,
+    aspect_wh, 1.0]`` (channel means in 0..1). Undecodable files
+    surface as ``decode_ok = False``, never a crash."""
+    rgb = _pixels_bmp(b)
+    if rgb is None:
+        return None
+    rows, width = rgb.shape[:2]
+    sr, sg, sb = _channel_sums(rgb)
     n = rows * width
     mb, mg, mr = sb / (255.0 * n), sg / (255.0 * n), sr / (255.0 * n)
     # integer-weighted BT.601 luma before the single division
@@ -109,14 +134,13 @@ def _decode_bmp(b: bytes) -> list[float] | None:
     return [mb, mg, mr, luma, width / 4096.0, rows / 4096.0, width / rows, 1.0]
 
 
-def _decode_wav(b: bytes) -> list[float] | None:
-    """Pure-python decode of a 16-bit PCM RIFF/WAVE into an 8-dim
-    feature vector: ``[mean_amp, rms_amp, zero_cross_rate,
-    duration_s/3600, channels/8, sample_rate/96000, n_frames/1e6,
-    2.0]`` (amplitudes normalized by 32768). RIFF chunks are walked
-    with byte arithmetic only; sums are exact integers with one float
-    division each. Returns None for non-PCM / non-16-bit / malformed
-    files — decode_ok False, never a crash."""
+def _wav_samples(b: bytes) -> "tuple[int, int, np.ndarray] | None":
+    """The one RIFF/WAVE parser: ``(channels, sample_rate, samples)``
+    for 16-bit PCM, ``samples`` the interleaved int16 array of every
+    whole sample in the data chunk (one that ends mid-frame included;
+    :func:`decode_pcm` rejects those). RIFF chunks are walked with byte
+    arithmetic only. Returns None for non-PCM / non-16-bit / empty /
+    malformed files."""
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         return None
     i, fmt, data = 12, None, None
@@ -129,7 +153,7 @@ def _decode_wav(b: bytes) -> list[float] | None:
         elif cid == b"data":
             data = body
         i += 8 + size + (size & 1)  # RIFF chunks are word-aligned
-    if fmt is None or data is None:
+    if fmt is None or data is None or len(data) < 2:
         return None
     audio_format = int.from_bytes(fmt[0:2], "little")
     channels = int.from_bytes(fmt[2:4], "little")
@@ -137,19 +161,25 @@ def _decode_wav(b: bytes) -> list[float] | None:
     bits = int.from_bytes(fmt[14:16], "little")
     if audio_format != 1 or bits != 16 or channels < 1 or sample_rate < 1:
         return None
-    n = len(data) // 2
-    if n == 0:
+    return channels, sample_rate, np.frombuffer(data, "<i2", len(data) // 2)
+
+
+def _decode_wav(b: bytes) -> list[float] | None:
+    """WAV 8-dim feature vector from the :func:`_wav_samples` samples:
+    ``[mean_amp, rms_amp, zero_cross_rate, duration_s/3600,
+    channels/8, sample_rate/96000, n_frames/1e6, 2.0]`` (amplitudes
+    normalized by 32768). Sums and sign flips run over all interleaved
+    samples as exact integers, one float division each."""
+    dec = _wav_samples(b)
+    if dec is None:
         return None
-    s_abs = s_sq = crossings = 0
-    prev_neg = None
-    for k in range(n):
-        v = int.from_bytes(data[2 * k : 2 * k + 2], "little", signed=True)
-        s_abs += abs(v)
-        s_sq += v * v
-        neg = v < 0
-        if prev_neg is not None and neg != prev_neg:
-            crossings += 1
-        prev_neg = neg
+    channels, sample_rate, s = dec
+    v = s.astype(np.int64)  # int16 squares overflow
+    n = len(v)
+    neg = v < 0
+    s_abs = int(np.abs(v).sum(dtype=np.int64))
+    s_sq = int((v * v).sum(dtype=np.int64))
+    crossings = int(np.count_nonzero(neg[1:] != neg[:-1]))
     frames = n // channels
     return [
         s_abs / (32768.0 * n),
@@ -208,30 +238,31 @@ def _png_unfilter(raw: bytes, h: int, stride: int, bpp: int) -> bytearray | None
     return out
 
 
-def _decode_png(b: bytes) -> list[float] | None:
-    """Pure-python decode of ANY spec-conforming PNG into the same
-    8-dim feature shape as :func:`_decode_bmp`: ``[mean_r, mean_g,
-    mean_b, mean_luma, width/4096, height/4096, aspect_wh, 3.0]``
-    (grayscale replicates the gray channel; alpha is ignored for the
-    means).
+_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
+# Adam7 passes as (x0, y0, dx, dy); a non-interlaced image is one pass.
+_ADAM7 = (
+    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+)
 
-    Covers (r8, closing every r7 honest gap): color types 0/2/4/6 at
-    8- AND 16-bit depth, paletted color type 3 (PLTE) at 1/2/4/8-bit
-    indices, sub-byte grayscale (type 0 at 1/2/4 bits), and Adam7
-    INTERLACING (each of the seven passes is an independently filtered
-    sub-image; every pixel belongs to exactly one pass, so the exact
-    channel sums add without any placement). stdlib ``zlib`` inflates
-    the concatenated IDAT stream; the five scanline filters are
-    inverted exactly (:func:`_png_unfilter`); channel sums are exact
-    integers normalized by the depth's native max (255, 65535, or
-    2^d - 1) with one float division each. Returns None — decode_ok
-    False, never a crash — for truncated, out-of-range palette
-    indices, or otherwise malformed files.
-    Reference behavior: scripts feeding a vision pipeline decode PNG
-    via PIL; this is the library-free equivalent for the container."""
-    import zlib
 
-    if len(b) < 8 or b[:8] != b"\x89PNG\r\n\x1a\n":
+def _png_samples(b: bytes) -> "tuple[np.ndarray, int] | None":
+    """The one PNG parser: ``(rgb, vmax)`` for ANY spec-conforming PNG
+    — color types 0/2/4/6 at 8- and 16-bit, paletted type 3 (PLTE) at
+    1/2/4/8-bit indices, sub-byte grayscale (type 0 at 1/2/4 bits) and
+    Adam7 interlacing. ``rgb`` is an ``(h, w, 3)`` array of samples at
+    the file's own depth (uint16 at 16-bit, else uint8; grayscale
+    replicates, alpha drops, palettes map to their 8-bit RGB) and
+    ``vmax`` that depth's largest sample (65535, 255 or 2^d - 1).
+
+    stdlib ``zlib`` inflates the concatenated IDAT stream; the five
+    scanline filters are inverted exactly (:func:`_png_unfilter`) per
+    pass, and each pass is placed back on the grid. The stream length
+    the header implies is checked against the inflated stream before
+    the canvas is allocated, so a corrupt IHDR cannot request a huge
+    array. Returns None — never a crash — for truncated, out-of-range
+    palette indices, or otherwise malformed files."""
+    if len(b) < 8 or b[:8] != _PNG_MAGIC:
         return None
     i, ihdr, idat, plte = 8, None, [], None
     while i + 8 <= len(b):
@@ -259,142 +290,71 @@ def _decode_png(b: bytes) -> list[float] | None:
     channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
     if channels is None:
         return None
-    packed = False  # sub-byte samples packed MSB-first into bytes
     if color_type == 3:
         if bit_depth not in (1, 2, 4, 8) or plte is None or len(plte) % 3:
             return None
-        packed = bit_depth < 8
+        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
     elif bit_depth in (1, 2, 4):
         if color_type != 0:
             return None  # sub-byte depth is grayscale-only per spec
-        packed = True
     elif bit_depth not in (8, 16):
         return None
-    def _sub_stride(w_p: int) -> tuple[int, int]:
-        """(stride, bpp) of a sub-image w_p pixels wide."""
-        if packed:
-            return (w_p * bit_depth + 7) // 8, 1
-        bps = bit_depth // 8
-        return w_p * channels * bps, channels * bps
-
-    def _sum_sub(px: bytearray, w_p: int, h_p: int, stride: int):
-        """Exact (sr, sg, sb) channel sums over one unfiltered
-        sub-image — pixel POSITIONS never matter for means, so Adam7
-        passes sum independently. Returns None on a bad palette
-        index."""
-        sr = sg = sb = 0
-        if packed or (color_type == 3 and bit_depth == 8):
-            mask = (1 << bit_depth) - 1
-            for r in range(h_p):
-                base = r * stride
-                for c in range(w_p):
-                    if bit_depth == 8:
-                        v = px[base + c]
-                    else:
-                        bitpos = c * bit_depth
-                        v = (
-                            px[base + (bitpos >> 3)]
-                            >> (8 - bit_depth - (bitpos & 7))
-                        ) & mask
-                    if color_type == 3:
-                        p = 3 * v
-                        if p + 2 >= len(plte):
-                            return None  # out-of-range palette index
-                        sr += plte[p]
-                        sg += plte[p + 1]
-                        sb += plte[p + 2]
-                    else:
-                        sr += v
-                        sg += v
-                        sb += v
-        elif bit_depth == 16:
-            step = channels * 2
-            for r in range(h_p):
-                base = r * stride
-                for c in range(w_p):
-                    p = base + step * c
-                    if channels >= 3:
-                        sr += (px[p] << 8) | px[p + 1]
-                        sg += (px[p + 2] << 8) | px[p + 3]
-                        sb += (px[p + 4] << 8) | px[p + 5]
-                    else:
-                        g = (px[p] << 8) | px[p + 1]
-                        sr += g
-                        sg += g
-                        sb += g
-        else:  # 8-bit direct color
-            if channels >= 3:
-                for r in range(h_p):
-                    base = r * stride
-                    for c in range(w_p):
-                        p = base + channels * c
-                        sr += px[p]
-                        sg += px[p + 1]
-                        sb += px[p + 2]
-            else:  # grayscale (+alpha): replicate
-                for r in range(h_p):
-                    base = r * stride
-                    for c in range(w_p):
-                        g = px[base + channels * c]
-                        sr += g
-                        sg += g
-                        sb += g
-        return sr, sg, sb
-
-    if packed:
-        vmax = 255 if color_type == 3 else (1 << bit_depth) - 1
-    else:
-        vmax = (1 << bit_depth) - 1
-
     try:
         raw = zlib.decompress(b"".join(idat))
     except zlib.error:
         return None
-
-    n = w * h
-    sr = sg = sb = 0
-    if interlace == 0:
-        stride, bpp = _sub_stride(w)
-        if len(raw) != h * (stride + 1):
-            return None
-        px = _png_unfilter(raw, h, stride, bpp)
+    # every non-empty pass as (x0, y0, dx, dy, w_p, h_p, byte stride);
+    # a pass with zero width or height contributes NO scanlines
+    passes = []
+    for x0, y0, dx, dy in _ADAM7 if interlace else ((0, 0, 1, 1),):
+        w_p = (w - x0 + dx - 1) // dx if w > x0 else 0
+        h_p = (h - y0 + dy - 1) // dy if h > y0 else 0
+        if w_p > 0 and h_p > 0:
+            stride = (w_p * channels * bit_depth + 7) // 8
+            passes.append((x0, y0, dx, dy, w_p, h_p, stride))
+    if sum(p[5] * (p[6] + 1) for p in passes) != len(raw):
+        return None  # short stream or trailing garbage
+    bpp = max(1, channels * bit_depth // 8)
+    rgb = np.empty((h, w, 3), dtype=np.uint16 if bit_depth == 16 else np.uint8)
+    off = 0
+    for x0, y0, dx, dy, w_p, h_p, stride in passes:
+        end = off + h_p * (stride + 1)
+        px = _png_unfilter(raw[off:end], h_p, stride, bpp)
         if px is None:
             return None
-        sums = _sum_sub(px, w, h, stride)
-        if sums is None:
-            return None
-        sr, sg, sb = sums
-    else:
-        # Adam7: seven filtered sub-images concatenated in the IDAT
-        # stream, each with its own width/stride; a pass with zero
-        # width or height contributes NO scanlines. Every image pixel
-        # belongs to exactly one pass, so channel sums add up.
-        passes = [
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        ]
-        off = 0
-        for x0, y0, dx, dy in passes:
-            w_p = (w - x0 + dx - 1) // dx if w > x0 else 0
-            h_p = (h - y0 + dy - 1) // dy if h > y0 else 0
-            if w_p <= 0 or h_p <= 0:
-                continue
-            stride, bpp = _sub_stride(w_p)
-            end = off + h_p * (stride + 1)
-            if end > len(raw):
-                return None
-            px = _png_unfilter(raw[off:end], h_p, stride, bpp)
-            if px is None:
-                return None
-            sums = _sum_sub(px, w_p, h_p, stride)
-            if sums is None:
-                return None
-            sr += sums[0]
-            sg += sums[1]
-            sb += sums[2]
-            off = end
-        if off != len(raw):
-            return None  # trailing garbage / short stream
+        if bit_depth == 16:
+            s = np.frombuffer(px, dtype=">u2").reshape(h_p, w_p, channels)
+        else:  # 1/2/4/8-bit samples packed MSB-first; row padding drops
+            shifts = np.arange(8 - bit_depth, -1, -bit_depth, dtype=np.uint8)
+            a = np.frombuffer(px, dtype=np.uint8).reshape(h_p, stride, 1)
+            s = ((a >> shifts) & ((1 << bit_depth) - 1)).reshape(h_p, -1)
+            s = s[:, : w_p * channels].reshape(h_p, w_p, channels)
+        if color_type == 3:
+            if int(s.max(initial=0)) >= len(pal):
+                return None  # out-of-range palette index
+            s = pal[s[:, :, 0]]
+        elif channels < 3:
+            s = s[:, :, :1]  # gray(+alpha): one channel broadcasts to r, g, b
+        rgb[y0::dy, x0::dx] = s[:, :, :3]
+        off = end
+    return rgb, 255 if color_type == 3 else (1 << bit_depth) - 1
+
+
+def _decode_png(b: bytes) -> list[float] | None:
+    """PNG 8-dim feature vector from the :func:`_png_samples` samples,
+    the same shape as :func:`_decode_bmp`: ``[mean_r, mean_g, mean_b,
+    mean_luma, width/4096, height/4096, aspect_wh, 3.0]``. Channel sums
+    are exact integers normalized by the depth's ``vmax`` with one
+    float division each. Reference behavior: scripts feeding a vision
+    pipeline decode PNG via PIL; this is the library-free equivalent
+    for the container."""
+    dec = _png_samples(b)
+    if dec is None:
+        return None
+    rgb, vmax = dec
+    h, w = rgb.shape[:2]
+    sr, sg, sb = _channel_sums(rgb)
+    n = w * h
     luma = (299 * sr + 587 * sg + 114 * sb) / (1000.0 * vmax * n)
     return [
         sr / (float(vmax) * n),
@@ -482,8 +442,6 @@ def _jpeg_idct_plane(coefs, q) -> "object":
     progressive path reuses the IDENTICAL float expression (same
     2-D matmuls per block, same floor-round: bit-for-bit against the
     test replica)."""
-    import numpy as np
-
     basis = np.zeros((8, 8))
     for u in range(8):
         cu = (1.0 / np.sqrt(2.0)) if u == 0 else 1.0
@@ -514,8 +472,6 @@ def _jpeg_features(comps, planes, w: int, h: int, hmax: int, vmax: int):
     (nearest), apply the JFIF YCbCr->RGB transform with the portable
     floor-round, and reduce to the 8-dim feature vector — the shared
     tail of the baseline and progressive decoders."""
-    import numpy as np
-
     full = []
     ys = np.arange(h)
     xs = np.arange(w)
@@ -595,8 +551,6 @@ def _decode_jpeg(b: bytes) -> list[float] | None:
     :func:`_decode_jpeg_progressive` (r9).
     Reference behavior: scripts feeding a vision pipeline decode JPEG
     via PIL; this is the library-free equivalent for the container."""
-    import numpy as np
-
     if len(b) < 4 or b[:2] != b"\xff\xd8":
         return None
     qt: dict[int, list[int]] = {}
@@ -776,8 +730,6 @@ def _decode_jpeg_progressive(b: bytes) -> list[float] | None:
     crash — on malformed/truncated input. The refinement algorithms
     follow the public T.81 spec (G.1.2.2-G.1.2.3; the same logic
     libjpeg/stb_image implement)."""
-    import numpy as np
-
     if len(b) < 4 or b[:2] != b"\xff\xd8":
         return None
     qt: dict[int, list[int]] = {}
@@ -1044,7 +996,7 @@ def real_decode(content: bytes | None) -> list[float] | None:
     parser can own: uncompressed 24-bit BMP, 16-bit PCM WAV, and
     PNG at every PLTE/depth/interlace combination the spec allows
     (zlib IDAT + exact inversion of all five scanline filters, Adam7
-    passes summed exactly), and JPEG — baseline-sequential AND
+    passes placed back on the grid), and JPEG — baseline-sequential AND
     progressive (Huffman + T.81 Annex G scans + IDCT).
     Sniffs the magic bytes and dispatches; anything else
     (MP3/video/...) returns None -> ``decode_ok = False``. Pass it
@@ -1062,7 +1014,7 @@ def real_decode(content: bytes | None) -> list[float] | None:
         return _decode_bmp(b)
     if b[:4] == b"RIFF":
         return _decode_wav(b)
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
+    if b[:8] == _PNG_MAGIC:
         return _decode_png(b)
     if b[:2] == b"\xff\xd8":
         return _decode_jpeg(b)
@@ -1110,108 +1062,11 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def _pixels_bmp(b: bytes) -> "object":
-    """Full-pixel decode of an uncompressed 24-bit BMP into an
-    ``(h, w, 3)`` uint8 RGB numpy array (bottom-up or top-down rows
-    both normalized to top-down). Same validity envelope as
-    :func:`_decode_bmp`; returns None on anything else."""
-    import numpy as np
-
-    if len(b) < 54 or b[:2] != b"BM":
-        return None
-    data_off = int.from_bytes(b[10:14], "little")
-    width = int.from_bytes(b[18:22], "little", signed=True)
-    height = int.from_bytes(b[22:26], "little", signed=True)
-    bpp = int.from_bytes(b[28:30], "little")
-    compression = int.from_bytes(b[30:34], "little")
-    if bpp != 24 or compression != 0 or width <= 0 or height == 0:
-        return None
-    rows = abs(height)
-    stride = ((bpp * width + 31) // 32) * 4
-    if data_off + stride * rows > len(b):
-        return None
-    raw = np.frombuffer(
-        b, dtype=np.uint8, count=stride * rows, offset=data_off
-    ).reshape(rows, stride)
-    bgr = raw[:, : 3 * width].reshape(rows, width, 3)
-    if height > 0:  # bottom-up storage -> flip to top-down
-        bgr = bgr[::-1]
-    return bgr[:, :, ::-1].copy()  # BGR -> RGB
-
-
-def _pixels_png(b: bytes) -> "object":
-    """Full-pixel decode of an 8-bit NON-interlaced PNG (color types
-    0/2/3/4/6, 8-bit palette) into an ``(h, w, 3)`` uint8 RGB array —
-    grayscale replicates, alpha drops. Sub-byte depths, 16-bit, and
-    Adam7 stay feature-only (:func:`_decode_png` handles their means);
-    a resize of those returns None -> ``resize_ok = False``, honestly,
-    rather than silently rounding bit depth."""
-    import zlib
-
-    import numpy as np
-
-    if len(b) < 8 or b[:8] != b"\x89PNG\r\n\x1a\n":
-        return None
-    i, ihdr, idat, plte = 8, None, [], None
-    while i + 8 <= len(b):
-        ln = int.from_bytes(b[i : i + 4], "big")
-        typ = b[i + 4 : i + 8]
-        body = b[i + 8 : i + 8 + ln]
-        if len(body) < ln:
-            return None
-        if typ == b"IHDR":
-            ihdr = body
-        elif typ == b"PLTE":
-            plte = body
-        elif typ == b"IDAT":
-            idat.append(body)
-        elif typ == b"IEND":
-            break
-        i += 12 + ln
-    if ihdr is None or len(ihdr) < 13 or not idat:
-        return None
-    w = int.from_bytes(ihdr[0:4], "big")
-    h = int.from_bytes(ihdr[4:8], "big")
-    bit_depth, color_type, comp, filt, interlace = ihdr[8:13]
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
-    if (
-        comp != 0
-        or filt != 0
-        or interlace != 0
-        or w <= 0
-        or h <= 0
-        or bit_depth != 8
-        or channels is None
-    ):
-        return None
-    if color_type == 3 and (plte is None or len(plte) % 3):
-        return None
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error:
-        return None
-    stride = w * channels
-    if len(raw) != h * (stride + 1):
-        return None
-    px = _png_unfilter(raw, h, stride, channels)
-    if px is None:
-        return None
-    arr = np.frombuffer(bytes(px), dtype=np.uint8).reshape(h, w, channels)
-    if color_type == 3:
-        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-        idx = arr[:, :, 0]
-        if int(idx.max(initial=0)) >= pal.shape[0]:
-            return None
-        return pal[idx].copy()
-    if channels >= 3:
-        return arr[:, :, :3].copy()
-    return np.repeat(arr[:, :, :1], 3, axis=2)  # gray(+alpha) replicate
-
-
 def decode_pixels(content: bytes | None) -> "object":
     """REAL bytes-to-PIXELS decoder: sniffs the magic bytes and
     returns an ``(h, w, 3)`` uint8 RGB numpy array, or None for
-    formats whose full-pixel path isn't owned here (JPEG stays
+    PNGs whose samples are not exact 8-bit (16-bit, sub-byte
+    grayscale) and formats whose full-pixel path isn't owned here (JPEG stays
     feature-only — :func:`real_decode` covers its means — because the
     resample contract wants exact, hand-checkable pixels, and the
     pure-python IDCT pipeline's rounding is pinned to the feature
@@ -1221,8 +1076,10 @@ def decode_pixels(content: bytes | None) -> "object":
     b = bytes(content)
     if b[:2] == b"BM":
         return _pixels_bmp(b)
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        return _pixels_png(b)
+    if b[:8] == _PNG_MAGIC:
+        dec = _png_samples(b)
+        if dec is not None and dec[1] == 255:  # exact 8-bit samples only
+            return dec[0]
     return None
 
 
@@ -1232,8 +1089,6 @@ def _encode_bmp24(arr: "object") -> bytes:
     reads and writes, so a resized image round-trips through
     :func:`real_decode` / :func:`extract_image_meta` with no imaging
     library."""
-    import numpy as np
-
     h, w = arr.shape[:2]
     stride = ((24 * w + 31) // 32) * 4
     body = np.zeros((h, stride), dtype=np.uint8)
@@ -1260,8 +1115,6 @@ def _resize_nearest(arr: "object", out_w: int, out_h: int) -> "object":
     """Nearest-neighbor resample under the half-pixel-center
     convention: source index = floor((dst + 0.5) * src/dst), clamped.
     Pure integer/numpy indexing — no interpolation, bit-exact."""
-    import numpy as np
-
     h, w = arr.shape[:2]
     rows = np.minimum(
         ((np.arange(out_h) + 0.5) * (h / out_h)).astype(np.int64), h - 1
@@ -1278,8 +1131,6 @@ def _resize_bilinear(arr: "object", out_w: int, out_h: int) -> "object":
     clamped to [0, src-1], then the 2x2 lerp in float64, rounded
     half-away via floor(v + 0.5) back to uint8. Fully vectorized —
     one gather per corner, three lerps, no python pixel loop."""
-    import numpy as np
-
     h, w = arr.shape[:2]
     fy = np.clip((np.arange(out_h) + 0.5) * (h / out_h) - 0.5, 0, h - 1)
     fx = np.clip((np.arange(out_w) + 0.5) * (w / out_w) - 0.5, 0, w - 1)
@@ -1311,11 +1162,13 @@ def resize_images(
     media: DataFrame, width: int, height: int, method: str = "bilinear"
 ) -> DataFrame:
     """REAL image resize (r9 verdict ask #2 — the stub is closed):
-    decode to pixels (:func:`decode_pixels` — BMP + 8-bit PNG), pure-
-    numpy nearest/bilinear resample, re-encode as 24-bit BMP bytes, all
-    inside ONE Arrow-batched ``mapInPandas`` crossing — the identical
-    production shape as :func:`decode_features`. Undecodable content
-    (JPEG pixels, exotic PNG depths, corrupt blobs, NULL) yields
+    decode to pixels (:func:`decode_pixels` — 24-bit BMP and every PNG
+    whose samples are exact 8-bit: 8-bit color/gray, palettes at any
+    index depth, Adam7 included), pure-numpy nearest/bilinear resample,
+    re-encode as 24-bit BMP bytes, all inside ONE Arrow-batched
+    ``mapInPandas`` crossing — the identical production shape as
+    :func:`decode_features`. Undecodable content (JPEG pixels, 16-bit
+    or sub-byte grayscale PNG, corrupt blobs, NULL) yields
     ``resize_ok = False`` with NULL content — never a crash, never a
     fake pixel.
 
@@ -1465,42 +1318,19 @@ def chunk_media_segments(
     )
 
 
-def decode_pcm(content: bytes | None) -> "object":
+def decode_pcm(content: bytes | None) -> "tuple[np.ndarray, int] | None":
     """REAL bytes-to-SAMPLES decoder for 16-bit PCM RIFF/WAVE: returns
     ``(samples int16 ndarray [n_frames, channels], sample_rate)`` or
-    None — the sample-level sibling of :func:`_decode_wav`'s summary
-    features, feeding the framed feature extractor below. Same
-    validity envelope (PCM, 16-bit, well-formed RIFF)."""
-    import numpy as np
-
+    None, feeding the framed feature extractor below. The samples of
+    :func:`_wav_samples`, the one WAV parser, minus a data chunk that
+    ends mid-frame."""
     if content is None:
         return None
-    b = bytes(content)
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+    dec = _wav_samples(bytes(content))
+    if dec is None or len(dec[2]) % dec[0]:
         return None
-    i, fmt, data = 12, None, None
-    while i + 8 <= len(b):
-        cid = b[i : i + 4]
-        size = int.from_bytes(b[i + 4 : i + 8], "little")
-        body = b[i + 8 : i + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt = body
-        elif cid == b"data":
-            data = body
-        i += 8 + size + (size & 1)
-    if fmt is None or data is None:
-        return None
-    audio_format = int.from_bytes(fmt[0:2], "little")
-    channels = int.from_bytes(fmt[2:4], "little")
-    sample_rate = int.from_bytes(fmt[4:8], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if audio_format != 1 or bits != 16 or channels < 1 or sample_rate < 1:
-        return None
-    n = len(data) // 2
-    if n == 0 or n % channels:
-        return None
-    arr = np.frombuffer(data, dtype="<i2", count=n).reshape(-1, channels)
-    return arr, sample_rate
+    channels, sample_rate, samples = dec
+    return samples.reshape(-1, channels), sample_rate
 
 
 AUDIO_FRAME_SCHEMA = T.StructType(
@@ -1533,8 +1363,6 @@ def audio_frame_features(media: DataFrame, frame_ms: int = 250) -> DataFrame:
     non-negative); peak is max |sample| (int). Undecodable rows emit
     ONE row with NULL features and ``decode_ok = False`` — present in
     the output, never silently dropped."""
-    import numpy as np
-
     if frame_ms <= 0:
         raise ValueError("frame_ms must be positive")
 

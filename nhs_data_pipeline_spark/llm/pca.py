@@ -55,6 +55,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from nhs_data_pipeline_spark.ops.core import local_frame
 
 
 def _quantized_micro(df: DataFrame, vec_col: str) -> DataFrame:
@@ -225,10 +228,13 @@ def power_pca(
                 i: sorted(j for (i2, j) in cov if i2 == i) for i in row_keys
             }
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
-        "pc int, dim int, component double, eigenvalue double, "
-        "explained_ratio double",
+        StructType.fromDDL(
+            "pc int, dim int, component double, eigenvalue double, "
+            "explained_ratio double"
+        ),
     )
 
 

@@ -23,6 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from nhs_data_pipeline_spark.ops.core import local_frame
 
 
 def _sq(label: str) -> str:
@@ -963,9 +966,10 @@ def group_weighted_quantiles(
         F.sum("__cnt").cast("bigint").alias("n_rows"),
     )
     spark = df.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(s, fr.numerator, fr.denominator) for s, fr in probes],
-        "q string, __num bigint, __den bigint",
+        StructType.fromDDL("q string, __num bigint, __den bigint"),
     )
     # each probe picks the bucket where den*cum first reaches num*tot
     picked = (

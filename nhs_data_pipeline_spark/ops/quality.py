@@ -17,6 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from nhs_data_pipeline_spark.ops.core import local_frame
 
 
 def check_not_null(df: DataFrame, col: str) -> DataFrame:
@@ -160,9 +163,10 @@ def benford_audit(df: DataFrame, value_int_col: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("n_obs"))
     )
     spark = df.sparkSession
-    exp = spark.createDataFrame(
+    exp = local_frame(
+        spark,
         [(d, math.log10(1.0 + 1.0 / d)) for d in range(1, 10)],
-        "digit int, expected_share double",
+        StructType.fromDDL("digit int, expected_share double"),
     )
     tot = digits.agg(F.sum("n_obs").cast("bigint").alias("__tot"))
     j = (

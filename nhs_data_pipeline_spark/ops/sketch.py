@@ -38,8 +38,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nhs_data_pipeline_spark.llm.dedup import _MD5_H60
+from nhs_data_pipeline_spark.ops.core import local_frame
 
 
 def _ns_join(
@@ -371,9 +373,10 @@ def histogram_quantiles(
     )
     totals = counts.groupBy(*groups).agg(F.sum("cnt").alias("n"))
     fracs = [(float(q), Fraction(str(q))) for q in quantiles]
-    qdf = counts.sparkSession.createDataFrame(
+    qdf = local_frame(
+        counts.sparkSession,
         [(q, fr.numerator, fr.denominator) for q, fr in fracs],
-        "q double, __num bigint, __den bigint",
+        StructType.fromDDL("q double, __num bigint, __den bigint"),
     )
     probes = (
         totals.crossJoin(F.broadcast(qdf))

@@ -20,10 +20,8 @@ Semantics, in the reference's order:
 6.  Recode ``org_code := coalesce(final_code, org_code)``.
 7.  Re-aggregate the synthetic merged trust: group-by panel keys with
     NA-preserving sums (Spark ``sum`` is already NULL-on-all-NULL).
-8.  Recompute ratio columns that don't sum (e.g. percent occupied =
-    occupied / available, NULL on zero denominator).
-9.  Union adjusted + untouched partitions.
-10. Re-attach names; derive ``unproblematic_org_change`` /
+8.  Union adjusted + untouched partitions.
+9.  Re-attach names; derive ``unproblematic_org_change`` /
     ``exp_unproblematic_org_change`` flags.
 
 The whole transformer is one lazy DAG with one broadcast join and one
@@ -36,12 +34,11 @@ flag, so neither needs an exchange of its own.
 
 from __future__ import annotations
 
-from typing import Mapping, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nhs_data_pipeline_spark.functions import safe_div
 from nhs_data_pipeline_spark.ops.core import union_by_name
 
 
@@ -50,23 +47,20 @@ def adjust_org_changes(
     lookup: DataFrame,
     keys: Sequence[str],
     sum_cols: Sequence[str],
-    ratio_specs: Mapping[str, tuple[str, str]] | None = None,
-    org_col: str = "org_code",
-    period_col: str = "period",
     name_col: str | None = "org_name",
 ) -> DataFrame:
     """Apply org-change adjustment to a long panel.
 
     Parameters
     ----------
-    df : panel with ``org_col``, ``period_col``, measure columns.
+    df : panel with the key columns and measure columns.
     lookup : ``(old_code, final_code, experiences_split, problematic)`` —
         lookup-sized; always broadcast.
-    keys : full re-aggregation key set (must include ``org_col`` and
-        ``period_col``).
+    keys : full re-aggregation key set, ``(org_col, period_col, ...)``:
+        the first key is the org code, the second the period. Fewer
+        than two keys raise ``ValueError``.
     sum_cols : measure columns re-aggregated by NA-preserving sum.
-    ratio_specs : ``{out_col: (numerator_col, denominator_col)}`` ratios
-        recomputed *after* summation (ratios don't sum).
+        Ratio columns don't sum; callers recompute them afterwards.
 
     Precondition: the lookup is transitively closed, so a final code is
     never itself recoded; ``successor_closure`` lookups are, as a final
@@ -75,7 +69,15 @@ def adjust_org_changes(
     code, so under a hand-built chain (``A -> X`` and ``X -> Y``, both
     adjustable) group ``X`` holds only A's rows and its name is NULL.
     """
-    ratio_specs = dict(ratio_specs or {})
+    # A differently-ordered key tuple would silently no-op the
+    # adjustment (the lookup join would never match), so fail loudly
+    # on an obvious breach.
+    if len(keys) < 2:
+        raise ValueError(
+            "org-change adjustment needs keys = (org_col, period_col, ...);"
+            f" got {list(keys)!r}"
+        )
+    org_col, period_col = keys[0], keys[1]
     # Only the columns the adjustment reads: carrying extras (e.g.
     # experiences_split) risks AMBIGUOUS_REFERENCE when the panel
     # already has a same-named column.
@@ -123,18 +125,13 @@ def adjust_org_changes(
         *([F.min("__name").alias("__name")] if named else []),
     )
 
-    # 8. recompute ratios post-sum (build_datasets_overnight_day_beds.R:528-539).
-    out = aggregated
-    for out_col, (num, den) in ratio_specs.items():
-        out = out.withColumn(out_col, safe_div(F.col(num), F.col(den)))
-
-    # 10. per-org name, change period and group flag. The org code leads
+    # 9. per-org name, change period and group flag. The org code leads
     # when a name is attached; that column order is part of the output.
     w = Window.partitionBy(org_col)
     lead = [org_col] if named else []
-    return out.select(
+    return aggregated.select(
         *lead,
-        *[c for c in out.columns if c not in (*lead, "__change", "__name")],
+        *[c for c in aggregated.columns if c not in (*lead, "__change", "__name")],
         *([F.min("__name").over(w)[name_col].alias(name_col)] if named else []),
         F.max("__change").over(w).alias("change_period"),
         F.max("unproblematic_org_change").over(w).alias("exp_unproblematic_org_change"),

@@ -87,23 +87,11 @@ def run_series(spark: SparkSession, cfg: SeriesConfig) -> DataFrame:
         {c: to_numeric(c) for c in cfg.numeric_cols if c in panel.columns}
     )
     if cfg.org_lookup is not None:
-        # CONTRACT: keys[0] is the org column, keys[1] the period
-        # column (documented on SeriesConfig) — a differently-ordered
-        # key tuple would silently no-op the adjustment (the lookup
-        # join would never match), so fail loudly on an obvious breach.
-        keys = list(cfg.keys)
-        if len(keys) < 2:
-            raise ValueError(
-                f"series {cfg.name}: org-change adjustment needs keys ="
-                f" (org_col, period_col, ...); got {keys!r}"
-            )
         panel = adjust_org_changes(
             panel,
             cfg.org_lookup,
-            keys=keys,
+            keys=list(cfg.keys),
             sum_cols=list(cfg.sum_cols),
-            org_col=keys[0],
-            period_col=keys[1],
             name_col=cfg.name_col,
         )
     return panel.localCheckpoint()

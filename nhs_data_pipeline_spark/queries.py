@@ -1000,13 +1000,16 @@ def orgchange_adjust_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("Trust "), (F.col("o_custkey") % 20).cast("string")).alias("org_name"),
         F.col("o_totalprice").alias("val"),
     )
-    lookup = spark.createDataFrame(
+    lookup = oc.local_frame(
+        spark,
         [("T10", "T0", 0, 0), ("T11", "T1", 0, 0), ("T12", "T2", 0, 1), ("T13", "T3", 1, 0)],
-        ["old_code", "final_code", "experiences_split", "problematic"],
+        StructType.fromDDL(
+            "old_code string, final_code string, experiences_split bigint, problematic bigint"
+        ),
     )
     out = oa.adjust_org_changes(
         panel, lookup, keys=["org_code", "period"], sum_cols=["val"],
-        org_col="org_code", period_col="period", name_col="org_name",
+        name_col="org_name",
     )
     return out.select(
         "org_code", "period", F.round("val", 2).alias("val"),

@@ -2092,10 +2092,12 @@ def test_resize_images_spark_roundtrip(spark):
 
 
 def test_resize_pixel_decoders_match_feature_decoders():
-    """decode_pixels must agree with the (independently written)
-    feature decoders on channel means, including the BMP bottom-up
-    flip, PNG palette mapping, gray replication, and alpha drop; the
-    BMP encoder round-trips odd widths (stride padding) exactly."""
+    """decode_pixels must agree with real_decode's channel means,
+    including the BMP bottom-up flip, PNG palette mapping, gray
+    replication, and alpha drop; the BMP encoder round-trips odd
+    widths (stride padding) exactly. Both read the same one parser
+    per container, so the independent references are the bit-exact
+    feature tests' hand-computed sums, not this agreement."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -2130,6 +2132,62 @@ def test_resize_pixel_decoders_match_feature_decoders():
         mm.resize_images(None, 0, 4)
     with pytest.raises(ValueError):
         mm.resize_images(None, 4, 4, method="lanczos")
+
+
+def test_decode_pixels_png_adam7_and_subbyte_palette():
+    """Every PNG whose samples are exact 8-bit resizes: an Adam7 file
+    decodes to the same pixels as the image stored non-interlaced, and
+    2-bit palette indices map through PLTE as mapped by hand. 16-bit and
+    sub-byte grayscale samples are not 8-bit, so they stay None."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(29)
+    pixels = [
+        [tuple(rng.randrange(256) for _ in range(3)) for _ in range(7)]
+        for _ in range(6)
+    ]
+    inter = mm.decode_pixels(_make_png_adam7(pixels, 2, [0, 1, 2, 3, 4, 1, 2]))
+    plain = mm.decode_pixels(_make_png(pixels, 2, [0, 1, 2, 3, 4, 0]))
+    assert inter is not None and inter.dtype == np.uint8
+    assert (inter == plain).all() and (plain == np.array(pixels)).all()
+    gray = [[(rng.randrange(256),) for _ in range(5)] for _ in range(3)]
+    g = mm.decode_pixels(_make_png_adam7(gray, 0, [1, 0, 2, 0, 3, 0, 4]))
+    assert (g == np.repeat(np.array(gray), 3, axis=2)).all()
+    # 5 px/row of 2-bit indices, packed MSB-first, final byte padded
+    plte = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 10, 20, 30])
+    rows = [bytes([0b00011011, 0b10 << 6]), bytes([0b11100100, 0b01 << 6])]
+    px = mm.decode_pixels(_make_png_raw(rows, 5, 2, 2, 3, 1, [0, 4], plte))
+    pal = [[255, 0, 0], [0, 255, 0], [0, 0, 255], [10, 20, 30]]
+    assert px.tolist() == [
+        [pal[i] for i in (0, 1, 2, 3, 2)],
+        [pal[i] for i in (3, 2, 1, 0, 1)],
+    ]
+    sixteen = _make_png_raw([bytes([0x12, 0x34])], 1, 1, 16, 0, 2, [0])
+    two_bit_gray = _make_png_raw([bytes([0b00011011])], 4, 1, 2, 0, 1, [0])
+    for blob in (sixteen, two_bit_gray):
+        assert mm.real_decode(blob) is not None and mm.decode_pixels(blob) is None
+
+
+def test_png_huge_declared_height_rejected_before_allocation():
+    """An IHDR declaring 2^28 rows over a one-pixel IDAT fails the
+    stream-length check before any canvas is allocated, interlaced or
+    not."""
+    import tracemalloc
+
+    good = bytearray(_make_png([[(1, 2, 3)]], color_type=2, filters=[0]))
+    good[20:24] = (1 << 28).to_bytes(4, "big")  # IHDR height (CRC unchecked)
+    for interlace in (0, 1):
+        good[28] = interlace
+        tracemalloc.start()
+        try:
+            assert mm.real_decode(bytes(good)) is None
+            assert mm.decode_pixels(bytes(good)) is None
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 1 << 20, peak
 
 
 @pytest.mark.slow

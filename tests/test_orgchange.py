@@ -126,7 +126,7 @@ def _lookup(spark):
 def test_adjust_merges_and_conserves_sums(spark):
     out = adjust_org_changes(
         _panel(spark), _lookup(spark), keys=["org_code", "period"],
-        sum_cols=["val"], org_col="org_code", period_col="period",
+        sum_cols=["val"],
     )
     rows = {(r.org_code, r.period): r for r in out.collect()}
     # merged trust: OLD1+OLD2+NEW in 2001 = 10+5+100
@@ -156,11 +156,11 @@ def test_adjust_idempotent(spark):
     codes are gone after the first pass)."""
     out1 = adjust_org_changes(
         _panel(spark), _lookup(spark), keys=["org_code", "period"],
-        sum_cols=["val"], org_col="org_code", period_col="period",
+        sum_cols=["val"],
     ).select("org_code", "period", "val", "org_name")
     out2 = adjust_org_changes(
         out1, _lookup(spark), keys=["org_code", "period"],
-        sum_cols=["val"], org_col="org_code", period_col="period",
+        sum_cols=["val"],
     ).select("org_code", "period", "val", "org_name")
     a = {(r.org_code, r.period): r.val for r in out1.collect()}
     b = {(r.org_code, r.period): r.val for r in out2.collect()}
@@ -176,8 +176,7 @@ def test_split_affected_partitions(spark):
     assert unaff_codes == {"FREE", "NA1"}
 
 
-_ADJUST_KW = dict(keys=["org_code", "period"], sum_cols=["val"],
-                  org_col="org_code", period_col="period")
+_ADJUST_KW = dict(keys=["org_code", "period"], sum_cols=["val"])
 
 
 def _edge_panel(spark):
@@ -208,6 +207,12 @@ def test_adjust_plans_one_shuffle_and_one_broadcast(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("BroadcastExchange") == 1, plan
+
+
+def test_adjust_needs_org_and_period_keys(spark):
+    panel, lookup = _edge_panel(spark)
+    with pytest.raises(ValueError, match="org_col, period_col"):
+        adjust_org_changes(panel, lookup, keys=["org_code"], sum_cols=["val"])
 
 
 def test_adjust_edge_cases_exact(spark):

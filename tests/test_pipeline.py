@@ -320,7 +320,7 @@ def test_rtt_full_series_composition(spark):
     bins = ["between_0_1", "between_17_18", "between_52_plus"]
     adj = adjust_org_changes(
         df, lookup, keys=["org_code", "period"], sum_cols=bins,
-        org_col="org_code", period_col="period", name_col=None,
+        name_col=None,
     )
     merged = {r.org_code: r for r in adj.collect()}
     assert merged["NEW"].between_17_18 == 30.0  # 10+20 merged

@@ -320,6 +320,24 @@ def test_pagerank_and_component_frames_scan_local_tables(spark):
         assert "LocalTableScan" in leaf and "ExistingRDD" not in leaf, leaf
 
 
+@pytest.mark.parametrize("name", [
+    "quality_benford_digits",  # ops/quality.py::benford_audit
+    "o5_quantile_bands",  # ops/analytics.py::group_weighted_quantiles
+    "sketch_quantile_hist",  # ops/sketch.py::histogram_quantiles
+    "classifier_logreg_fit",  # llm/classify.py::logreg_fit
+    "eval_isotonic_calibration",  # llm/classify.py::isotonic_calibrate
+    "embed_kcenter_coreset",  # llm/cluster.py::kcenter_coreset
+    "embed_pca_power",  # llm/pca.py::power_pca
+    "orgchange_adjust_panel",  # the registry's hand-built lookup
+])
+def test_registry_driver_built_frames_scan_local_tables(spark, sf_dir, name):
+    # every driver-built frame in these plans ships as one Arrow table
+    from nhs_data_pipeline_spark.queries import QUERIES
+
+    plan = QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_pagerank_null_endpoint_edges_dropped(spark):
     e = spark.createDataFrame(
         [(1, 2, 1), (2, 1, 1), (None, 1, 9), (1, None, 9)],

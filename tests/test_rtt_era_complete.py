@@ -151,7 +151,7 @@ def adjusted(spark):
     bins = BINS_52 + ["between_52_plus"]
     adj = adjust_org_changes(
         panel, lookup, keys=["org_code", "period"], sum_cols=bins,
-        org_col="org_code", period_col="period", name_col="org_name",
+        name_col="org_name",
     )
     stats = recompute_binned_stats(adj, ["org_code", "period"], bins)
     rows = {(r["org_code"], r["period"]): r for r in stats.collect()}
