@@ -1,10 +1,11 @@
 """Command-line entry points.
 
 ``python -m nhs_data_pipeline_spark.cli build-supporting-facilities``
-replaces the reference's two-script chain (build_datasets_main.py
+replaces the reference's two-script chain (build_datasets_main.py:305-386
 cleaning block + clean_org_changes_supporting_facilities.R) with one
 command: raw appended CSV -> clean panel -> org-change-adjusted panel,
-written as single CSVs (reference-format parity) or parquet.
+written as single CSVs (reference-format parity) or parquet. Both CSVs
+the command reads as data go through one reader, ``read_messy_csv``.
 """
 
 from __future__ import annotations
@@ -16,71 +17,40 @@ from pyspark.sql import functions as F
 
 
 def build_supporting_facilities(args: argparse.Namespace) -> None:
-    from nhs_data_pipeline_spark.functions import clean_sentinels
     from nhs_data_pipeline_spark.io.readers import read_messy_csv
     from nhs_data_pipeline_spark.io.writers import write_parquet, write_single_csv
-    from nhs_data_pipeline_spark.ops.core import coalesce_columns, rename_columns
     from nhs_data_pipeline_spark.pipelines.supporting_facilities import (
         adjust_supporting_facilities,
+        clean_supporting_facilities,
     )
     from nhs_data_pipeline_spark.session import get_spark
 
     spark = get_spark("build-supporting-facilities")
 
-    raw = spark.read.option("header", True).option("nullValue", "").csv(args.raw)
-    for c in raw.columns:
-        raw = raw.withColumn(c, clean_sentinels(F.col(c), ["", "NA"]))
-    clean = coalesce_columns(
-        raw,
-        {
-            "SHA_2": ["SHA", "SHA Code"],
-            "organisation_code": ["OrgID", "Organisation Code"],
-            "organisation_name": ["Name", "Organisation Name"],
-            "area_team_code": ["Area Team Code"],
-            "area_team_name": ["Area Team Name"],
-            "region_code": ["Region Code"],
-            "region_name": ["Region Name"],
-        },
-    ).drop("NA")
-    clean = rename_columns(
-        clean,
-        {
-            "SHA_2": "SHA",
-            "Number of operating theatres": "nr_operating_theatres",
-            "Of which, number of dedicated day case theatres": "nr_day_case_theatres",
-        },
-    )
-    clean = (
-        clean.filter(F.col("organisation_code").isNotNull())
-        .filter(
-            F.col("nr_day_case_theatres").isNotNull()
-            & (
-                F.col("nr_day_case_theatres")
-                != "Of which, number of dedicated day case theatres"
-            )
-        )
-        .filter(
-            ~F.col("organisation_name").isin(
-                "England (Including Independent Sector)",
-                "England (Excluding Independent Sector)",
-            )
-        )
-    )
+    def read(path):
+        # header row 0, "NA" and empty cells missing (R read.csv defaults)
+        return read_messy_csv(spark, path, header=0, na_tokens=["NA", ""])
+
+    clean = clean_supporting_facilities(read(args.raw))
 
     # the adjuster needs the ingest row index for its name-pick order;
     # round-trip the clean panel through the messy-CSV reader
     clean_csv = f"{args.out}/supporting-facilities_clean.csv"
     write_single_csv(clean, clean_csv, order_by=["year_var", "quarter_var"])
-    clean_indexed = read_messy_csv(spark, clean_csv, header=0, na_tokens=["NA", ""])
+    clean_indexed = read(clean_csv)
 
     lookup = spark.read.csv(args.lookup, header=True, inferSchema=True)
-    adjusted = adjust_supporting_facilities(clean_indexed, lookup)
+    # computed once: the sink and the printed count read the same rows
+    adjusted = adjust_supporting_facilities(clean_indexed, lookup).localCheckpoint()
 
     if args.format == "csv":
+        # arrange(org_code, year, quarter), ties ordered by the other
+        # columns so the file's bytes do not depend on the plan
+        key = ["org_code", "year", "quarter"]
         write_single_csv(
             adjusted,
             f"{args.out}/supporting-facilities_clean_org_change_adj.csv",
-            order_by=["org_code", "year", "quarter"],
+            order_by=key + [c for c in adjusted.columns if c not in key],
             null_value="NA",  # R write.csv NA rendering
         )
     else:

@@ -74,8 +74,14 @@ def sanitize_filename(name: str) -> str:
 def download_manifest(spark, items: list[LinkItem]):
     """Manifest DataFrame ``(url, filename, text)`` — the Spark-facing
     output of the scan stage."""
-    return spark.createDataFrame(
-        [(i.url, i.filename, i.text) for i in items], ["url", "filename", "text"]
+    from pyspark.sql.types import StructType
+
+    from nhs_data_pipeline_spark.ops.core import local_frame
+
+    return local_frame(
+        spark,
+        [(i.url, i.filename, i.text) for i in items],
+        StructType.fromDDL("url string, filename string, text string"),
     )
 
 

@@ -44,8 +44,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from nhs_data_pipeline_spark.llm.text import explode_terms
+from nhs_data_pipeline_spark.ops.core import local_frame
 
 #: Symbol separator inside the fold accumulator (unit separator).
 SEP = "\x1f"
@@ -92,8 +94,10 @@ def _initial_symbols(words: DataFrame, carry: list[str]) -> DataFrame:
 
 
 def _empty_merge_table(df: DataFrame) -> DataFrame:
-    return df.sparkSession.createDataFrame(
-        [], "it int, left_sym string, right_sym string, pair_count bigint"
+    return local_frame(
+        df.sparkSession,
+        [],
+        StructType.fromDDL("it int, left_sym string, right_sym string, pair_count bigint"),
     )
 
 

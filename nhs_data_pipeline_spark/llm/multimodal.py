@@ -258,10 +258,11 @@ def _png_samples(b: bytes) -> "tuple[np.ndarray, int] | None":
     stdlib ``zlib`` inflates the concatenated IDAT stream; the five
     scanline filters are inverted exactly (:func:`_png_unfilter`) per
     pass, and each pass is placed back on the grid. The stream length
-    the header implies is checked against the inflated stream before
-    the canvas is allocated, so a corrupt IHDR cannot request a huge
-    array. Returns None — never a crash — for truncated, out-of-range
-    palette indices, or otherwise malformed files."""
+    the header implies bounds the inflate and is checked against the
+    inflated stream before the canvas is allocated, so neither a
+    corrupt IHDR nor a decompression bomb can request a huge array.
+    Returns None — never a crash — for truncated, out-of-range palette
+    indices, or otherwise malformed files."""
     if len(b) < 8 or b[:8] != _PNG_MAGIC:
         return None
     i, ihdr, idat, plte = 8, None, [], None
@@ -299,10 +300,6 @@ def _png_samples(b: bytes) -> "tuple[np.ndarray, int] | None":
             return None  # sub-byte depth is grayscale-only per spec
     elif bit_depth not in (8, 16):
         return None
-    try:
-        raw = zlib.decompress(b"".join(idat))
-    except zlib.error:
-        return None
     # every non-empty pass as (x0, y0, dx, dy, w_p, h_p, byte stride);
     # a pass with zero width or height contributes NO scanlines
     passes = []
@@ -312,7 +309,15 @@ def _png_samples(b: bytes) -> "tuple[np.ndarray, int] | None":
         if w_p > 0 and h_p > 0:
             stride = (w_p * channels * bit_depth + 7) // 8
             passes.append((x0, y0, dx, dy, w_p, h_p, stride))
-    if sum(p[5] * (p[6] + 1) for p in passes) != len(raw):
+    expected = sum(p[5] * (p[6] + 1) for p in passes)
+    # inflate at most one byte past the implied length, so a small
+    # stream that inflates to a huge one is rejected without holding it
+    d = zlib.decompressobj()
+    try:
+        raw = d.decompress(b"".join(idat), expected + 1)
+    except zlib.error:
+        return None
+    if not d.eof or len(raw) != expected:
         return None  # short stream or trailing garbage
     bpp = max(1, channels * bit_depth // 8)
     rgb = np.empty((h, w, 3), dtype=np.uint16 if bit_depth == 16 else np.uint8)

@@ -39,8 +39,6 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nhs_data_pipeline_spark.ops.core import union_by_name
-
 
 def adjust_org_changes(
     df: DataFrame,
@@ -136,20 +134,3 @@ def adjust_org_changes(
         F.max("__change").over(w).alias("change_period"),
         F.max("unproblematic_org_change").over(w).alias("exp_unproblematic_org_change"),
     )
-
-
-def split_affected(
-    df: DataFrame, lookup: DataFrame, org_col: str = "org_code"
-) -> tuple[DataFrame, DataFrame]:
-    """J4 — physical semi/anti split by lookup membership, for callers
-    that need the two partitions separately
-    (build_datasets_wait_times.R:474-478)."""
-    keys = F.broadcast(
-        union_by_name(
-            [lookup.select(F.col("old_code").alias(org_col)),
-             lookup.select(F.col("final_code").alias(org_col))]
-        ).distinct()
-    )
-    affected = df.join(keys, org_col, "left_semi")
-    unaffected = df.join(keys, org_col, "left_anti")
-    return affected, unaffected

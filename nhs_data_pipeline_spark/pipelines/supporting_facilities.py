@@ -1,7 +1,11 @@
-"""Supporting-facilities org-change adjustment — exact reference
-semantics.
+"""Supporting-facilities build: raw-release cleaning and org-change
+adjustment — exact reference semantics.
 
-Replicates scripts/supporting-facilities/
+``clean_supporting_facilities`` is the cleaning block of
+scripts/build_datasets_main.py:305-386 (era-variant column merge,
+renames, junk-row filters) over the release as ``read_messy_csv`` reads
+it, the one reader of the build. ``adjust_supporting_facilities``
+replicates scripts/supporting-facilities/
 clean_org_changes_supporting_facilities.R:38-152 step for step, so the
 output can be replayed against the reference's committed golden CSV
 (data/supporting-facilities/supporting-facilities_clean_org_change_adj.csv,
@@ -28,10 +32,56 @@ from pyspark.sql import functions as F
 from nhs_data_pipeline_spark.functions import to_numeric
 from nhs_data_pipeline_spark.ops.core import (
     fill_directional,
+    local_frame,
     natural_join,
     rename_columns,
     union_by_name,
 )
+
+# Era-variant columns (read_messy_csv names) merged left to right, in
+# the reference's output order (build_datasets_main.py:325-335).
+_ERA_COLUMNS = {
+    "SHA": ["sha", "sha_code"],
+    "organisation_code": ["orgid", "organisation_code"],
+    "organisation_name": ["name", "organisation_name"],
+    "area_team_code": ["area_team_code"],
+    "area_team_name": ["area_team_name"],
+    "region_code": ["region_code"],
+    "region_name": ["region_name"],
+}
+_MEASURES = {
+    "number_of_operating_theatres": "nr_operating_theatres",
+    "of_which_number_of_dedicated_day_case_theatres": "nr_day_case_theatres",
+}
+
+
+def clean_supporting_facilities(raw: DataFrame) -> DataFrame:
+    """Raw appended release -> clean panel (build_datasets_main.py:305-386).
+
+    ``raw`` is ``read_messy_csv(spark, path, header=0, na_tokens=["NA", ""])``.
+    One projection: the other columns in file order (measures renamed,
+    the literal ``NA`` column and the ingest bookkeeping dropped), then
+    each present era-variant group coalesced left to right. One filter
+    drops the junk rows (:353-360): no org code, no day-case count, a
+    repeated header row, and the England totals.
+    """
+    dropped = {"_row_idx", "_source_file", "na"}.union(*_ERA_COLUMNS.values())
+    kept = [F.col(c).alias(_MEASURES.get(c, c)) for c in raw.columns if c not in dropped]
+    merged = [
+        F.coalesce(*present).alias(new)
+        for new, olds in _ERA_COLUMNS.items()
+        if (present := [c for c in olds if c in raw.columns])
+    ]
+    day_case = F.col("nr_day_case_theatres")
+    return raw.select(*kept, *merged).filter(
+        F.col("organisation_code").isNotNull()
+        & day_case.isNotNull()
+        & (day_case != "Of which, number of dedicated day case theatres")
+        & ~F.col("organisation_name").isin(
+            "England (Including Independent Sector)",
+            "England (Excluding Independent Sector)",
+        )
+    )
 
 
 def adjust_supporting_facilities(clean_df: DataFrame, lookup: DataFrame) -> DataFrame:
@@ -76,28 +126,26 @@ def adjust_supporting_facilities(clean_df: DataFrame, lookup: DataFrame) -> Data
         .withColumn("nr_day_case_theatres", to_numeric("nr_day_case_theatres"))
     )
 
-    # :72-79 — problematic membership = union of old+final codes.
-    prob = lookup.filter(F.col("problematic") == 1)
-    prob_codes = union_by_name(
-        [prob.select(F.col("old_code").alias("c")), prob.select(F.col("final_code").alias("c"))]
-    ).distinct()
-    sf = sf.join(
-        F.broadcast(prob_codes), sf["org_code"] == prob_codes["c"], "left"
-    ).withColumn(
-        "exp_problematic_org_change", F.when(F.col("c").isNotNull(), 1).otherwise(0)
-    ).drop("c")
+    # :72-91 — lookup membership, decided on the driver: problematic =
+    # union of problematic old+final codes; the panel splits by
+    # membership in the clean lookup. A NULL org code is in neither.
+    flagged = lookup.select(
+        F.col("old_code").alias("org_code"), "final_code", "experiences_split",
+        F.col("problematic") == 1, F.col("problematic") == 0,
+    )
+    rows = flagged.collect()
+    prob_codes = {c for r in rows if r[3] for c in r[:2] if c is not None}
+    affected_codes = {c for r in rows if r[4] for c in r[:2] if c is not None}
+    sf = sf.withColumn(
+        "exp_problematic_org_change",
+        F.when(F.col("org_code").isin(sorted(prob_codes)), 1).otherwise(0),
+    )
+    is_affected = F.coalesce(F.col("org_code").isin(sorted(affected_codes)), F.lit(False))
+    affected = sf.filter(is_affected)
+    unaffected = sf.filter(~is_affected)
 
-    # :82-91 — clean lookup; split panel by affected membership.
-    clean_lkp = lookup.filter(F.col("problematic") == 0).drop("problematic")
-    affected_codes = union_by_name(
-        [clean_lkp.select(F.col("old_code").alias("c")),
-         clean_lkp.select(F.col("final_code").alias("c"))]
-    ).distinct()
-    affected = sf.join(F.broadcast(affected_codes), sf["org_code"] == affected_codes["c"], "left_semi")
-    unaffected = sf.join(F.broadcast(affected_codes), sf["org_code"] == affected_codes["c"], "left_anti")
-
-    # :94-95 — natural left join of the lookup (keys: org_code).
-    lkp = rename_columns(clean_lkp, {"old_code": "org_code"})
+    # :94-95 — natural left join of the clean lookup (keys: org_code).
+    lkp = local_frame(lookup.sparkSession, [r[:3] for r in rows if r[4]], flagged.schema[:3])
     affected = natural_join(affected, lkp, how="left", broadcast_right=True)
 
     # :99-124 — change indicator.

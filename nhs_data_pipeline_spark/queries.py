@@ -10598,7 +10598,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = kept.unionByName(
         kept.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     )
-    sources = spark.createDataFrame([(0,)], "node bigint")  # NATION_0
+    sources = oc.local_frame(spark, [(0,)], StructType.fromDDL("node bigint"))  # NATION_0
     dist = og.shortest_paths(sym, sources, iterations=6)
     e.unpersist()
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")

@@ -1,6 +1,7 @@
 """Golden replay #3: rebuild the reference's supporting-facilities
-*clean* panel from its committed raw append via the engine's
-column-consolidation (J2) + junk-row filters, matching the committed
+*clean* panel from its committed raw append with the engine's own
+cleaning step, ``clean_supporting_facilities`` (column consolidation J2
++ junk-row filters), matching the committed
 ``supporting-facilities_clean.csv`` (scripts/build_datasets_main.py:
 305-386) exactly.
 
@@ -18,7 +19,6 @@ import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 REF = "/root/reference/data/supporting-facilities"
 RAW = f"{REF}/supporting-facilities.csv"
@@ -38,54 +38,15 @@ OUT_COLS = [
 
 
 def test_supporting_facilities_clean_replay(spark):
-    from nhs_data_pipeline_spark.functions import clean_sentinels
-    from nhs_data_pipeline_spark.ops.core import coalesce_columns, rename_columns
+    from nhs_data_pipeline_spark.io.readers import read_messy_csv
+    from nhs_data_pipeline_spark.pipelines.supporting_facilities import (
+        clean_supporting_facilities,
+    )
 
-    raw = spark.read.option("header", True).option("nullValue", "").csv(RAW)
     # sentinel 'NA' strings -> NULL (engine ingest convention; matches
     # the committed clean output)
-    for c in raw.columns:
-        raw = raw.withColumn(c, clean_sentinels(F.col(c), ["", "NA"]))
-
-    # :325-335 — era-variant column consolidation (J2)
-    df = coalesce_columns(
-        raw,
-        {
-            "SHA_2": ["SHA", "SHA Code"],
-            "organisation_code": ["OrgID", "Organisation Code"],
-            "organisation_name": ["Name", "Organisation Name"],
-            "area_team_code": ["Area Team Code"],
-            "area_team_name": ["Area Team Name"],
-            "region_code": ["Region Code"],
-            "region_name": ["Region Name"],
-        },
-    )
-    # :337-345 — drop leftovers (incl. the literal 'NA' column), rename
-    df = df.drop("NA")
-    df = rename_columns(
-        df,
-        {
-            "SHA_2": "SHA",
-            "Number of operating theatres": "nr_operating_theatres",
-            "Of which, number of dedicated day case theatres": "nr_day_case_theatres",
-        },
-    )
-    # :353-360 — junk-row filters (P6/P7) under null-sentinel semantics
-    df = (
-        df.filter(F.col("organisation_code").isNotNull())
-        .filter(
-            F.col("nr_day_case_theatres").isNotNull()
-            & (
-                F.col("nr_day_case_theatres")
-                != "Of which, number of dedicated day case theatres"
-            )
-        )
-        .filter(
-            ~F.col("organisation_name").isin(
-                "England (Including Independent Sector)",
-                "England (Excluding Independent Sector)",
-            )
-        )
+    df = clean_supporting_facilities(
+        read_messy_csv(spark, RAW, header=0, na_tokens=["NA", ""])
     )
     got = sorted(
         tuple("" if r[c] is None else r[c] for c in OUT_COLS)

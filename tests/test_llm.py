@@ -971,6 +971,28 @@ def test_png_decode_rgba_gray_and_malformed():
     assert mm.real_decode(bad_f) is None
 
 
+def test_png_decompression_bomb_bounded():
+    """A ~65 KB PNG with a 1x1 RGB header whose IDAT inflates to 64 MiB
+    is rejected by both decoders without materialising the stream."""
+    import tracemalloc
+    import zlib
+
+    def _ck(t, b):
+        return len(b).to_bytes(4, "big") + t + b + zlib.crc32(t + b).to_bytes(4, "big")
+
+    c = zlib.compressobj(9)
+    idat = b"".join(c.compress(bytes(1 << 20)) for _ in range(64)) + c.flush()
+    ihdr = (1).to_bytes(4, "big") * 2 + bytes([8, 2, 0, 0, 0])
+    bomb = b"\x89PNG\r\n\x1a\n" + _ck(b"IHDR", ihdr) + _ck(b"IDAT", idat) + _ck(b"IEND", b"")
+    assert 60_000 < len(bomb) < 70_000
+    tracemalloc.start()
+    try:
+        assert mm.real_decode(bomb) is None and mm.decode_pixels(bomb) is None
+        assert tracemalloc.get_traced_memory()[1] < 1 << 20
+    finally:
+        tracemalloc.stop()
+
+
 def _make_png_raw(rows_bytes: list[bytes], w: int, h: int, bit_depth: int,
                   color_type: int, bpp: int, filters: list[int],
                   plte: bytes | None = None) -> bytes:

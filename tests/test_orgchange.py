@@ -10,7 +10,6 @@ from nhs_data_pipeline_spark.orgchange import (
     classify_changes,
     successor_closure,
 )
-from nhs_data_pipeline_spark.orgchange.adjust import split_affected
 import pytest
 
 
@@ -165,15 +164,6 @@ def test_adjust_idempotent(spark):
     a = {(r.org_code, r.period): r.val for r in out1.collect()}
     b = {(r.org_code, r.period): r.val for r in out2.collect()}
     assert a == b
-
-
-@pytest.mark.slow
-def test_split_affected_partitions(spark):
-    aff, unaff = split_affected(_panel(spark), _lookup(spark))
-    aff_codes = {r.org_code for r in aff.collect()}
-    unaff_codes = {r.org_code for r in unaff.collect()}
-    assert aff_codes == {"OLD1", "OLD2", "NEW", "PROB"}  # PROB via old_code, NEW via final
-    assert unaff_codes == {"FREE", "NA1"}
 
 
 _ADJUST_KW = dict(keys=["org_code", "period"], sum_cols=["val"])

@@ -879,3 +879,27 @@ def test_check_oracle_unchecked_after_reports_tail():
     assert unchecked_after(order[-1], set()) == []
     subset = {order[3], order[1], order[7]}
     assert unchecked_after(order[1], subset) == [order[3], order[7]]
+
+
+def test_no_list_built_create_dataframe():
+    """Driver-built frames go through ``ops.core.local_frame`` (one Arrow
+    table, a ``LocalTableScan``): a ``createDataFrame`` fed a list
+    literal or a comprehension pickles an RDD whose scan runs Python
+    workers."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    built = (ast.List, ast.ListComp, ast.GeneratorExp, ast.SetComp, ast.Tuple)
+    offenders = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted((root / "nhs_data_pipeline_spark").rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "createDataFrame"
+        and any(
+            isinstance(data, built)
+            for data in [*node.args[:1], *(k.value for k in node.keywords if k.arg == "data")]
+        )
+    ]
+    assert not offenders, offenders
