@@ -4,8 +4,9 @@
 replaces the reference's two-script chain (build_datasets_main.py:305-386
 cleaning block + clean_org_changes_supporting_facilities.R) with one
 command: raw appended CSV -> clean panel -> org-change-adjusted panel,
-written as single CSVs (reference-format parity) or parquet. Both CSVs
-the command reads as data go through one reader, ``read_messy_csv``.
+written as single CSVs (reference-format parity) or parquet. Every CSV
+the command reads (the raw release, the clean panel it round-trips and
+the trust lookup) goes through one reader, ``read_messy_csv``.
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ def build_supporting_facilities(args: argparse.Namespace) -> None:
     write_single_csv(clean, clean_csv, order_by=["year_var", "quarter_var"])
     clean_indexed = read(clean_csv)
 
-    lookup = spark.read.csv(args.lookup, header=True, inferSchema=True)
+    lookup = read(args.lookup)
     # computed once: the sink and the printed count read the same rows
     adjusted = adjust_supporting_facilities(clean_indexed, lookup).localCheckpoint()
 

@@ -17,6 +17,10 @@ Scale notes:
 - ``columnNameOfCorruptRecord`` rows are preserved, not dropped —
   a 100 TB feed always has malformed lines and silent drops poison
   downstream counts.
+
+Both sinks replace their previous output through
+``io.writers.publish``: a failed or crashed write leaves the last good
+output, never a missing or half-written one.
 """
 
 from __future__ import annotations
@@ -24,20 +28,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType, StringType
 
+from nhs_data_pipeline_spark.io.writers import publish
+
 
 def write_orc(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
     compression: str = "zstd",
 ) -> str:
     """ORC sink (hive-partitionable, zstd by default)."""
-    w = df.write.mode(mode).option("compression", compression)
+    w = df.write.option("compression", compression)
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.orc(path)
-    return path
+    return publish(path, w.orc)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
@@ -46,17 +50,14 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def write_jsonl(
-    df: DataFrame, path: str, mode: str = "overwrite", compression: str | None = "gzip"
-) -> str:
+def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> str:
     """JSON-lines sink: one JSON object per row, splittable-unfriendly
     when gzipped (one stream per task output file — fine, file count
     carries the parallelism)."""
-    w = df.write.mode(mode)
+    w = df.write
     if compression:
         w = w.option("compression", compression)
-    w.json(path)
-    return path
+    return publish(path, w.json)
 
 
 def read_jsonl(

@@ -53,9 +53,13 @@ from nhs_data_pipeline_spark.ops.core import clean_name, dedupe_positional
 
 Rows = list[list[str | None]]  # one raw file: rows of string cells, None = empty
 
+HEADER_SCAN_ROWS = 30  # rows searched for the header row
+SKIP_SCAN_ROWS = 10  # rows searched for a file-level skip marker
 
-def detect_header_row(rows: Rows, marker: str | None = None, scan_rows: int = 30) -> int:
-    """Find the header row inside a file's raw rows.
+
+def detect_header_row(rows: Rows, marker: str | None = None) -> int:
+    """Find the header row among the first ``HEADER_SCAN_ROWS`` of a
+    file's raw rows.
 
     With ``marker``: first row containing the marker string in any cell
     (case-insensitive) — scripts/build_datasets_main.py:105-113; raises
@@ -65,7 +69,7 @@ def detect_header_row(rows: Rows, marker: str | None = None, scan_rows: int = 30
     at least half the columns are populated (janitor ``find_header``
     heuristic, build_datasets_wait_times.R:126-128), else row 0.
     """
-    n = min(scan_rows, len(rows))
+    n = min(HEADER_SCAN_ROWS, len(rows))
     width = max(map(len, rows), default=0)
     for i, row in enumerate(rows[:n]):
         cells = [v for v in row if v is not None and v.strip() != ""]
@@ -140,14 +144,12 @@ def _to_spark(
     return spark.createDataFrame(table)
 
 
-def file_matches_skip_predicate(
-    rows: Rows, skip_markers: Sequence[str], scan_rows: int = 10
-) -> bool:
+def file_matches_skip_predicate(rows: Rows, skip_markers: Sequence[str]) -> bool:
     """P12 — file-level predicate: True when any of ``skip_markers``
-    appears in the first ``scan_rows`` rows, meaning the whole file
-    should be dropped ("adjusted"/"The 18 weeks rules" releases,
+    appears in the first ``SKIP_SCAN_ROWS`` rows, meaning the whole
+    file should be dropped ("adjusted"/"The 18 weeks rules" releases,
     build_datasets_wait_times.R:72-83)."""
-    blob = " ".join(v.lower() for row in rows[:scan_rows] for v in row if v is not None)
+    blob = " ".join(v.lower() for row in rows[:SKIP_SCAN_ROWS] for v in row if v is not None)
     return any(m.lower() in blob for m in skip_markers)
 
 
@@ -366,11 +368,11 @@ def read_messy_excel_multi(
     return _to_spark(spark, parts, na_tokens)
 
 
-def with_filename_metadata(df: DataFrame, col: str = "_source_file") -> DataFrame:
-    """Derive (year, quarter, pathway) columns from the source filename
-    (S8 — scripts/build_datasets_main.py:62-92) as native regexes; works
-    equally on ``F.input_file_name()`` for distributed reads."""
-    src = F.col(col)
+def with_filename_metadata(df: DataFrame) -> DataFrame:
+    """Derive (year, quarter, pathway) columns from the ``_source_file``
+    column the readers attach (S8 — scripts/build_datasets_main.py:62-92)
+    as native regexes."""
+    src = F.col("_source_file")
     return (
         df.withColumn("file_year", extract_year(src))
         .withColumn("file_quarter", extract_quarter(src))

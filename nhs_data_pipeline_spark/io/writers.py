@@ -3,6 +3,14 @@
 Default sink is parquet (partitioned, predicate-pushdown-friendly); the
 single-file CSV sink exists for golden-file parity with the reference's
 ``write.csv`` outputs (S9 — build_datasets_wait_times.R:558-567).
+
+Every path sink publishes through :func:`publish`: stage beside the
+target, rename the old output aside, rename the new one in, drop the
+aside copy. A failed write leaves the last good output; a crash between
+the renames leaves it aside, and the next write restores it first. So
+no sink overwrites its last good output in place. ``write_single_csv``
+replaces its file with one ``os.replace``; ``overwrite_partitions`` and
+``write_bucketed_table`` update in place by design.
 """
 
 from __future__ import annotations
@@ -10,8 +18,51 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+
+_STAGING, _ASIDE = "__tmp", ".old"
+
+
+def recover(path: str) -> str:
+    """Undo a crash inside :func:`publish`: restore the aside copy if
+    the target is missing, else drop a stale one. Returns ``path``
+    without trailing slashes."""
+    base = path.rstrip("/")
+    if os.path.exists(base):
+        shutil.rmtree(base + _ASIDE, ignore_errors=True)
+    elif os.path.exists(base + _ASIDE):
+        os.rename(base + _ASIDE, base)
+    return base
+
+
+@contextmanager
+def _staging(path: str) -> Iterator[str]:
+    """A fresh staging path beside ``path``, removed when the block
+    exits, whether it succeeded or failed."""
+    tmp = path.rstrip("/") + _STAGING
+    shutil.rmtree(tmp, ignore_errors=True)  # left by a crashed write
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def publish(path: str, write: Callable[[str], object]) -> str:
+    """Replace the directory output at ``path`` with what ``write``
+    writes, e.g. ``publish(path, df.write.parquet)``: ``write`` gets the
+    staging path, and the new output is swapped in only once it is
+    complete. Single writer per path."""
+    base = recover(path)
+    with _staging(base) as tmp:
+        write(tmp)
+        if os.path.exists(base):
+            os.rename(base, base + _ASIDE)
+        os.rename(tmp, base)
+    shutil.rmtree(base + _ASIDE, ignore_errors=True)
+    return path
 
 
 def write_single_csv(
@@ -34,16 +85,12 @@ def write_single_csv(
     df = df.coalesce(1)
     if order_by:
         df = df.sortWithinPartitions(*order_by)
-    tmp = path + "__tmp"
-    try:
-        (df.write.mode("overwrite").option("header", True)
+    with _staging(path) as tmp:
+        (df.write.option("header", True)
            .option("nullValue", null_value).option("emptyValue", "")
            .csv(tmp))
-        # a rename replaces the last good file only once the new one exists
-        part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-        shutil.move(part, path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # one atomic replace of the last good file, once the new one exists
+        os.replace(glob.glob(os.path.join(tmp, "part-*.csv"))[0], path)
     return path
 
 
@@ -51,20 +98,12 @@ def write_parquet(
     df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> str:
     """Canonical sink: parquet, optionally hive-partitioned so downstream
-    readers get partition pruning for free. Replaces any previous output
-    at ``path``, but only once the new one is complete: a write that
-    fails leaves the last good output as it was."""
-    tmp = path + "__tmp"
-    try:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
-        shutil.rmtree(path, ignore_errors=True)
-        os.rename(tmp, path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    readers get partition pruning for free. Published through
+    :func:`publish`."""
+    w = df.write
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    return publish(path, w.parquet)
 
 
 def write_bucketed_table(
@@ -118,7 +157,6 @@ def write_jsonl_shards(
     num_shards: int,
     id_col: str,
     compression: str | None = "gzip",
-    mode: str = "overwrite",
 ) -> str:
     """Training-data export sink: JSON-Lines shards, the interchange
     format LLM data pipelines exchange corpora in.
@@ -131,7 +169,7 @@ def write_jsonl_shards(
     (repartition on the shard key) co-locates each shard into one task
     -> one file per shard directory; compression defaults to gzip
     (splittable-at-shard granularity, which is the unit consumers read
-    anyway)."""
+    anyway). Published through :func:`publish`."""
     from pyspark.sql import functions as F
 
     from nhs_data_pipeline_spark.llm.dedup import _MD5_H60
@@ -150,10 +188,8 @@ def write_jsonl_shards(
         # still embed a per-run UUID), which is what "diff/refresh
         # incrementally" requires, not just stable membership.
         .sortWithinPartitions(id_col)
-        .write.mode(mode)
-        .partitionBy("shard")
+        .write.partitionBy("shard")
     )
     if compression:
         w = w.option("compression", compression)
-    w.json(path)
-    return path
+    return publish(path, w.json)

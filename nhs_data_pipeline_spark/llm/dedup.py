@@ -972,13 +972,16 @@ def _cooccurrence_stage(
     df: DataFrame, text_col: str, id_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Shared persist + sizes + co-occurrence-intersection stage of the
-    unweighted countjoin family (:func:`ngram_overlap_scores` /
-    :func:`containment_join` — extracted per r8 ADVICE so the two pair
-    joins cannot drift): returns ``(toks, sized)`` where ``toks`` is
-    the PERSISTED distinct bigram table (the caller owns the release
-    after materializing its result — the eager-persist/explicit-release
-    countjoin pattern) and ``sized`` is the per-co-occurring-pair frame
-    ``(id_a, id_b, __i, __na, __nb)`` BEFORE any threshold predicate."""
+    unweighted countjoin family (:func:`exact_jaccard_join`'s countjoin,
+    :func:`ngram_overlap_scores` and :func:`containment_join` — one
+    stage so the pair joins cannot drift): returns ``(toks, sized)``
+    where ``toks`` is the PERSISTED distinct bigram table (the caller
+    owns the release after materializing its result — the
+    eager-persist/explicit-release countjoin pattern: unpersisted, the
+    tokenize+distinct lineage runs three times, for the a side, the b
+    side and the sizes; measured 8.3 s -> 3.9 s at sf0.1) and ``sized``
+    is the per-co-occurring-pair frame ``(id_a, id_b, __i, __na,
+    __nb)`` BEFORE any threshold predicate."""
     toks = _bigram_tokens(df, text_col, id_col).persist()
     toks.count()
     sz = toks.groupBy("doc_id").agg(F.count("*").alias("__sz"))
@@ -1248,36 +1251,16 @@ def exact_jaccard_join(
     frac = Fraction(str(threshold))
     num, den = frac.numerator, frac.denominator
 
-    toks = _bigram_tokens(df, text_col, id_col)
-    sz = toks.groupBy("doc_id").agg(F.count("*").alias("__sz"))
-
     def _keep(i_col, na_col, nb_col):
         return (F.lit(den) * i_col) >= (F.lit(num) * (na_col + nb_col - i_col))
 
     if mode == "countjoin":
-        # Eager persist of the token table with EXPLICIT release via a
-        # materialized result (the eval_lsh pattern): the countjoin
-        # otherwise computes the tokenize+distinct lineage THREE times
-        # (a side, b side, sizes) — measured 8.3 s -> 3.9 s (2.15x) at
-        # sf0.1, hash-identical output. The gate-session cache-thrash
-        # lesson bans persists that OUTLIVE the call, not this shape.
-        toks = toks.persist()
-        toks.count()
-        a = toks.select(F.col("doc_id").alias("id_a"), "bg")
-        b = toks.select(F.col("doc_id").alias("id_b"), "bg")
-        inter = (
-            a.join(b, "bg")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("__i"))
-        )
-        sa = sz.select(F.col("doc_id").alias("id_a"), F.col("__sz").alias("__na"))
-        sb = sz.select(F.col("doc_id").alias("id_b"), F.col("__sz").alias("__nb"))
+        # the shared co-occurrence stage persists the token table and
+        # this branch releases it once the result is materialized
+        toks, sized = _cooccurrence_stage(df, text_col, id_col)
         jac = F.col("__i") / (F.col("__na") + F.col("__nb") - F.col("__i"))
         out = (
-            inter.join(sa, "id_a")
-            .join(sb, "id_b")
-            .filter(_keep(F.col("__i"), F.col("__na"), F.col("__nb")))
+            sized.filter(_keep(F.col("__i"), F.col("__na"), F.col("__nb")))
             .select(
                 "id_a", "id_b",
                 # portable floor-round (repo rule): three IEEE ops
@@ -1295,9 +1278,10 @@ def exact_jaccard_join(
 
     # eager persist + explicit release (the countjoin pattern): the
     # prefix path otherwise recomputes the tokenize+distinct lineage
-    # for freq, the prefix build, and the verify sets
-    toks = toks.persist()
+    # for sizes, freq, the prefix build, and the verify sets
+    toks = _bigram_tokens(df, text_col, id_col).persist()
     toks.count()
+    sz = toks.groupBy("doc_id").agg(F.count("*").alias("__sz"))
     freq = toks.groupBy("bg").agg(F.count("*").alias("__n"))
     prefix = (
         toks.join(freq, "bg")

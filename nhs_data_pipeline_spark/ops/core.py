@@ -186,11 +186,10 @@ def natural_join(
     return left.join(r, on=keys, how=how)
 
 
-def coalesce_columns(
-    df: DataFrame, mapping: dict[str, Sequence[str]], drop: bool = True
-) -> DataFrame:
+def coalesce_columns(df: DataFrame, mapping: dict[str, Sequence[str]]) -> DataFrame:
     """Merge era-variant parallel columns into one via left-to-right
-    coalesce: ``{'org_code': ['OrgID', 'Organisation Code']}``.
+    coalesce, dropping the merged sources:
+    ``{'org_code': ['OrgID', 'Organisation Code']}``.
 
     J2 — pandas ``combine_first`` chain, ``consolidate_columns``
     (scripts/build_datasets_main.py:165-196). A pure projection in Spark.
@@ -201,8 +200,7 @@ def coalesce_columns(
         if not present:
             continue
         out = out.withColumn(new, F.coalesce(*[F.col(c) for c in present]))
-        if drop:
-            out = out.drop(*[c for c in present if c != new])
+        out = out.drop(*[c for c in present if c != new])
     return out
 
 

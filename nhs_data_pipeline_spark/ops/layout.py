@@ -27,10 +27,11 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from nhs_data_pipeline_spark.io.writers import publish, recover
 
 
 def _dir_bytes(path: str) -> int:
@@ -50,31 +51,20 @@ def compact_parquet(
     """Rewrite a parquet directory into ``ceil(size / target)`` files
     (128 MB default — the classic HDFS-block / scan-task sweet spot).
 
-    The rewrite round-trips through a sibling temp dir then swaps, so
-    a concurrent reader sees either the old or the new layout, never a
-    half-written directory (same-filesystem rename; true atomicity
-    needs a transactional table format). ``sort_within`` additionally
-    sorts rows inside each output file so min-max stats tighten on
-    those columns. Returns the output file count."""
-    old = path.rstrip("/") + "__compact_old"
-    if not os.path.exists(path) and os.path.exists(old):
-        # A previous run crashed between rename(path, old) and
-        # rename(tmp, path): restore the data before doing anything.
-        os.rename(old, path)
+    The rewrite goes through ``io.writers.publish``: it writes a
+    staging directory beside ``path`` and swaps it in, so a failed or
+    crashed compaction leaves the old layout, never a half-written
+    directory (same-filesystem renames; true atomicity needs a
+    transactional table format). ``sort_within`` additionally sorts
+    rows inside each output file so min-max stats tighten on those
+    columns. Returns the output file count."""
+    # a crash of an earlier publish may have left the data aside
+    path = recover(path)
     n_files = max(1, -(-_dir_bytes(path) // target_file_bytes))
-    df = spark.read.parquet(path)
-    out = df.repartition(n_files)
+    out = spark.read.parquet(path).repartition(n_files)
     if sort_within:
         out = out.sortWithinPartitions(*sort_within)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    # A stale __compact_old from a crashed earlier run would make the
-    # rename below fail forever (ENOTEMPTY) — clear it; the entry
-    # check above already restored it if it was the only copy.
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    publish(path, out.write.parquet)
     return len(glob.glob(os.path.join(path, "part-*.parquet")))
 
 
@@ -126,13 +116,13 @@ def zorder_write(
 
     After this, a predicate on ANY z-ordered column prunes files via
     parquet min-max stats instead of scanning everything — the
-    multi-column analogue of ``compact_parquet(sort_within=...)``."""
+    multi-column analogue of ``compact_parquet(sort_within=...)``.
+    Published through ``io.writers.publish``."""
     keyed = df.withColumn("__zkey", zorder_key(df, cols, bits_per_col))
-    (
+    return publish(
+        path,
         keyed.repartitionByRange(n_files, "__zkey")
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
+        .write.parquet,
     )
-    return path

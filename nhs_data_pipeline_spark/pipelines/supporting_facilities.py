@@ -90,7 +90,8 @@ def adjust_supporting_facilities(clean_df: DataFrame, lookup: DataFrame) -> Data
     ``clean_df`` is the supporting-facilities_clean table as ingested by
     ``read_messy_csv`` (string columns, ``_row_idx`` file order);
     ``lookup`` is trust_lookup_uncomplicated_changes
-    ``(old_code, final_code, experiences_split, problematic)``.
+    ``(old_code, final_code, experiences_split, problematic)``, its two
+    0/1 flags as integers or as text.
     """
     # :42-49 — drop region columns, uppercase names, harmonize names.
     sf = clean_df.drop(
@@ -129,9 +130,12 @@ def adjust_supporting_facilities(clean_df: DataFrame, lookup: DataFrame) -> Data
     # :72-91 — lookup membership, decided on the driver: problematic =
     # union of problematic old+final codes; the panel splits by
     # membership in the clean lookup. A NULL org code is in neither.
+    # a flag that is not an integer fails the cast
+    problematic = F.col("problematic").cast("int")
     flagged = lookup.select(
-        F.col("old_code").alias("org_code"), "final_code", "experiences_split",
-        F.col("problematic") == 1, F.col("problematic") == 0,
+        F.col("old_code").alias("org_code"), "final_code",
+        F.col("experiences_split").cast("int").alias("experiences_split"),
+        problematic == 1, problematic == 0,
     )
     rows = flagged.collect()
     prob_codes = {c for r in rows if r[3] for c in r[:2] if c is not None}

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nhs_data_pipeline_spark.io.writers import publish, recover
+
 
 def _stream_identity(checkpoint: str, spark: SparkSession | None = None) -> str:
     """Stable identity of a streaming query: the query id Spark pins in
@@ -389,9 +391,9 @@ def near_dedup_stream_against_store(
 def _load_guarded_store(
     spark: SparkSession, store_path: str, stream_key: str, batch_id: int
 ):
-    """Read a guarded store for a foreachBatch merge: recover from the
-    ``.old`` copy if a mid-swap crash left the base path missing, and
-    apply the replay guard — a batch is a replay only when the stored
+    """Read a guarded store for a foreachBatch merge: restore the store
+    first if a mid-swap crash left it aside (``io.writers.recover``),
+    and apply the replay guard — a batch is a replay only when the stored
     ``stream_key`` matches this query AND ``batch_id`` does not advance
     past ``last_batch_id`` (batch ids are only monotonic within one
     checkpoint; an unkeyed guard would drop a fresh checkpoint's first
@@ -399,11 +401,7 @@ def _load_guarded_store(
     is_replay)``. Called only by :func:`_fold_into_store`, which every
     store maintainer goes through — ONE definition so their replay
     semantics can never drift."""
-    old = _read_store_or_none(spark, store_path)
-    if old is None:
-        # mid-swap crash window: the store was renamed aside but the
-        # new version never landed — recover from the .old copy
-        old = _read_store_or_none(spark, store_path.rstrip("/") + ".old")
+    old = _read_store_or_none(spark, recover(store_path))
     if old is not None and "last_batch_id" in old.columns:
         # One driver action for the whole guard (stream_key is a
         # per-store constant, so max() reads it exactly).
@@ -419,46 +417,23 @@ def _load_guarded_store(
     return old, False
 
 
-def _swap_store(
-    merged: DataFrame, store_path: str, batch_id: int, stream_key: str
-) -> None:
-    """Atomically replace a store with ``merged`` (guard columns
-    stamped here). Rename-based: a plain overwrite-in-place deletes
-    the old files first, so a crash mid-write leaves NO readable store
-    and the next run would silently treat it as the first batch. With
-    renames, every crash point leaves either the old store (at base or
-    ``.old`` — the reader checks both) or the fully-written new one.
-    Ordering matters: the ``.old`` recovery copy is only retired AFTER
-    the new store is in place — when recovering from a mid-swap crash
-    (base missing), ``.old`` is the SOLE durable copy, and deleting it
-    first would open a window where a second crash loses all state.
-    Single-writer assumption, as for any foreachBatch parquet sink."""
-    import os
-    import shutil
-
-    base = store_path.rstrip("/")
-    tmp, bak = base + f".batch{batch_id}", base + ".old"
-    merged = merged.withColumn(
-        "last_batch_id", F.lit(batch_id)
-    ).withColumn("stream_key", F.lit(stream_key))
-    shutil.rmtree(tmp, ignore_errors=True)  # leftover from a crash
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(base):
-        shutil.rmtree(bak, ignore_errors=True)  # stale from older swap
-        os.rename(base, bak)
-    os.rename(tmp, base)
-    shutil.rmtree(bak, ignore_errors=True)
-
-
 def _fold_into_store(
     rows: DataFrame, store_path: str, checkpoint: str, fold, after=None
 ):
     """Run the guarded-store protocol over ``rows``: per micro-batch,
     read the store through the replay guard (a replay returns at
     once), swap in ``fold(batch_df, old)`` (``old`` is None on the
-    first batch), then call ``after(spark, batch_id)`` if given. The
-    stream identity is resolved once per query, on its first batch:
-    the checkpoint's query id is fixed for the query's lifetime.
+    first batch) with the guard columns stamped, then call
+    ``after(spark, batch_id)`` if given. The stream identity is
+    resolved once per query, on its first batch: the checkpoint's
+    query id is fixed for the query's lifetime.
+
+    The swap is ``io.writers.publish``. A plain overwrite-in-place
+    deletes the old files first, so a crash mid-write would leave NO
+    readable store and the next run would silently treat it as the
+    first batch; the staged swap leaves either the old store or the
+    new one, and the next read restores an old store left aside.
+    Single-writer assumption, as for any foreachBatch parquet sink.
     Returns the started StreamingQuery (availableNow trigger)."""
     stream_key = None
 
@@ -470,7 +445,10 @@ def _fold_into_store(
         old, is_replay = _load_guarded_store(spark, store_path, stream_key, batch_id)
         if is_replay:
             return  # replayed batch: already folded into the store
-        _swap_store(fold(batch_df, old), store_path, batch_id, stream_key)
+        merged = fold(batch_df, old).withColumns(
+            {"last_batch_id": F.lit(batch_id), "stream_key": F.lit(stream_key)}
+        )
+        publish(store_path, merged.write.parquet)
         if after is not None:
             after(spark, batch_id)
 
@@ -530,11 +508,11 @@ def fingerprint_stream_into_store(
     restarts at 0, and an unkeyed guard would silently drop its first
     batches as "replays".
 
-    The swap is rename-based (write tmp -> store aside to .old ->
-    tmp into place -> drop .old) and the reader falls back to ``.old``
-    when the store path is mid-swap missing, so a crash at any point
-    leaves a readable pre-batch store and the replayed batch applies
-    cleanly (single-writer assumption, same as any foreachBatch
+    The swap is ``io.writers.publish`` (write staging -> store aside
+    to .old -> staging into place -> drop .old) and the reader restores
+    ``.old`` when the store path is mid-swap missing, so a crash at any
+    point leaves a readable pre-batch store and the replayed batch
+    applies cleanly (single-writer assumption, same as any foreachBatch
     parquet sink here).
 
     Returns the started StreamingQuery (availableNow trigger).

@@ -17,6 +17,9 @@ from nhs_data_pipeline_spark.io import (
     with_filename_metadata,
     write_single_csv,
 )
+from nhs_data_pipeline_spark.io.formats import write_jsonl, write_orc
+from nhs_data_pipeline_spark.io.writers import write_jsonl_shards, write_parquet
+from nhs_data_pipeline_spark.ops.layout import zorder_write
 
 
 def _write_messy(tmp_path, name="Theatres_Quarter_2_2013_14.csv"):
@@ -306,21 +309,69 @@ def test_write_single_csv_failed_write_keeps_previous_file(spark, tmp_path):
     assert os.listdir(tmp_path) == ["out.csv"]
 
 
-def test_write_parquet_failed_write_keeps_previous_output(spark, tmp_path):
-    # the new output replaces the old one by rename, so a write that
-    # fails while executing leaves the last good output, and no staging dir
-    from nhs_data_pipeline_spark.io.writers import write_parquet
+_PATH_SINKS = {  # name -> (write(df, path), read-back format)
+    "write_parquet": (lambda df, p: write_parquet(df, p, partition_by=["year"]), "parquet"),
+    "write_parquet_trailing_slash": (
+        lambda df, p: write_parquet(df, p + "/", partition_by=["year"]), "parquet"),
+    "write_orc": (lambda df, p: write_orc(df, p, partition_by=["year"]), "orc"),
+    "write_jsonl": (write_jsonl, "json"),
+    "write_jsonl_shards": (
+        lambda df, p: write_jsonl_shards(df, p, num_shards=2, id_col="org"), "json"),
+    "zorder_write": (lambda df, p: zorder_write(df, p, ["year"], n_files=1), "parquet"),
+}
 
+
+@pytest.mark.parametrize("sink", list(_PATH_SINKS))
+def test_write_parquet_failed_write_keeps_previous_output(spark, tmp_path, sink):
+    # every path sink replaces its output by rename, so a write that
+    # fails while executing leaves the last good output, and no staging
+    # dir; the next good write replaces it
+    write, fmt = _PATH_SINKS[sink]
     out = str(tmp_path / "panel")
+
+    def rows():
+        back = spark.read.format(fmt).load(out)
+        return sorted((r.org, r.n, r.year) for r in back.collect())
+
     good = spark.createDataFrame([(2023, "RX1", 1), (2024, "RX2", 2)], ["year", "org", "n"])
-    write_parquet(good, out, partition_by=["year"])
-    bad = spark.createDataFrame([(2023, "x0")], ["year", "s"]).selectExpr(
-        "year", "cast(s as int) AS n"
+    write(good, out)
+    bad = spark.createDataFrame([(2023, "RX1", "x0")], ["year", "org", "s"]).selectExpr(
+        "year", "org", "cast(s as int) AS n"
     )
     with pytest.raises(NumberFormatException, match="x0"):
-        write_parquet(bad, out, partition_by=["year"])
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    assert got == [("RX1", 1, 2023), ("RX2", 2, 2024)]
+        write(bad, out)
+    assert rows() == [("RX1", 1, 2023), ("RX2", 2, 2024)]
+    assert os.listdir(tmp_path) == ["panel"]
+    write(good.filter("org = 'RX2'"), out)
+    assert rows() == [("RX2", 2, 2024)]
+    assert os.listdir(tmp_path) == ["panel"]
+
+
+def test_write_parquet_recovers_from_sink_killed_mid_write(spark, tmp_path):
+    # the state a kill between the two renames leaves: the last good
+    # output renamed aside and a half-written staging directory
+    out = str(tmp_path / "panel")
+
+    def crash_state():
+        os.rename(out, out + ".old")
+        os.makedirs(out + "__tmp")
+        with open(os.path.join(out + "__tmp", "part-00000.parquet"), "wb") as f:
+            f.write(b"PAR1 half-written")
+
+    write_parquet(spark.createDataFrame([(2023, "RX1")], ["year", "org"]), out)
+    crash_state()
+    # the next write restores the old output before it starts, so a
+    # write that then fails still leaves it in place
+    bad = spark.createDataFrame([(2024, "x0")], ["year", "s"]).selectExpr(
+        "year", "cast(s as int) AS org"
+    )
+    with pytest.raises(NumberFormatException, match="x0"):
+        write_parquet(bad, out)
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == [(2023, "RX1")]
+    assert os.listdir(tmp_path) == ["panel"]
+    crash_state()
+    write_parquet(spark.createDataFrame([(2024, "RX2")], ["year", "org"]), out)
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == [(2024, "RX2")]
     assert os.listdir(tmp_path) == ["panel"]
 
 

@@ -290,6 +290,20 @@ def test_compact_parquet_reduces_file_count_losslessly(spark, tmp_path):
     assert back.agg(F.sum("v")).first()[0] == sum(i * 2 for i in range(10000))
 
 
+def test_compact_parquet_restores_output_left_aside(spark, tmp_path):
+    # a crash between the two renames of an earlier swap left the data
+    # aside: compaction restores it first, then swaps its rewrite in
+    import os as _os
+
+    from nhs_data_pipeline_spark.ops.layout import compact_parquet
+
+    p = str(tmp_path / "frag")
+    spark.range(0, 100).repartition(4).write.parquet(p + ".old")
+    assert compact_parquet(spark, p + "/") == 1
+    assert spark.read.parquet(p).agg(F.sum("id")).first()[0] == sum(range(100))
+    assert _os.listdir(tmp_path) == ["frag"]
+
+
 def test_zorder_write_clusters_every_dim(spark, tmp_path):
     """Z-ordered files must have tight per-file min-max envelopes on
     BOTH columns (a single-column sort leaves the other column's
