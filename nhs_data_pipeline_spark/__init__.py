@@ -20,7 +20,6 @@ Layout
 - ``llm``       : large-scale training-data ops — dedup (exact/minhash/
                   simhash/jaccard), similarity search, text analysis,
                   multimodal column plumbing
-- ``streaming`` : Structured Streaming mirrors of the batch ingest/aggs
 - ``pipelines`` : declarative series builders replacing the reference's
                   interactive scripts
 """

@@ -142,24 +142,6 @@ def parse_month_year(c: Column | str) -> Column:
     )
 
 
-def parse_year_quarter(c: Column | str) -> Column:
-    """Parse "2019Q1" / "2019 Q1" -> quarter-start Date (lubridate ``yq()``;
-    build_datasets_overnight_day_beds.R:513)."""
-    s = _col(c).cast("string")
-    # try_cast: regexp_extract yields '' for non-matching input, and
-    # ''.cast('int') is an ANSI crash; yq() semantics are NULL-for-
-    # unparseable, which try_cast restores.
-    year = F.regexp_extract(s, r"^(\d{4})", 1).try_cast("int")
-    q = F.regexp_extract(s, r"[Qq]\s*(\d)", 1).try_cast("int")
-    return F.make_date(year, (q - 1) * 3 + 1, F.lit(1))
-
-
-def quarter_label(ts: Column | str) -> Column:
-    """Date -> "Q1".."Q4" calendar-quarter label (paste0("Q", quarter(d));
-    build_datasets_overnight_day_beds.R:505)."""
-    return F.concat(F.lit("Q"), F.quarter(_col(ts)).cast("string"))
-
-
 # ---------------------------------------------------------------------------
 # Filename metadata (S8)
 # ---------------------------------------------------------------------------

@@ -1,4 +1,4 @@
-"""Driver-side acquisition utilities (S1-S3, S4, O2).
+"""Driver-side acquisition utilities (S1, S2, S4, O2).
 
 The reference's extraction layer scrapes NHS statistics pages and
 downloads raw releases (scripts/extract_supporting_facilities_main.py).
@@ -112,16 +112,6 @@ def download_file(
     with open(dest, "wb") as f:  # pragma: no cover
         f.write(resp.content)
     return True  # pragma: no cover
-
-
-def download_webarchive(url: str, download_dir: str) -> None:
-    """S3 — the reference drives a headless Chrome for web-archive JS
-    redirects (extract_supporting_facilities_webarchive.py:15-43).
-    Browser automation is out of engine scope; stubbed honestly."""
-    raise NotImplementedError(
-        "web-archive downloads need browser automation (Selenium); "
-        "stage those files manually or via an external fetcher"
-    )
 
 
 def list_raw_files(

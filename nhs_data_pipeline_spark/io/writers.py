@@ -10,13 +10,17 @@ aside copy. A failed write leaves the last good output; a crash between
 the renames leaves it aside, and the next write restores it first. So
 no sink overwrites its last good output in place. ``write_single_csv``
 replaces its file with one ``os.replace``; ``overwrite_partitions`` and
-``write_bucketed_table`` update in place by design.
+``write_bucketed_table`` update in place by design. The staging and
+the renames are local-filesystem operations, so these sinks take local
+paths only: a URI (``file:``, ``hdfs:``, ``s3a:`` ...) raises
+``ValueError`` before anything is written.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
@@ -24,6 +28,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 
 _STAGING, _ASIDE = "__tmp", ".old"
+_URI = re.compile(r"[A-Za-z][A-Za-z0-9+.-]+:")
 
 
 def recover(path: str) -> str:
@@ -41,7 +46,14 @@ def recover(path: str) -> str:
 @contextmanager
 def _staging(path: str) -> Iterator[str]:
     """A fresh staging path beside ``path``, removed when the block
-    exits, whether it succeeded or failed."""
+    exits, whether it succeeded or failed. A URI raises ``ValueError``:
+    Spark would write the staging directory, but ``os.rename`` and
+    ``shutil.rmtree`` could neither publish nor remove it."""
+    if _URI.match(path):
+        raise ValueError(
+            f"sink path {path!r} is a URI; path sinks stage and rename on "
+            "the local filesystem, so pass a local path"
+        )
     tmp = path.rstrip("/") + _STAGING
     shutil.rmtree(tmp, ignore_errors=True)  # left by a crashed write
     try:

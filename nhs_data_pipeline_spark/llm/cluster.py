@@ -250,29 +250,6 @@ def silhouette_by_cluster(
     )
 
 
-def fit_centroids_engine(
-    df: DataFrame,
-    k: int = 16,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Fit centroids with :func:`kmeans_fit` and return them as plain
-    ``list[list[float]]`` — the shape ``llm/similarity.ivf_topk`` and
-    ``llm/dedup.semantic_dedup`` accept as a pre-trained quantizer.
-
-    The collect here is MODEL-sized (k rows of d floats), the one
-    driver round-trip a quantizer hand-off legitimately needs; the fit
-    itself never leaves the cluster. This replaces the offline-numpy /
-    MLlib path with an engine-native one: fit on the corpus (or a
-    bounded sample the caller prepares), probe with the same engine,
-    replay externally from the centroid values.
-    """
-    rows = kmeans_fit(df, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col)
-    out = {r["cid"]: [float(v) for v in r["centroid"]] for r in rows.collect()}
-    return [out[c] for c in sorted(out)]
-
-
 def kcenter_coreset(
     emb: DataFrame,
     k: int = 6,

@@ -173,26 +173,6 @@ def dsir_scores(
     )
 
 
-def dsir_topk(
-    df: DataFrame,
-    target: Column,
-    n: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 1024,
-) -> DataFrame:
-    """Deterministic importance *selection*: the n highest-scoring
-    documents (score desc, doc_id asc tie-break). orderBy+limit
-    compiles to TakeOrderedAndProject — per-partition top-n then a
-    driver-side merge of n-row heads, never a single-partition global
-    sort."""
-    return (
-        dsir_scores(df, target, text_col, id_col, buckets)
-        .orderBy(F.col("dsir_score").desc(), F.col("doc_id"))
-        .limit(n)
-    )
-
-
 def dsir_ess(scored: DataFrame, score_col: str = "dsir_score") -> DataFrame:
     """Effective sample size of an importance-weighted corpus — the
     diagnostic that tells you whether DSIR reweighting left you a

@@ -19,8 +19,8 @@ ships no media libraries.
 
 One parser per container: BMP, WAV and PNG each have one function
 that walks the header and returns samples (:func:`_pixels_bmp`,
-:func:`_wav_samples`, :func:`_png_samples`); the 8-dim features, the
-resize pixels and the framed-audio samples are all derived from those.
+:func:`_wav_samples`, :func:`_png_samples`); the 8-dim features and the
+resize pixels are derived from those.
 Resize takes a PNG whenever its samples are exact 8-bit (``vmax ==
 255``): 8-bit color/gray and every palette, interlaced or not; 16-bit
 and sub-byte grayscale stay feature-only.
@@ -28,8 +28,8 @@ and sub-byte grayscale stay feature-only.
 Scale design: decode/feature-extract runs as ``mapInPandas`` — one
 Arrow batch in, one out, executor-parallel, no shuffle. Batch size is
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a row of
-large blobs can't blow executor memory. Frame-sampling/resize emit one
-row per artifact (flat, join-able by id).
+large blobs can't blow executor memory. Resize emits one row per
+artifact (flat, join-able by id).
 """
 
 from __future__ import annotations
@@ -137,10 +137,9 @@ def _decode_bmp(b: bytes) -> list[float] | None:
 def _wav_samples(b: bytes) -> "tuple[int, int, np.ndarray] | None":
     """The one RIFF/WAVE parser: ``(channels, sample_rate, samples)``
     for 16-bit PCM, ``samples`` the interleaved int16 array of every
-    whole sample in the data chunk (one that ends mid-frame included;
-    :func:`decode_pcm` rejects those). RIFF chunks are walked with byte
-    arithmetic only. Returns None for non-PCM / non-16-bit / empty /
-    malformed files."""
+    whole sample in the data chunk (one that ends mid-frame included).
+    RIFF chunks are walked with byte arithmetic only. Returns None for
+    non-PCM / non-16-bit / empty / malformed files."""
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         return None
     i, fmt, data = 12, None, None
@@ -1048,25 +1047,6 @@ def decode_features(media: DataFrame, dim: int = 8, real_decoder=None) -> DataFr
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Plan-level frame sampling: one row per sampled timestamp, derived
-    from metadata duration — native ``sequence``/``explode`` so the fan-
-    out happens JVM-side; the (stubbed) per-frame decode then runs via
-    ``decode_features`` on the exploded rows."""
-    vids = media.filter(F.col("media_type") == "video")
-    return vids.select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
-        "content",
-    )
-
-
 def decode_pixels(content: bytes | None) -> "object":
     """REAL bytes-to-PIXELS decoder: sniffs the magic bytes and
     returns an ``(h, w, 3)`` uint8 RGB numpy array, or None for
@@ -1321,92 +1301,3 @@ def chunk_media_segments(
             F.least(F.col("start_ms") + chunk_ms, F.col("__dur")).alias("end_ms"),
         )
     )
-
-
-def decode_pcm(content: bytes | None) -> "tuple[np.ndarray, int] | None":
-    """REAL bytes-to-SAMPLES decoder for 16-bit PCM RIFF/WAVE: returns
-    ``(samples int16 ndarray [n_frames, channels], sample_rate)`` or
-    None, feeding the framed feature extractor below. The samples of
-    :func:`_wav_samples`, the one WAV parser, minus a data chunk that
-    ends mid-frame."""
-    if content is None:
-        return None
-    dec = _wav_samples(bytes(content))
-    if dec is None or len(dec[2]) % dec[0]:
-        return None
-    channels, sample_rate, samples = dec
-    return samples.reshape(-1, channels), sample_rate
-
-
-AUDIO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), True),
-        T.StructField("start_ms", T.LongType(), True),
-        T.StructField("rms_milli", T.LongType(), True),
-        T.StructField("zero_crossings", T.LongType(), True),
-        T.StructField("peak", T.IntegerType(), True),
-        T.StructField("decode_ok", T.BooleanType(), False),
-    ]
-)
-
-
-def audio_frame_features(media: DataFrame, frame_ms: int = 250) -> DataFrame:
-    """Framed audio feature extraction — the transcription-prep /
-    VAD-style front end: decode 16-bit PCM WAV to samples
-    (:func:`decode_pcm`), window into ``frame_ms`` frames (last frame
-    clips), and emit per-frame ``(rms_milli, zero_crossings, peak)``
-    on the first channel. One Arrow ``mapInPandas`` crossing, one
-    output row per frame (flat, join-able), matching
-    :func:`chunk_media_segments`'s window convention.
-
-    Determinism: RMS accumulates as an exact integer sum of squares
-    and quantizes to milli-units of full scale via floor(x*1e3 + 0.5)
-    — three IEEE ops after one exact integer; zero crossings count
-    negative/non-negative boundary flips between consecutive samples
-    (the exact :func:`_decode_wav` convention: 0 counts as
-    non-negative); peak is max |sample| (int). Undecodable rows emit
-    ONE row with NULL features and ``decode_ok = False`` — present in
-    the output, never silently dropped."""
-    if frame_ms <= 0:
-        raise ValueError("frame_ms must be positive")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "media_id": [], "frame_idx": [], "start_ms": [],
-                "rms_milli": [], "zero_crossings": [], "peak": [],
-                "decode_ok": [],
-            }
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                dec = decode_pcm(c)
-                if dec is None:
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(None)
-                    out["start_ms"].append(None)
-                    out["rms_milli"].append(None)
-                    out["zero_crossings"].append(None)
-                    out["peak"].append(None)
-                    out["decode_ok"].append(False)
-                    continue
-                samples, sr = dec
-                ch0 = samples[:, 0].astype(np.int64)
-                step = max(1, sr * frame_ms // 1000)
-                for fi in range(0, (len(ch0) + step - 1) // step):
-                    seg = ch0[fi * step : (fi + 1) * step]
-                    sq = int((seg * seg).sum())
-                    rms = (sq / len(seg)) ** 0.5 / 32768.0
-                    neg = seg < 0
-                    zc = int(np.count_nonzero(neg[1:] != neg[:-1]))
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(fi)
-                    out["start_ms"].append(fi * step * 1000 // sr)
-                    out["rms_milli"].append(
-                        int(np.floor(rms * 1e3 + 0.5))
-                    )
-                    out["zero_crossings"].append(zc)
-                    out["peak"].append(int(np.abs(seg).max()))
-                    out["decode_ok"].append(True)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=AUDIO_FRAME_SCHEMA)

@@ -76,19 +76,3 @@ def quantize_int8(
     )
 
 
-def quantized_cosine(qa, qb) -> F.Column:
-    """Cosine similarity directly on two int8-quantized vectors —
-    the symmetric per-vector scale cancels out of the ratio, so this
-    is exact integer dot/norm arithmetic on the quantized grid (it
-    approximates the float cosine to ~1/127 resolution; re-rank
-    survivors with the full-precision vectors when that matters).
-    Intermediates stay < 64 * 127^2 — far inside long range."""
-    qa64 = F.transform(qa, lambda x: x.cast("long"))
-    qb64 = F.transform(qb, lambda x: x.cast("long"))
-    dot = F.aggregate(
-        F.zip_with(qa64, qb64, lambda x, y: x * y), F.lit(0).cast("long"), lambda a, v: a + v
-    )
-    na = F.aggregate(qa64, F.lit(0).cast("long"), lambda a, v: a + v * v)
-    nb = F.aggregate(qb64, F.lit(0).cast("long"), lambda a, v: a + v * v)
-    denom = F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))
-    return F.when(denom == 0, F.lit(None)).otherwise(dot.cast("double") / denom)

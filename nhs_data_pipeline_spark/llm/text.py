@@ -31,14 +31,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(F.filter(F.split(_c(text), r"\s+"), lambda w: w != ""))
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """A BPE-flavored proxy count: word pieces + digits + punctuation
-    runs, via one regex pass (``\\w+|[^\\w\\s]``). Deterministic and
-    SQL-reproducible — a stand-in where a real tokenizer would be a
-    Pandas UDF."""
-    return F.size(F.regexp_extract_all(_c(text), F.lit(r"\w+|[^\w\s]"), 0))
-
-
 def char_count(text: Column | str) -> Column:
     return F.length(_c(text))
 
@@ -245,21 +237,6 @@ def fingerprint_md5(text: Column | str) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text
     (portable across engines — DuckDB md5 matches)."""
     return F.md5(normalize_text(text))
-
-
-def rolling_hash_fingerprint(text_col_name: str, window: int = 8) -> Column:
-    """Winnowing-style content fingerprint: min xxhash64 over character
-    ``window``-grams of the normalized text. Spark-native (no SQL oracle
-    — xxhash64 is engine-specific); used for cheap near-dup candidate
-    keying. Takes a column *name* (the dynamic-start substring needs the
-    SQL lambda form)."""
-    norm = (
-        f"trim(regexp_replace(lower({text_col_name}), '\\\\s+', ' '))"
-    )
-    return F.expr(
-        f"array_min(transform(sequence(1, greatest(length({norm}) - {window} + 1, 1)), "
-        f"i -> xxhash64(substring({norm}, i, {window}))))"
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -2,7 +2,7 @@
 cohorts over an event log ``(user, ts, event_type, ...)``.
 
 These are the batch analytics a clickstream/telemetry pipeline runs
-next to sessionization (streaming/sessionize.py). Both operators are
+next to sessionization (ops/temporal.sessionize_batch). Both operators are
 single-shuffle shapes:
 
 - ``funnel``: chained per-user window minima — every step's "first
@@ -746,8 +746,7 @@ def psi_bucket_counts(
     out: str = "__ca",
 ) -> DataFrame:
     """Fixed-width bucket counts ``(__b, <out>)`` of an integer value —
-    the model-sized PSI input table (and the state a streaming drift
-    monitor maintains incrementally: counts are additive)."""
+    the model-sized PSI input table."""
     v = F.col(value_int_col)
     return (
         df.filter(v.isNotNull())
@@ -759,11 +758,9 @@ def psi_bucket_counts(
 
 def psi_from_bucket_counts(ca: DataFrame, cb: DataFrame) -> DataFrame:
     """PSI from two pre-bucketed count tables ``(__b, __ca)`` /
-    ``(__b, __cb)`` — the shared core of :func:`psi_report` and the
-    streaming drift monitor (streaming/pipeline.psi_stream_monitor),
-    so the live metric and a batch rebuild can never drift
-    semantically. Same exact-integer term construction and float
-    discipline as psi_report's docstring."""
+    ``(__b, __cb)`` — the core of :func:`psi_report`. Same
+    exact-integer term construction and float discipline as
+    psi_report's docstring."""
     from nhs_data_pipeline_spark.ops.sketch import _ns_join
 
     D = "decimal(38,0)"

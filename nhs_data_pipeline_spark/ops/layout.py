@@ -5,8 +5,7 @@ Neither exists in the reference (its outputs are single CSVs —
 SURVEY §2.1 S9); both are table-maintenance operations a 100 TB
 parquet lake needs continuously:
 
-- **Compaction**: streaming appends (see
-  ``streaming.dedup_stream_against_store``) and per-partition
+- **Compaction**: incremental appends and per-partition
   overwrites leave thousands of KB-sized files; each costs a scan
   task + a footer read, so scan latency degrades linearly in file
   count. ``compact_parquet`` rewrites a directory into

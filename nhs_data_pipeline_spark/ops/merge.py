@@ -176,8 +176,7 @@ def incremental_agg_merge(
     while this merge's coalesced addition would say 0 — with NULL
     measures admitted, the incremental result could diverge from a
     fresh GROUP BY exactly when the driver regenerates data with an
-    all-NULL group (and a streaming store's value would depend on
-    batch arrival order). NULL keys are legal groups (eqNullSafe
+    all-NULL group. NULL keys are legal groups (eqNullSafe
     join, coalesced key columns)."""
     if not keys:
         raise ValueError(

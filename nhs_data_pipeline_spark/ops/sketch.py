@@ -261,9 +261,9 @@ def hll_estimate(
 
 def grid_bin(v: Column, lo: Column, hi: Column, bins: int) -> Column:
     """Bin index for a fixed [lo, hi) grid with clamp-to-edge
-    semantics, safe on dirty inputs — the ONE definition both the
-    batch histogram and the streaming maintainer use (divergent
-    hand-rolled copies were a review finding):
+    semantics, safe on dirty inputs — the ONE definition every
+    histogram uses (divergent hand-rolled copies were a review
+    finding):
 
     - NaN -> NULL (callers filter it out with the NULLs; silently
       binning NaN into bin 0 corrupts quantiles),
@@ -455,7 +455,7 @@ def bloom_build(
     """Build the bitmap table ``(*shard_cols, word_idx, word)`` over a
     BIGINT key column: k bit positions per key, OR-ed into
     ``m_bits / 32`` BIGINT words. Model-sized by construction (at most
-    m/32 rows per shard), mergeable with :func:`bloom_merge`, and
+    m/32 rows per shard), mergeable by word-wise OR, and
     broadcastable into any probe scan. Size ``m_bits`` for the
     expected build-side cardinality (~10 bits/key for ~1% FP at k=3);
     an undersized filter stays CORRECT — it just passes more false
@@ -478,12 +478,6 @@ def bloom_build(
         .groupBy(*shards, "word_idx")
         .agg(F.bit_or("__m").alias("word"))
     )
-
-
-def bloom_merge(bitmap: DataFrame) -> DataFrame:
-    """Merge per-shard bitmaps into one global filter by word-wise OR —
-    exact over bloom filters (build-per-shard, merge, prefilter once)."""
-    return bitmap.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
 
 
 def bloom_prefilter(
@@ -571,13 +565,6 @@ def bitmap_build(
         .groupBy(*groups, "word_idx")
         .agg(F.bit_or("__m").alias("word"))
     )
-
-
-def bitmap_merge(bitmap: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Merge bitmap shards by word-wise OR, keeping ``group_cols`` —
-    exact over bitmaps (OR is idempotent: replays/overlaps are free)."""
-    keys = (group_cols or []) + ["word_idx"]
-    return bitmap.groupBy(*keys).agg(F.bit_or("word").alias("word"))
 
 
 def bitmap_distinct(bitmap: DataFrame, group_cols: list[str] | None = None) -> DataFrame:

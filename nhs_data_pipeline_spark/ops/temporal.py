@@ -2,7 +2,7 @@
 
 The reference pipeline is quarterly-batch and has no temporal join
 operators; these are the time-series shapes an event / training-data
-pipeline needs (additive surface, like streaming — SURVEY §2.11).
+pipeline needs (additive surface — SURVEY §2.11).
 
 Both operators avoid the trap Spark falls into when you write the
 semantics naively: a join with an inequality condition (and no usable
@@ -499,3 +499,37 @@ def seasonal_baseline_deviation(
         "dev_ratio",
         F.when(F.col("phase_mean") != 0, dev / F.col("phase_mean")),
     )
+
+
+def sessionize_batch(
+    events: DataFrame, gap_seconds: int = 1800, ts_col: str = "ts",
+    user_col: str = "user_id", value_col: str = "value",
+) -> DataFrame:
+    """Gap-based sessionization: a session ends after more than
+    ``gap_seconds`` of inactivity. Session id = cumulative count of
+    gap-exceeding steps per user (lag + running sum), then one
+    aggregate per session. All native expressions.
+
+    Gaps compare at MICROSECOND resolution (unix_micros): a
+    cast('long') comparison truncates to whole seconds and would
+    split or merge sessions whose events are fractional seconds apart
+    near the gap.
+
+    Malformed rows: NULL-timestamp rows are dropped (an unfiltered
+    lag() would fold them into the user's first session), and
+    NULL/NaN values contribute 0 to ``value_sum``."""
+    w = Window.partitionBy(user_col).orderBy(ts_col)
+    wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    us = F.unix_micros(F.col(ts_col))
+    marked = events.filter(F.col(ts_col).isNotNull()).withColumn(
+        "__new",
+        F.when(us - F.lag(us).over(w) > gap_seconds * 1_000_000, 1).otherwise(0),
+    ).withColumn("__sid", F.sum("__new").over(wrun))
+    return marked.groupBy(user_col, "__sid").agg(
+        F.min(ts_col).alias("session_start"),
+        F.max(ts_col).alias("session_end"),
+        F.count("*").alias("n_events"),
+        F.sum(
+            F.coalesce(F.nanvl(F.col(value_col), F.lit(0.0)), F.lit(0.0))
+        ).alias("value_sum"),
+    ).drop("__sid")

@@ -1,4 +1,4 @@
-"""Successor transitive closure + change classification (J3, A2).
+"""Successor transitive closure (J3).
 
 The reference resolves NHS trust succession chains (old_code -> ... ->
 final_code, with splits fanning one-to-many) by an iterative in-memory
@@ -14,7 +14,6 @@ successor, so it raises ``ValueError`` naming the codes on the cycle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nhs_data_pipeline_spark.ops.core import local_frame
@@ -80,28 +79,3 @@ def successor_closure(edges: DataFrame, old: str = "old_code", new: str = "new_c
     return local_frame(edges.sparkSession, rows, schema)
 
 
-def classify_changes(edges: DataFrame, old: str = "old_code", new: str = "new_code") -> DataFrame:
-    """Classify each one-hop change as merger / name_change / split.
-
-    A successor reached by exactly one distinct predecessor is a name
-    change; by several, a merger. An origin with several distinct
-    successors is a split (takes precedence, matching the reference's
-    split handling). Parity: build_all_org_changes.R:136-198.
-
-    Returns ``(old, new, change_type)``.
-    """
-    e = edges.select(old, new).distinct()
-    by_new = e.groupBy(new).agg(F.countDistinct(old).alias("n_preds"))
-    by_old = e.groupBy(old).agg(F.countDistinct(new).alias("n_succs"))
-    return (
-        e.join(F.broadcast(by_new), new, "left")
-        .join(F.broadcast(by_old), old, "left")
-        .select(
-            old,
-            new,
-            F.when(F.col("n_succs") > 1, "split")
-            .when(F.col("n_preds") > 1, "merger")
-            .otherwise("name_change")
-            .alias("change_type"),
-        )
-    )

@@ -1019,7 +1019,7 @@ def orgchange_adjust_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Events: time-windowed aggregation + JSON extraction (streaming-mirror)
+# Events: time-windowed aggregation + JSON extraction
 # ===========================================================================
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1049,9 +1049,8 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window rollup over the events table — the batch twin of
-    the Structured Streaming pipeline (same window expression runs
-    under readStream + watermark in streaming/pipeline.py)."""
+    """Tumbling-window rollup over the events table: one grouping on
+    a 1-hour ``window`` expression and the event type."""
     ev = _events(spark, sf_dir)
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -3444,13 +3443,10 @@ def eval_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (batch twin of the
-    applyInPandasWithState streaming operator; 30-min inactivity gap).
-    Native lag + running-sum session ids — one shuffle on user_id."""
-    from nhs_data_pipeline_spark.streaming.sessionize import sessionize_batch
-
+    """Gap-based sessionization (30-min inactivity gap). Native lag +
+    running-sum session ids — one shuffle on user_id."""
     ev = _events(spark, sf_dir)
-    out = sessionize_batch(ev, gap_seconds=1800)
+    out = ot.sessionize_batch(ev, gap_seconds=1800)
     return out.select(
         "user_id", "session_start", "session_end", "n_events",
         F.round("value_sum", 2).alias("value_sum"),
@@ -10779,8 +10775,8 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     true_match_rows, false_positive_rows, missed_rows, fp_rate).
     ``missed_rows`` is structurally 0 (no false negatives) and the FP
     count itself hash-checks cross-engine (ops/sketch.bloom_build).
-    At 100 TB the bitmap is built per shard and OR-merged
-    (bloom_merge), the probe side never shuffles or explodes — k
+    At 100 TB the bitmap is built per shard and OR-merged by word,
+    the probe side never shuffles or explodes — k
     broadcast word-lookups inside the scan stage — and the exact semi
     join afterwards only pays for true matches + the bounded FP
     remainder. The gate pins m to 1024 bits so false positives are

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nhs_data_pipeline_spark.llm.dedup import semantic_dedup
-from nhs_data_pipeline_spark.llm.quantize import quantize_int8, quantized_cosine
+from nhs_data_pipeline_spark.llm.quantize import quantize_int8
 from nhs_data_pipeline_spark.ops.analytics import funnel, retention_cohorts
 from nhs_data_pipeline_spark.ops.merge import merge_upsert, scd2_from_feed
 from nhs_data_pipeline_spark.ops.sampling import temperature_sample
@@ -280,20 +280,21 @@ def test_quantize_int8_grid_and_cosine(spark):
         qv = data[i]["qvec"]
         assert max(abs(x) for x in qv) == 127  # max-abs element maps to +/-127
         assert all(-127 <= x <= 127 for x in qv)
-    # quantized cosine approximates the float cosine to grid resolution
+    # the cosine of the quantized vectors approximates the float cosine
+    # to grid resolution (the per-vector scale cancels out of the ratio)
+    def cosine(c, alias):
+        a, b = f"cast(a.{c} as array<double>)", f"cast(b.{c} as array<double>)"
+        return F.expr(
+            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
+            f" / (sqrt(aggregate({a}, 0D, (acc, v) -> acc + v * v))"
+            f" * sqrt(aggregate({b}, 0D, (acc, v) -> acc + v * v)))"
+        ).alias(alias)
+
     pairs = (
         q.filter(F.col("vec_id") < 40)
         .alias("a")
         .join(q.filter(F.col("vec_id") < 40).alias("b"), F.expr("a.vec_id < b.vec_id"))
-        .select(
-            quantized_cosine(F.col("a.qvec"), F.col("b.qvec")).alias("qc"),
-            F.expr(
-                "aggregate(zip_with(a.embedding, b.embedding, (x, y) -> x * y),"
-                " 0D, (acc, v) -> acc + v)"
-                " / (sqrt(aggregate(a.embedding, 0D, (acc, v) -> acc + v * v))"
-                " * sqrt(aggregate(b.embedding, 0D, (acc, v) -> acc + v * v)))"
-            ).alias("fc"),
-        )
+        .select(cosine("qvec", "qc"), cosine("embedding", "fc"))
         .collect()
     )
     err = max(abs(r["qc"] - r["fc"]) for r in pairs)

@@ -6,8 +6,6 @@ from __future__ import annotations
 import os
 import time
 
-import pytest
-
 from nhs_data_pipeline_spark.io import (
     download_manifest,
     extract_links,
@@ -15,7 +13,6 @@ from nhs_data_pipeline_spark.io import (
     list_raw_files,
     sanitize_filename,
 )
-from nhs_data_pipeline_spark.io.download import download_webarchive
 
 HTML = """
 <html><body>
@@ -68,7 +65,3 @@ def test_latest_file(tmp_path):
     assert latest_file([str(p1), str(p2)]) == str(p2)
     assert latest_file([]) is None
 
-
-def test_webarchive_is_honest_stub():
-    with pytest.raises(NotImplementedError):
-        download_webarchive("https://web.archive.org/x", "/tmp")

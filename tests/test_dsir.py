@@ -99,17 +99,6 @@ def test_single_token_and_whitespace_docs(spark):
     assert got[1] == got[2]
 
 
-def test_topk_order_and_plan(spark):
-    df = _docs(spark, ROWS)
-    top = dsir.dsir_topk(df, F.col("source") == "tgt", n=2, buckets=64)
-    ids = [r["doc_id"] for r in top.collect()]
-    scores = _py_scores(ROWS, "tgt", 64)
-    want = sorted(scores, key=lambda i: (-scores[i], i))[:2]
-    assert ids == want
-    plan = top._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan  # no global single-partition sort
-
-
 def test_no_target_rows_degenerates_gracefully(spark):
     out = dsir.dsir_scores(
         _docs(spark, ROWS), F.lit(False), buckets=64

@@ -74,11 +74,6 @@ def test_parse_month_year_formats(spark):
         assert _one(spark, nf.parse_month_year(F.col("v")), raw) == expect
 
 
-def test_parse_year_quarter(spark):
-    assert _one(spark, nf.parse_year_quarter(F.col("v")), "2019Q1") == datetime.date(2019, 1, 1)
-    assert _one(spark, nf.parse_year_quarter(F.col("v")), "2019 Q4") == datetime.date(2019, 10, 1)
-
-
 def test_filename_metadata_extractors(spark):
     fname = "Beds_Open_Overnight_Quarter_3_2019-20_admitted.xls"
     assert _one(spark, nf.extract_year(F.col("v")), fname) == 2019
@@ -92,17 +87,6 @@ def test_bin_lower_bound(spark):
     assert _one(spark, nf.bin_lower_bound(F.col("v")), "between_17_18") == 17.0
     assert _one(spark, nf.bin_lower_bound(F.col("v")), "between_52_plus") == 52.0
     assert _one(spark, nf.bin_lower_bound(F.col("v")), "total") is None
-
-
-def test_parse_year_quarter_junk_yields_null(spark):
-    from nhs_data_pipeline_spark.functions import parse_year_quarter
-
-    df = spark.createDataFrame(
-        [("2019Q1",), ("junk",), ("Q1 2019",), (None,)], "s string"
-    )
-    got = [r[0] for r in df.select(parse_year_quarter("s")).collect()]
-    assert got[0] is not None
-    assert got[1] is None and got[2] is None and got[3] is None
 
 
 def test_fiscal_range_junk_yields_null(spark):

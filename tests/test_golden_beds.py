@@ -209,27 +209,19 @@ class TestChangeDateArithmetic:
         (year, quarter) (build_datasets_overnight_day_beds.R:505-517):
         the first period under a new org arrangement is one calendar
         quarter after the change period, with Q4 rolling the year."""
-        from nhs_data_pipeline_spark.functions import (
-            parse_year_quarter,
-            quarter_label,
-        )
-
         pairs = (
             _read(spark, QUARTERLY).select("year", "quarter").distinct()
         )
+        qnum = F.substring("quarter", 2, 1).cast("int")
+        start = F.make_date(F.col("year").cast("int"), (qnum - 1) * 3 + 1, F.lit(1))
         nxt = pairs.withColumn(
             "__d",
-            F.add_months(
-                parse_year_quarter(
-                    F.concat(F.col("year").cast("string"), F.col("quarter"))
-                ),
-                3,
-            ),
+            F.add_months(start, 3),
         ).select(
             "year",
             "quarter",
             F.year("__d").alias("next_year"),
-            quarter_label("__d").alias("next_quarter"),
+            F.concat(F.lit("Q"), F.quarter("__d")).alias("next_quarter"),
         )
         for r in nxt.collect():
             q = int(r["quarter"][1])

@@ -17,7 +17,6 @@ from nhs_data_pipeline_spark.io import (
     with_filename_metadata,
     write_single_csv,
 )
-from nhs_data_pipeline_spark.io.formats import write_jsonl, write_orc
 from nhs_data_pipeline_spark.io.writers import write_jsonl_shards, write_parquet
 from nhs_data_pipeline_spark.ops.layout import zorder_write
 
@@ -313,8 +312,6 @@ _PATH_SINKS = {  # name -> (write(df, path), read-back format)
     "write_parquet": (lambda df, p: write_parquet(df, p, partition_by=["year"]), "parquet"),
     "write_parquet_trailing_slash": (
         lambda df, p: write_parquet(df, p + "/", partition_by=["year"]), "parquet"),
-    "write_orc": (lambda df, p: write_orc(df, p, partition_by=["year"]), "orc"),
-    "write_jsonl": (write_jsonl, "json"),
     "write_jsonl_shards": (
         lambda df, p: write_jsonl_shards(df, p, num_shards=2, id_col="org"), "json"),
     "zorder_write": (lambda df, p: zorder_write(df, p, ["year"], n_files=1), "parquet"),
@@ -373,6 +370,23 @@ def test_write_parquet_recovers_from_sink_killed_mid_write(spark, tmp_path):
     write_parquet(spark.createDataFrame([(2024, "RX2")], ["year", "org"]), out)
     assert [tuple(r) for r in spark.read.parquet(out).collect()] == [(2024, "RX2")]
     assert os.listdir(tmp_path) == ["panel"]
+
+
+def test_path_sinks_reject_uri_before_writing(spark, tmp_path):
+    # staging and the swap renames are local-filesystem operations: a
+    # URI raises the same ValueError on every call and leaves nothing
+    # behind (no staging directory to trip the next write)
+    df = spark.createDataFrame([(2023, "RX1")], ["year", "org"])
+    uri = "file:" + str(tmp_path / "panel")
+    errors = []
+    for _ in range(2):
+        with pytest.raises(ValueError, match="is a URI") as exc:
+            write_parquet(df, uri)
+        errors.append(str(exc.value))
+    assert errors[0] == errors[1]
+    with pytest.raises(ValueError, match="is a URI"):
+        write_single_csv(df, "file:" + str(tmp_path / "out.csv"))
+    assert os.listdir(tmp_path) == []
 
 
 def test_file_level_skip_predicate(spark, tmp_path):
@@ -515,41 +529,16 @@ def test_overwrite_partitions_is_incremental(spark, tmp_path):
     assert got == {"Q1": 1.0, "Q2": 99.0}  # Q1 untouched, Q2 replaced
 
 
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC sink/scan: values survive a roundtrip and the scan gets the
-    same pushdown + pruning contract as parquet."""
-    import contextlib
-    import io as _io
-
-    from nhs_data_pipeline_spark.io.formats import read_orc, write_orc
-
-    src = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    p = str(tmp_path / "li_orc")
-    write_orc(src, p)
-    back = read_orc(spark, p)
-    assert back.count() == src.count()
-    assert set(back.columns) == set(src.columns)
-
-    q = back.filter("l_quantity > 40").select("l_orderkey", "l_quantity")
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q.explain("formatted")
-    plan = buf.getvalue()
-    assert "PushedFilters" in plan and "l_quantity" in plan.split("PushedFilters")[1][:200]
-    read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    assert "l_extendedprice" not in read_schema, read_schema
-
-
 def test_jsonl_roundtrip_and_corrupt_line_preserved(spark, tmp_path):
-    """JSONL sink/scan: roundtrip is lossless; a malformed line lands in
+    """JSONL scan: roundtrip is lossless; a malformed line lands in
     _corrupt_record instead of silently dropping."""
-    from nhs_data_pipeline_spark.io.formats import read_jsonl, write_jsonl
+    from nhs_data_pipeline_spark.io.formats import read_jsonl
 
     src = spark.createDataFrame(
         [(1, "a", 1.5), (2, "b", None)], "id bigint, s string, v double"
     )
     p = str(tmp_path / "feed")
-    write_jsonl(src, p, compression=None)
+    src.write.json(p)
     back = read_jsonl(spark, p, schema="id bigint, s string, v double")
     got = {r.id: (r.s, r.v) for r in back.collect()}
     assert got == {1: ("a", 1.5), 2: ("b", None)}

@@ -5,7 +5,7 @@ import hashlib
 import json
 import os
 
-from nhs_data_pipeline_spark.io.formats import read_jsonl, split_corrupt
+from nhs_data_pipeline_spark.io.formats import read_jsonl
 from nhs_data_pipeline_spark.io.writers import write_jsonl_shards
 
 ROWS = [
@@ -58,13 +58,13 @@ def test_corrupt_records_quarantined_not_fatal(spark, tmp_path):
         '{"doc_id": 2, "text": "also ok"}\n'
         '{"doc_id": "NaNsense}\n'
     )
-    df = read_jsonl(spark, str(p), schema="doc_id bigint, text string")
-    good, bad = split_corrupt(df)
-    assert sorted((r["doc_id"], r["text"]) for r in good.collect()) == [
+    rows = read_jsonl(spark, str(p), schema="doc_id bigint, text string").collect()
+    good = [r for r in rows if r["_corrupt_record"] is None]
+    assert sorted((r["doc_id"], r["text"]) for r in good) == [
         (1, "ok"),
         (2, "also ok"),
     ]
-    raw = sorted(r["raw_line"] for r in bad.collect())
+    raw = sorted(r["_corrupt_record"] for r in rows if r["_corrupt_record"] is not None)
     assert raw == ["this is not json at all", '{"doc_id": "NaNsense}']
 
 

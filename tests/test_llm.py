@@ -450,7 +450,6 @@ def test_text_signals(spark):
         tx.stopword_ratio("text").alias("stop"),
         tx.lang_id("text").alias("lang"),
         tx.fingerprint_md5("text").alias("fp"),
-        tx.bpe_ish_token_count("text").alias("bpe"),
     ).collect()
     r1, r2 = out
     assert r1.n_tok == 5
@@ -458,17 +457,10 @@ def test_text_signals(spark):
     assert r1.stop == 3 / 5  # 'the' x2 + 'and'
     assert r1.lang == "en"
     assert r2.n_tok == 0 and r2.punct is None and r2.lang is None
-    assert r1.bpe == 6  # 5 words + '!'
     # fingerprint is normalization-invariant
     df2 = spark.createDataFrame([(1, "  THE cat   and the DOG!  ")], ["doc_id", "text"])
     fp2 = df2.select(tx.fingerprint_md5("text").alias("fp")).first().fp
     assert fp2 == r1.fp
-
-
-def test_rolling_hash_fingerprint_deterministic(spark):
-    df = spark.createDataFrame([(1, "hello world text"), (2, "hello world text")], ["doc_id", "text"])
-    out = df.select(tx.rolling_hash_fingerprint("text").alias("rh")).collect()
-    assert out[0].rh == out[1].rh
 
 
 def test_multimodal_decode_plumbing(spark):
@@ -1999,13 +1991,6 @@ def test_jpeg_progressive_property_random_coefficients():
         assert f[0] == int(plane.sum()) / (255.0 * n), trial
 
 
-def test_multimodal_frame_sampling(spark):
-    rows = [(3, "video", bytearray(b"\x03"), ("video/mp4", None, None, 2500))]
-    media = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-    frames = mm.sample_video_frames(media, every_ms=1000)
-    assert [r.frame_ts_ms for r in frames.collect()] == [0, 1000, 2000]
-
-
 def test_resize_bilinear_hand_computed():
     """The bilinear kernel pinned against a fully hand-computed 2x2 ->
     4x4 case (half-pixel centers, edge clamp, floor(v+0.5) rounding):
@@ -3024,58 +3009,3 @@ class TestIsotonicCalibrate:
         out = {r.bin: r for r in clf2.isotonic_calibrate(df).collect()}
         assert out[0].iso_rate == out[1].iso_rate == 0.2
         assert out[0].iso_num == 2 and out[0].iso_den == 10
-
-
-def test_audio_frame_features_hand_computed(spark):
-    """Framed audio features through the real mapInPandas path: a
-    hand-built square-wave WAV frames into exactly computable
-    (rms_milli, zero_crossings, peak) rows — RMS from exact integer
-    sums, the _decode_wav zero-crossing convention (0 counts
-    non-negative), last frame clipped; garbage/NULL rows emit one
-    decode_ok=False row each."""
-    import math
-
-    # 8000 Hz mono; 10 samples: +A x2, -A x2 repeating, then a zero
-    A = 16384
-    samples = [A, A, -A, -A, A, A, -A, -A, A, 0]
-    wav = _make_wav(samples, sample_rate=8000)
-    rows = [
-        (1, "audio", bytearray(wav), ("audio/wav", None, None, None)),
-        (2, "audio", bytearray(b"RIFFjunk"), (None,) * 4),
-        (3, "audio", None, (None,) * 4),
-    ]
-    media = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-    # frame_ms=1000 at 8000 Hz -> step 8000 (one clipped frame of 10)
-    one = [r for r in mm.audio_frame_features(media, 1000).collect()
-           if r.media_id == 1]
-    assert len(one) == 1 and one[0].frame_idx == 0
-    sq = sum(v * v for v in samples)
-    exp_rms = math.floor(
-        (sq / len(samples)) ** 0.5 / 32768.0 * 1e3 + 0.5
-    )
-    assert one[0].rms_milli == exp_rms
-    # crossings: sign pattern ++--++--+0 -> flips at 4 boundaries
-    # (+->-, -->+, +->-, -->+) and none at the final +->0 (0 is
-    # non-negative)
-    assert one[0].zero_crossings == 4
-    assert one[0].peak == A and one[0].start_ms == 0
-    # fine frames: step = 8000 * 1 // 1000 = 8 -> frames of 8 + 2
-    fine = sorted(
-        (r.frame_idx, r.zero_crossings, r.peak)
-        for r in mm.audio_frame_features(media, 1).collect()
-        if r.media_id == 1
-    )
-    assert [f[0] for f in fine] == [0, 1]
-    # frame 0 = ++--++-- (3 flips); frame 1 = +0 (0 is non-negative,
-    # so NO flip)
-    assert fine[0][1] == 3 and fine[1][1] == 0
-    assert fine[1][2] == A
-    bad = {r.media_id: r for r in
-           mm.audio_frame_features(media, 1000).collect()
-           if r.media_id != 1}
-    assert not bad[2].decode_ok and bad[2].rms_milli is None
-    assert not bad[3].decode_ok and bad[3].frame_idx is None
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        mm.audio_frame_features(media, 0)

@@ -1,4 +1,4 @@
-"""Org-change subsystem tests: closure, classification, adjustment."""
+"""Org-change subsystem tests: closure and adjustment."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import types as T
 
 from nhs_data_pipeline_spark.orgchange import (
     adjust_org_changes,
-    classify_changes,
     successor_closure,
 )
 import pytest
@@ -87,17 +86,6 @@ def test_closure_output_schema(spark):
     # shipped as one Arrow table: no pickled RDD, no Python workers
     leaf = out._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in leaf and "ExistingRDD" not in leaf, leaf
-
-
-@pytest.mark.slow
-def test_classify_changes(spark):
-    e = _edges(spark, [("A", "M"), ("B", "M"), ("S", "X"), ("S", "Y"), ("N1", "N2")])
-    got = {(r.old_code, r.new_code): r.change_type for r in classify_changes(e).collect()}
-    assert got[("A", "M")] == "merger"
-    assert got[("B", "M")] == "merger"
-    assert got[("S", "X")] == "split"
-    assert got[("S", "Y")] == "split"
-    assert got[("N1", "N2")] == "name_change"
 
 
 def _panel(spark):

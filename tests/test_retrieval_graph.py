@@ -548,7 +548,8 @@ def test_engine_fit_centroids_drive_ivf_exactly_like_bruteforce(spark):
     rng = random.Random(5)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)]
     vecs = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    centers = cl.fit_centroids_engine(vecs, k=4, iterations=2)
+    fit = cl.kmeans_fit(vecs, k=4, iterations=2).collect()
+    centers = [list(r.centroid) for r in sorted(fit, key=lambda r: r.cid)]
     assert len(centers) == 4 and all(len(c) == 8 for c in centers)
     qs = vecs.limit(5)
     # probing ALL cells with the engine-fit quantizer == brute force

@@ -125,7 +125,7 @@ class TestBloomFilter:
         assert fp / non < 0.30, (fp, non)
 
     def test_shard_merge_equals_global_build(self, spark):
-        from nhs_data_pipeline_spark.ops.sketch import bloom_build, bloom_merge
+        from nhs_data_pipeline_spark.ops.sketch import bloom_build
 
         df = spark.createDataFrame(
             [(i, "s%d" % (i % 3)) for i in range(100)], "key bigint, shard string"
@@ -135,7 +135,11 @@ class TestBloomFilter:
             for r in bloom_build(df, "key", k=2, m_bits=256).collect()
         }
         sharded = bloom_build(df, "key", k=2, m_bits=256, shard_cols=["shard"])
-        merged = {(r.word_idx, r.word) for r in bloom_merge(sharded).collect()}
+        # per-shard filters merge into the global one by word-wise OR
+        merged = {
+            (r.word_idx, r.word)
+            for r in sharded.groupBy("word_idx").agg(F.bit_or("word").alias("word")).collect()
+        }
         assert merged == global_words
 
     def test_null_key_hashes_stably(self, spark):
@@ -208,11 +212,7 @@ class TestBitmapDistinct:
     """Exact mergeable bitmap distinct counting."""
 
     def test_matches_count_distinct_and_merges(self, spark):
-        from nhs_data_pipeline_spark.ops.sketch import (
-            bitmap_build,
-            bitmap_distinct,
-            bitmap_merge,
-        )
+        from nhs_data_pipeline_spark.ops.sketch import bitmap_build, bitmap_distinct
 
         rows = [("s%d" % (i % 3), (i * i) % 500) for i in range(2000)]
         df = spark.createDataFrame(rows, "shard string, k bigint")
@@ -228,9 +228,10 @@ class TestBitmapDistinct:
             ).collect()
         }
         assert per == truth
-        # shard merge -> exact GLOBAL distinct (what count_distinct
-        # partials cannot give you from pre-aggregated shards)
-        glob = bitmap_distinct(bitmap_merge(sharded.drop("shard"))).collect()[0]
+        # shard merge by word-wise OR -> exact GLOBAL distinct (what
+        # count_distinct partials cannot give you from pre-aggregated shards)
+        merged = sharded.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
+        glob = bitmap_distinct(merged).collect()[0]
         assert glob.distinct_exact == df.select("k").distinct().count()
 
     def test_null_keys_excluded_and_negative_raises(self, spark):
@@ -329,38 +330,38 @@ class TestCmJoinCardinality:
         assert est == 0
 
 
-def test_bitmap_stream_matches_batch(spark, tmp_path):
-    """Streamed bitmap store == one-shot batch bitmap; exact distinct
-    from the store equals the true distinct of everything streamed."""
-    import time as _time
-
-    from pyspark.sql import types as T
-
+def test_bitmap_distinct_of_union_is_true_distinct(spark):
+    """Exact distinct from one bitmap over two overlapping batches of
+    keys equals the true distinct count of their union."""
     from nhs_data_pipeline_spark.ops.sketch import bitmap_build, bitmap_distinct
-    from nhs_data_pipeline_spark.streaming.pipeline import (
-        bitmap_stream_into_store,
-        stream_files,
-    )
 
-    schema = T.StructType([T.StructField("key", T.LongType())])
-    src = str(tmp_path / "bmsrc")
-    b1 = spark.createDataFrame([(i % 90,) for i in range(200)], schema)
-    b1.coalesce(1).write.parquet(src)
-    _time.sleep(1.1)
-    b2 = spark.createDataFrame([(i % 150,) for i in range(200)], schema)
-    b2.coalesce(1).write.mode("append").parquet(src)
+    b1 = spark.createDataFrame([(i % 90,) for i in range(200)], "key bigint")
+    b2 = spark.createDataFrame([(i % 150,) for i in range(200)], "key bigint")
+    bitmap = bitmap_build(b1.unionByName(b2), "key")
+    assert bitmap_distinct(bitmap).collect()[0].distinct_exact == 150
 
-    store = str(tmp_path / "bmstore")
-    q = bitmap_stream_into_store(
-        stream_files(spark, src, schema, max_files_per_trigger=1),
-        "key", store, checkpoint=str(tmp_path / "bmckpt"),
-    )
-    q.awaitTermination()
-    streamed = spark.read.parquet(store).drop("last_batch_id", "stream_key")
-    direct = bitmap_build(b1.unionByName(b2), "key")
-    assert sorted(map(tuple, streamed.collect())) == \
-           sorted(map(tuple, direct.collect()))
-    assert bitmap_distinct(streamed).collect()[0].distinct_exact == 150
+
+def test_grid_bin_survives_dirty_values(spark):
+    """Fixed [lo, hi) grid: NaN bins to NULL, +/-inf and huge values
+    clamp into the edge bins (an ANSI cast of an overflowed floor would
+    otherwise throw mid-query). Callers filter NULL values first."""
+    from nhs_data_pipeline_spark.ops.sketch import grid_bin
+
+    vals = [5.0, float("nan"), float("inf"), float("-inf"), 1e300, -5.0, 10.0]
+    df = spark.createDataFrame([(v,) for v in vals], "v double")
+    got = [
+        r.b for r in df.select(
+            grid_bin(F.col("v"), F.lit(0.0), F.lit(10.0), 10).alias("b")
+        ).collect()
+    ]
+    assert got == [5, None, 9, 0, 9, 0, 9]
+
+
+def test_grid_bin_rejects_bad_bins(spark):
+    from nhs_data_pipeline_spark.ops.sketch import grid_bin
+
+    with pytest.raises(ValueError):
+        grid_bin(F.col("v"), F.lit(0.0), F.lit(1.0), 0)
 
 
 def test_diagnose_join_skew_hand_computed(spark):

@@ -331,3 +331,46 @@ def test_cusum_python_replica_and_tiebreak(spark):
     assert r.max_cusum == math.floor(
         best[0] / (n * 1e6) * 1e6 + 0.5
     ) / 1e6
+
+
+def test_sessionize_batch_gaps_at_microsecond_resolution(spark):
+    """30-minute gap sessions: user 1 splits at a 2-hour gap, user 2
+    stays one session, and user 3's steps of 1800.000001 s (new
+    session) and 1799.999999 s (same session) straddle the gap, which
+    a whole-second comparison would sessionize differently."""
+    step_in = datetime.timedelta(seconds=1799, microseconds=999999)
+    step_out = datetime.timedelta(seconds=1800, microseconds=1)
+    rows = [(BASE + datetime.timedelta(minutes=m), 1, 1.0) for m in (0, 5, 10, 130, 135)]
+    rows += [(BASE + datetime.timedelta(minutes=m), 2, 2.0) for m in (0, 20)]
+    rows += [(BASE, 3, 3.0), (BASE + step_out, 3, 3.0), (BASE + step_out + step_in, 3, 3.0)]
+    ev = spark.createDataFrame(rows, "ts timestamp, user_id long, value double")
+    got = sorted(
+        (r.user_id, r.session_start, r.session_end, r.n_events, r.value_sum)
+        for r in ot.sessionize_batch(ev, gap_seconds=1800).collect()
+    )
+
+    def m(k):
+        return BASE + datetime.timedelta(minutes=k)
+
+    assert got == [
+        (1, m(0), m(10), 3, 3.0),
+        (1, m(130), m(135), 2, 2.0),
+        (2, m(0), m(20), 2, 4.0),
+        (3, BASE, BASE, 1, 3.0),
+        (3, BASE + step_out, BASE + step_out + step_in, 2, 6.0),
+    ]
+
+
+def test_sessionize_batch_malformed_rows(spark):
+    """NULL timestamps are dropped; NULL/NaN values sum as 0."""
+    rows = [
+        (BASE, 1, 1.0),
+        (BASE + datetime.timedelta(seconds=10), 1, float("nan")),
+        (BASE + datetime.timedelta(seconds=20), 1, None),
+        (None, 1, 99.0),  # invalid event: dropped entirely
+    ]
+    ev = spark.createDataFrame(rows, "ts timestamp, user_id long, value double")
+    out = ot.sessionize_batch(ev).collect()
+    assert len(out) == 1
+    assert out[0].n_events == 3  # null-ts row gone
+    assert out[0].value_sum == 1.0  # NaN and NULL contribute 0
