@@ -221,7 +221,7 @@ class TestChangeDateArithmetic:
             "year",
             "quarter",
             F.year("__d").alias("next_year"),
-            F.concat(F.lit("Q"), F.quarter("__d")).alias("next_quarter"),
+            F.concat(F.lit("Q"), F.quarter("__d").cast("string")).alias("next_quarter"),
         )
         for r in nxt.collect():
             q = int(r["quarter"][1])
