@@ -8,7 +8,8 @@ minimized, small lookups broadcast, and all hot-path expressions JVM-side.
 
 Layout
 ------
-- ``session``   : SparkSession factory (AQE on, Arrow on, sane shuffle sizing)
+- ``session``   : SparkSession factory (AQE on, Arrow on, sane shuffle sizing,
+                  no per-call call-site capture)
 - ``functions`` : scalar function library (fiscal calendar, date parsing,
                   null conventions, safe division, binned quantiles)
 - ``ops``       : relational core — joins, unions, reshape, window fills,

@@ -55,12 +55,13 @@ def clean_sentinels(c: Column | str, tokens: list[str] | None = None) -> Column:
 
 def to_numeric(c: Column | str) -> Column:
     """String -> double with NULL on failure (R ``as.numeric`` coercion
-    semantics, build_datasets_wait_times.R:200-202). Spark's non-ANSI cast
-    already yields NULL on bad input; sentinels are cleaned first.
+    semantics, build_datasets_wait_times.R:200-202).
     Commas-as-thousands-separators are stripped ("1,234" -> 1234).
+    ``try_cast`` already yields NULL for every ``NA_TOKENS`` entry,
+    padded or not, so no sentinel pass runs first: its 17-literal
+    ``isin`` costs ~90 py4j round trips per column.
     """
-    c = clean_sentinels(c)
-    return F.regexp_replace(c.cast("string"), ",", "").try_cast("double")
+    return F.regexp_replace(_col(c).cast("string"), ",", "").try_cast("double")
 
 
 def safe_div(num: Column | str, den: Column | str) -> Column:

@@ -40,7 +40,7 @@ import zipfile
 from typing import Sequence
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nhs_data_pipeline_spark.functions import (
@@ -368,13 +368,19 @@ def read_messy_excel_multi(
     return _to_spark(spark, parts, na_tokens)
 
 
-def with_filename_metadata(df: DataFrame) -> DataFrame:
-    """Derive (year, quarter, pathway) columns from the ``_source_file``
-    column the readers attach (S8 — scripts/build_datasets_main.py:62-92)
-    as native regexes."""
+def filename_metadata() -> dict[str, Column]:
+    """The (year, quarter, pathway) columns derived from the
+    ``_source_file`` column the readers attach (S8 —
+    scripts/build_datasets_main.py:62-92) as native regexes, keyed by
+    output name."""
     src = F.col("_source_file")
-    return (
-        df.withColumn("file_year", extract_year(src))
-        .withColumn("file_quarter", extract_quarter(src))
-        .withColumn("file_pathway", extract_pathway(src))
-    )
+    return {
+        "file_year": extract_year(src),
+        "file_quarter": extract_quarter(src),
+        "file_pathway": extract_pathway(src),
+    }
+
+
+def with_filename_metadata(df: DataFrame) -> DataFrame:
+    """``df`` with the ``filename_metadata`` columns added."""
+    return df.withColumns(filename_metadata())

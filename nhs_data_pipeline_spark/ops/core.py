@@ -192,15 +192,29 @@ def coalesce_columns(df: DataFrame, mapping: dict[str, Sequence[str]]) -> DataFr
     ``{'org_code': ['OrgID', 'Organisation Code']}``.
 
     J2 — pandas ``combine_first`` chain, ``consolidate_columns``
-    (scripts/build_datasets_main.py:165-196). A pure projection in Spark.
+    (scripts/build_datasets_main.py:165-196). A pure projection in Spark:
+    one ``select`` of ``coalesce_exprs``.
     """
-    out = df
+    exprs = coalesce_exprs({c: F.col(c) for c in df.columns}, mapping)
+    return df.select(*[e.alias(n) for n, e in exprs.items()])
+
+
+def coalesce_exprs(
+    exprs: dict[str, Column], mapping: dict[str, Sequence[str]]
+) -> dict[str, Column]:
+    """``coalesce_columns`` over an ordered ``{name: expression}``
+    projection: each target becomes the left-to-right coalesce of its
+    present sources, which are dropped; a target that already exists
+    keeps its position, a new one goes last."""
+    out = dict(exprs)
     for new, olds in mapping.items():
-        present = [c for c in olds if c in out.columns]
+        present = [c for c in olds if c in out]
         if not present:
             continue
-        out = out.withColumn(new, F.coalesce(*[F.col(c) for c in present]))
-        out = out.drop(*[c for c in present if c != new])
+        out[new] = F.coalesce(*[out[c] for c in present])
+        for c in present:
+            if c != new:
+                del out[c]
     return out
 
 

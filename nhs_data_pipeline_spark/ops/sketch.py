@@ -265,8 +265,9 @@ def grid_bin(v: Column, lo: Column, hi: Column, bins: int) -> Column:
     histogram uses (divergent hand-rolled copies were a review
     finding):
 
-    - NaN -> NULL (callers filter it out with the NULLs; silently
-      binning NaN into bin 0 corrupts quantiles),
+    - NULL and NaN -> NULL (callers filter them out; silently binning
+      NaN into bin 0, or NULL into the top bin through ``least``,
+      corrupts quantiles),
     - +/-inf and any-magnitude values clamp on the BIGINT floor
       result BEFORE the int cast — Spark's floor saturates at
       Long.MAX/MIN but a bare ANSI cast of that to int THROWS and
@@ -282,7 +283,7 @@ def grid_bin(v: Column, lo: Column, hi: Column, bins: int) -> Column:
         F.least(F.lit(bins - 1).cast("bigint"), raw),
     )
     return (
-        F.when(F.isnan(v), F.lit(None))
+        F.when(v.isNull() | F.isnan(v), F.lit(None))
         .when(hi == lo, F.lit(0))
         .otherwise(clamped.cast("int"))
     )

@@ -18,14 +18,15 @@ and the org-change adjustment composite (§2.10).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nhs_data_pipeline_spark.functions import to_numeric
-from nhs_data_pipeline_spark.io.readers import read_messy_csv, with_filename_metadata
-from nhs_data_pipeline_spark.ops.core import coalesce_columns
+from nhs_data_pipeline_spark.io.readers import filename_metadata, read_messy_csv
+from nhs_data_pipeline_spark.ops.core import coalesce_exprs
 from nhs_data_pipeline_spark.orgchange.adjust import adjust_org_changes
 
 
@@ -53,39 +54,45 @@ def run_series(spark: SparkSession, cfg: SeriesConfig) -> DataFrame:
     """Execute a series pipeline: messy ingest of every file -> harmonize
     -> clean -> (optional) org-change adjust. Per-file work runs on the
     driver (small raw files, SURVEY §4) and every file reaches Spark in
-    one transfer, so the rest is one plan with no union. Returns the
-    panel materialised by an eager ``localCheckpoint``: each sink (the
-    caller's choice) scans the computed rows, not the plan again.
+    one transfer. Harmonize and clean are composed as Column expressions
+    over the ingest frame and applied as one ``filter`` and one
+    ``select``, so the JVM analyses one clean stage, not a Dataset per
+    step. Returns the panel materialised by an eager ``localCheckpoint``:
+    each sink (the caller's choice) scans the computed rows, not the
+    plan again.
     """
     panel = read_messy_csv(
         spark, cfg.files, skip=cfg.skip, marker=cfg.marker, skip_markers=cfg.skip_markers
     )
     if panel is None:  # P12: every file matched the exclusion predicate
         raise ValueError(f"series {cfg.name}: every input file was skipped")
-    panel = with_filename_metadata(panel)
+    exprs = {c: F.col(c) for c in panel.columns} | filename_metadata()
     # Era-variant renames; columns landing on one name merge left to
     # right, as a per-file rename then union by name would.
-    targets: dict[str, list[str]] = {}
-    for c in panel.columns:
-        targets.setdefault(cfg.rename.get(c, c), []).append(c)
-    panel = panel.select(*[
-        (F.col(cs[0]) if len(cs) == 1 else F.coalesce(*cs)).alias(t)
-        for t, cs in targets.items()
-    ])
-    panel = coalesce_columns(panel, cfg.coalesce)
-    for c in cfg.require_cols:
-        panel = panel.filter(F.col(c).isNotNull())
-    if cfg.drop_name_values and cfg.name_col in panel.columns:
+    targets: dict[str, list[Column]] = {}
+    for c, e in exprs.items():
+        targets.setdefault(cfg.rename.get(c, c), []).append(e)
+    exprs = coalesce_exprs(
+        {t: es[0] if len(es) == 1 else F.coalesce(*es) for t, es in targets.items()},
+        cfg.coalesce,
+    )
+    missing = [c for c in cfg.require_cols if c not in exprs]
+    if missing:
+        raise ValueError(f"series {cfg.name}: required columns {missing} not found")
+    # Row filters test the harmonized values before numeric coercion.
+    keep = [exprs[c].isNotNull() for c in cfg.require_cols]
+    if cfg.drop_name_values and cfg.name_col in exprs:
         # NULL-name rows are KEPT: R's !(x %in% drop) keeps NA, while a
         # bare ~isin() is NULL for NULL input and filter() would
         # silently drop every row whose name cell was a sentinel.
-        nc = F.col(cfg.name_col)
-        panel = panel.filter(
-            nc.isNull() | ~nc.isin(list(cfg.drop_name_values))
-        )
-    panel = panel.withColumns(
-        {c: to_numeric(c) for c in cfg.numeric_cols if c in panel.columns}
-    )
+        nc = exprs[cfg.name_col]
+        keep.append(nc.isNull() | ~nc.isin(list(cfg.drop_name_values)))
+    for c in cfg.numeric_cols:
+        if c in exprs:
+            exprs[c] = to_numeric(exprs[c])
+    if keep:
+        panel = panel.filter(reduce(Column.__and__, keep))
+    panel = panel.select(*[e.alias(n) for n, e in exprs.items()])
     if cfg.org_lookup is not None:
         panel = adjust_org_changes(
             panel,

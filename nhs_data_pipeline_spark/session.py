@@ -15,6 +15,10 @@ One place to encode the engine's execution posture:
   rebuilds into micros. Pinned here, once per session, because it
   changes the schema parquet inference lands on and the query
   registry caches inferred schemas per file.
+- PySpark's DataFrame call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled``): it costs ~6 py4j
+  round trips per DataFrame or ``functions`` call and only feeds the
+  Python call-site text of Spark error messages.
 """
 
 from __future__ import annotations
@@ -81,6 +85,16 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
+        # Call-site capture off (measured): PySpark 4.1 wraps every
+        # DataFrame/Column/functions call in _with_origin, which sends
+        # getActiveSession, a conf read of
+        # spark.sql.stackTracesInDataFrameContext and a
+        # PySparkCurrentOrigin set/clear (with reflection lookups) to
+        # the JVM before the call itself — about half of the 1,885 py4j
+        # commands a perfbench panel build's run_series sent. The only loss
+        # is the Python call-site text in Spark error messages. PySpark
+        # caches the flag per process at its first read.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():
@@ -155,4 +169,6 @@ def cluster_conf(
         # see the local-builder comment: hold a composite query's full
         # generated-class set without unbounded metaspace growth
         "spark.sql.codegen.cache.maxEntries": "512",
+        # see the local-builder comment: no per-call call-site capture
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }

@@ -27,6 +27,18 @@ def test_to_numeric(spark):
     assert _one(spark, nf.to_numeric(F.col("v")), "-") is None
 
 
+def test_to_numeric_nulls_every_sentinel(spark):
+    """No sentinel pass runs first: every NA token, padded or not, must
+    still fail the cast to NULL, while real numbers parse."""
+    padded = [" NA ", "\tNA", " - ", "\u00a0NA", "NA\u00a0", " n/a", "* "]
+    cases = [(t, None) for t in nf.NA_TOKENS + padded] + [
+        (None, None), ("1,234", 1234.0), (" 12 ", 12.0),
+    ]
+    df = spark.createDataFrame(cases, "v string, want double")
+    got = df.select("v", "want", nf.to_numeric("v").alias("got")).collect()
+    assert [(r.v, r.got) for r in got] == [(r.v, r.want) for r in got]
+
+
 def test_safe_div(spark):
     df = spark.createDataFrame([(1.0, 0.0), (6.0, 3.0), (1.0, None)], ["n", "d"])
     out = [r.q for r in df.select(nf.safe_div("n", "d").alias("q")).collect()]

@@ -646,6 +646,7 @@ def test_cluster_conf_profile_is_consistent(spark):
     assert c["spark.sql.adaptive.enabled"] == "true"
     assert c["spark.sql.adaptive.skewJoin.enabled"] == "true"
     assert c["spark.sql.session.timeZone"] == "UTC"
+    assert c["spark.python.sql.dataFrameDebugging.enabled"] == "false"
     assert all(isinstance(v, str) for v in c.values())
     # at small targets the fleet-core floor dominates
     small = cluster_conf(target_tb=0.001, executors=10, cores_per_executor=8)

@@ -71,6 +71,88 @@ def _facilities_cfg(spark, tmp_path):
     )
 
 
+def test_harmonize_stage_literal(spark, tmp_path):
+    """run_series without an adjustment, pinned on two eras: column
+    order (an existing coalesce target keeps its place, a new one goes
+    last), a sentinel org code dropped by the required-column filter, a
+    NULL name kept, the England row dropped, numbers coerced."""
+    a = _write(tmp_path / "Theatres_Quarter_1_2012_13.csv", [
+        ["Supporting Facilities release", "", "", ""],
+        ["SHA", "OrgID", "Name", "Number of Operating Theatres"],
+        ["Q30", "OLD1", "OLD TRUST ONE", "4"],
+        ["Q30", "NA", "SENTINEL TRUST", "7"],
+        ["Q30", "ENG", "England (Including Independent Sector)", "3000"],
+        ["Q30", "RX5", "-", "2"],
+    ])
+    b = _write(tmp_path / "Theatres_Quarter_2_2013_14.csv", [
+        ["Region Code", "Organisation Code", "Organisation Name",
+         "Area Team Code", "Number of Operating Theatres"],
+        ["Y56", "NEW", "NEW TRUST", "A1", "1,234"],
+        ["Y56", "RX9", "FREE TRUST", "A1", " NA "],
+    ])
+    cfg = SeriesConfig(
+        name="literal",
+        files=[a, b],
+        marker="Operating Theatres",
+        rename={"orgid": "org_code", "name": "org_name",
+                "organisation_code": "org_code_b", "organisation_name": "org_name_b",
+                "number_of_operating_theatres": "nr_operating_theatres"},
+        coalesce={"org_code": ["org_code", "org_code_b"],
+                  "org_name": ["org_name", "org_name_b"],
+                  "region": ["sha", "region_code"]},
+        numeric_cols=["nr_operating_theatres"],
+        require_cols=["org_code"],
+        drop_name_values=["England (Including Independent Sector)"],
+    )
+    out = run_series(spark, cfg)
+    assert out.columns == [
+        "_row_idx", "_source_file", "org_code", "org_name",
+        "nr_operating_theatres", "area_team_code", "file_year",
+        "file_quarter", "file_pathway", "region",
+    ]
+    got = sorted(tuple(r) for r in out.drop("_source_file").collect())
+    assert got == [
+        (0, "NEW", "NEW TRUST", 1234.0, "A1", 2013, "Q2", None, "Y56"),
+        (0, "OLD1", "OLD TRUST ONE", 4.0, None, 2012, "Q1", None, "Q30"),
+        (1, "RX9", "FREE TRUST", None, "A1", 2013, "Q2", None, "Y56"),
+        (3, "RX5", None, 2.0, None, 2012, "Q1", None, "Q30"),
+    ]
+
+
+def test_run_series_round_trips(spark, tmp_path):
+    """Plan construction is the build's largest engine cost: count the
+    Python->JVM commands one adjusted two-era run_series sends. py4j's
+    garbage-collection deletes (``m``/``d``) land at random and are not
+    counted. The bound is half the 1,463 commands the same run sent with
+    PySpark's call-site capture on, a withColumn-chain clean stage and a
+    sentinel pass in to_numeric (now ~440)."""
+    from py4j.clientserver import ClientServerConnection
+
+    cfg = _facilities_cfg(spark, tmp_path)
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        run_series(spark, cfg)
+    finally:
+        ClientServerConnection.send_command = send
+    assert 0 < len(sent) <= 1463 // 2
+
+
+def test_sessions_skip_call_site_capture(spark):
+    """Call-site capture costs ~6 round trips per DataFrame API call;
+    every get_spark session has it off."""
+    from nhs_data_pipeline_spark.session import get_spark
+
+    assert get_spark().conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_supporting_facilities_slice(spark, tmp_path):
     out = run_series(spark, _facilities_cfg(spark, tmp_path))
     rows = {(r.org_code, r.file_year): r for r in out.collect()}

@@ -357,6 +357,20 @@ def test_grid_bin_survives_dirty_values(spark):
     assert got == [5, None, 9, 0, 9, 0, 9]
 
 
+def test_grid_bin_null_is_null(spark):
+    """A NULL value has no bin: ``least`` skips NULL arguments, so
+    without the guard it landed in the top bin."""
+    from nhs_data_pipeline_spark.ops.sketch import grid_bin
+
+    df = spark.createDataFrame([(None,), (9.5,)], "v double")
+    got = [
+        r.b for r in df.select(
+            grid_bin(F.col("v"), F.lit(0.0), F.lit(10.0), 10).alias("b")
+        ).collect()
+    ]
+    assert got == [None, 9]
+
+
 def test_grid_bin_rejects_bad_bins(spark):
     from nhs_data_pipeline_spark.ops.sketch import grid_bin
 
